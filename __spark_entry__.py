@@ -151,19 +151,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return A.a3_graph_bfs(_t(spark, sf, "orders"), _t(spark, sf, "lineitem"))
 
     def c12(spark, sf):
-        # default strategy (auto → delta-frontier iterative; the
-        # measured winner of tools/c12_ab.py, 1.92 vs 2.99 s median)
+        # the delta-frontier iterative loop (measured 1.92 vs 2.99 s
+        # median against a recursive-CTE form, 6-pass A/B at sf0.1)
         comments = comments_from_events(_t(spark, sf, "events"))
         out = propagate_threads(comments, domain_col=None, with_depth=True)
         return out.select("id", "thread", "depth")
 
     def c12c(spark, sf):
-        # the delta-frontier iterative fallback, pinned, so both
-        # fixpoint implementations stay oracle-verified
+        # the delta-frontier loop under its own oracle key
         comments = comments_from_events(_t(spark, sf, "events"))
-        out = propagate_threads(
-            comments, domain_col=None, with_depth=True, strategy="iterative"
-        )
+        out = propagate_threads(comments, domain_col=None, with_depth=True)
         return out.select("id", "thread", "depth")
 
     def c12b(spark, sf):
@@ -659,7 +656,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         cfg = CrawlConfig(FIXTURE_START_DOMAIN, follow_links=True,
                           sequential=True, politeness_sec=0)
         cat = Catalog(spark, tempfile.mkdtemp(prefix="entryepoch-"))
-        eng = CrawlEngine(spark, cat, cfg, docs, use_bloom=False)
+        eng = CrawlEngine(spark, cat, cfg, docs)
         eng.seed([FIXTURE_SEED])
         eng.run()
         return cat.read("urls_seen", URLS_SEEN).select(
@@ -686,7 +683,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         cfg = CrawlConfig(FIXTURE_START_DOMAIN, follow_links=True,
                           sequential=True, politeness_sec=0, lifo=True)
         cat = Catalog(spark, tempfile.mkdtemp(prefix="entrylifo-"))
-        eng = CrawlEngine(spark, cat, cfg, docs, use_bloom=False)
+        eng = CrawlEngine(spark, cat, cfg, docs)
         eng.seed([FIXTURE_SEED])
         eng.run()
         return cat.read("urls_seen", URLS_SEEN).select(
@@ -695,7 +692,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def crawl_epoch_wide(spark, sf):
         """Wide-epoch (scale-path) crawl of the same fixture site:
-        per-host-budgeted batches, bloom seen-filter, every broadcast
+        per-host-budgeted batches, exact seen anti-join, every broadcast
         hint active. Fetch order is engine-defined, so the oracle
         checks the reference-equal final seen SET (url, status) — the
         north rule's seen-set gate."""
@@ -712,7 +709,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                           sequential=False, per_host_budget=4,
                           politeness_sec=0)
         cat = Catalog(spark, tempfile.mkdtemp(prefix="entrywide-"))
-        eng = CrawlEngine(spark, cat, cfg, docs, expected_urls=4096)
+        eng = CrawlEngine(spark, cat, cfg, docs)
         eng.seed([FIXTURE_SEED])
         eng.run()
         return cat.read("urls_seen", URLS_SEEN).select("url", "status")
@@ -806,8 +803,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         cat_s = Catalog(spark, _os.path.join(root, "st1-cat-stream"))
         cat_b = Catalog(spark, _os.path.join(root, "st1-cat-batch"))
         eng = CrawlEngine(
-            spark, cat_s, CrawlConfig(start_domain=""), documents=None,
-            use_bloom=False,
+            spark, cat_s, CrawlConfig(start_domain=""), documents=None
         )
 
         def sink1(batch_df, batch_id):

@@ -62,7 +62,7 @@ def run_crawl(
     cat = Catalog(
         spark, tempfile.mkdtemp(prefix="bench-crawl-", dir=catalog_root)
     )
-    eng = CrawlEngine(spark, cat, cfg, docs, expected_urls=max(1 << 18, n_docs * 2))
+    eng = CrawlEngine(spark, cat, cfg, docs)
     # distributed seeding: half the corpus, hash-spread across hosts
     eng.seed_frame(
         docs.select(F.col("doc_id").alias("target")).filter(

@@ -152,7 +152,6 @@ class CrawlConfig:
     expire_keep_snapshots: int | None = None
     sequential: bool = False  # 1 URL/epoch: bit-exact reference ordering
     respect_robots: bool = False  # north-rule addition (absent in reference)
-    bloom_bits_per_key: int = 16  # seen-set bloom sizing
     # logical→physical table-name overrides (≙ --items-table /
     # --users-table / --voting-table, app/Main.hs:117-131); e.g.
     # {"comments": "items", "votes": "comment_voting"}

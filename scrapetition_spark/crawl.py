@@ -12,7 +12,8 @@ driver loop over set-oriented Spark jobs. One epoch =
     → dispatcher gating + metadata enrichment (C8, C11)
     → MERGE sinks for items/urls/edges (S6-S8)
     → frontier merge with FIFO/LIFO union semantics (C3/C4)
-    → seen-set append + bloom rebuild (C2)
+    → seen-set append (C2), plus the bloom sidecar OR-merge when the
+      partitioned prefilter is on
     → metrics + snapshot commit (exact resume)
 
 ``cfg.sequential=True`` fetches exactly one URL per epoch, which
@@ -45,7 +46,6 @@ from scrapetition_spark.plans.frontier import (
 )
 from scrapetition_spark.plans.seen import (
     BLOOM_SIDECAR,
-    BloomFilter,
     PartitionedBloom,
     PartitionedBloomView,
 )
@@ -92,9 +92,8 @@ class CrawlEngine:
         cfg: CrawlConfig,
         documents: DataFrame,
         robots: DataFrame | None = None,
-        use_bloom: bool = True,
         expected_urls: int = 1 << 16,
-        bloom_mode: str = "auto",
+        bloom_mode: str | None = None,
     ):
         self.spark = spark
         if cfg.table_names:
@@ -105,69 +104,61 @@ class CrawlEngine:
         self.cfg = cfg
         self.documents = documents
         self.robots = robots
-        # "global": one driver-held bitset, broadcast for probes — the
-        # small path. "partitioned": per-host-bucket sidecar stored as
-        # a catalog table, OR-merged per epoch and probed bucket-local
-        # (north rule; the 10^10-key path — a single bitset would be
-        # ~20 GB on the driver, see plans/seen.py). "auto" (default)
-        # picks by the bitset's driver/broadcast footprint: global
-        # while expected_urls*bits_per_key/8 ≤ 64 MiB (≤32M keys at
-        # 16 bpk), partitioned above — so the scale path engages by
-        # declaring the scale, with no code change (VERDICT r03 #2:
-        # a fixed "global" default silently dies at 10^10 keys).
-        if bloom_mode not in ("auto", "global", "partitioned"):
+        # Seen filter. Default (None): the exact, bucket-pruned
+        # anti-join against urls_seen. "partitioned": the same
+        # anti-join behind a per-host-bucket bloom sidecar stored as a
+        # catalog table, OR-merged per epoch and probed bucket-local
+        # (north rule; the 10^10-key path — see plans/seen.py).
+        if bloom_mode not in (None, "partitioned"):
             raise ValueError(f"unknown bloom_mode {bloom_mode!r}")
-        if bloom_mode == "auto":
-            bitset_bytes = expected_urls * cfg.bloom_bits_per_key // 8
-            bloom_mode = "global" if bitset_bytes <= (64 << 20) else "partitioned"
-        self.bloom_mode = bloom_mode if use_bloom else None
-        self.bloom: BloomFilter | None = (
-            BloomFilter.empty(expected_urls, cfg.bloom_bits_per_key)
-            if use_bloom and bloom_mode == "global"
-            else None
-        )
         self.pbloom: PartitionedBloom | None = (
-            PartitionedBloom(
-                expected_urls, cfg.bloom_bits_per_key, cfg.n_host_buckets
-            )
-            if use_bloom and bloom_mode == "partitioned"
+            PartitionedBloom(expected_urls, n_buckets=cfg.n_host_buckets)
+            if bloom_mode == "partitioned"
             else None
         )
         self.fetch_seq_base = 0
-        self._sidecar_validated = False
+        self._sidecar_checked = False
         # first epoch of THIS run: visit_again (-a) ignores seen rows
         # from epochs before it (≙ runScrapers urls [] — Main.hs:246
         # starts the run's seen set empty; within-run dedup stays)
         self.run_start_epoch = 0
 
-    def _seen_filter(self):
-        if self.bloom is not None:
-            return self.bloom
-        if self.pbloom is not None and self.cat.exists("bloom_sidecar"):
-            sidecar = self.cat.read("bloom_sidecar", BLOOM_SIDECAR)
-            if not self._sidecar_validated:
-                # a sidecar persisted under different (m_bits, k,
-                # n_buckets) — engine reconfigured between runs, or the
-                # pre-parameter layout — would probe wrong and yield
-                # silent false negatives: rebuild it from the exact
-                # urls_seen truth instead of trusting the stored bits
-                if not self.pbloom.matches(sidecar):
-                    seen_b = self.cat.read("urls_seen", URLS_SEEN).select(
-                        "url",
-                        host_bucket(
-                            F.col("host"), self.cfg.n_host_buckets
-                        ).alias("host_bucket"),
-                    )
-                    # partitioned write so the per-epoch scoped commit
-                    # never has to pay a consolidating rewrite after a
-                    # rebuild
-                    self.cat.overwrite_partitions(
-                        "bloom_sidecar", self.pbloom.build(seen_b), "bucket", None
-                    )
-                    sidecar = self.cat.read("bloom_sidecar", BLOOM_SIDECAR)
-                self._sidecar_validated = True
-            return PartitionedBloomView(self.pbloom, sidecar)
-        return None
+    def _recover_sidecar(self) -> None:
+        """Once per engine: make the stored sidecar agree with the
+        exact urls_seen truth before anything probes or merges it. A
+        sidecar that is absent while urls_seen has rows (dropped, or
+        the crash window between the two writes), stored under a
+        different (m_bits, k, n_buckets) (engine reconfigured between
+        runs — probing it would yield silent false negatives), or held
+        in plain files (rows of unknown buckets, which a scoped commit
+        would drop) is rebuilt from urls_seen in the partitioned
+        layout, so every later merge into it is a scoped commit."""
+        if self.cat.exists("bloom_sidecar"):
+            has_plain, _ = self.cat.partition_state("bloom_sidecar")
+            stale = has_plain or not self.pbloom.matches(
+                self.cat.read("bloom_sidecar", BLOOM_SIDECAR)
+            )
+        else:
+            stale = self.cat.exists("urls_seen")
+        if stale:
+            seen_b = self.cat.read("urls_seen", URLS_SEEN).select(
+                "url", self._seen_bucket_expr().alias("host_bucket")
+            )
+            self.cat.overwrite_partitions(
+                "bloom_sidecar", self.pbloom.build(seen_b), "bucket", None
+            )
+
+    def _seen_filter(self) -> PartitionedBloomView | None:
+        if self.pbloom is None:
+            return None
+        if not self._sidecar_checked:
+            self._recover_sidecar()
+            self._sidecar_checked = True
+        if not self.cat.exists("bloom_sidecar"):
+            return None
+        return PartitionedBloomView(
+            self.pbloom, self.cat.read("bloom_sidecar", BLOOM_SIDECAR)
+        )
 
     # ------------------------------------------------------------------ util
 
@@ -590,55 +581,34 @@ class CrawlEngine:
         # its own table; Spark schedules the jobs in parallel). The
         # urls-table rewrite (S6 inserts + S9 seen-update + C3 merge —
         # one MERGE INTO with two WHEN clauses on Iceberg), the
-        # seen-set append (C2) and the bloom fold-in join the pool.
+        # seen-set append (C2) and the bloom sidecar fold-in join the pool.
         from concurrent.futures import ThreadPoolExecutor
 
         def _bloom_task():
-            if self.bloom is not None:
-                self.bloom = self.bloom.build_from(due.select("url"))
-            elif self.pbloom is not None:
-                # epoch delta folded map-side, OR-merged bucket-local;
-                # the driver never materializes any bitset. The commit
-                # is PARTITION-SCOPED (≙ Iceberg dynamic partition
-                # overwrite): only buckets with due URLs this epoch are
-                # OR-merged and rewritten; every other bucket's bitset
-                # file is carried forward verbatim — per-epoch sidecar
-                # cost is O(touched buckets), never O(sidecar). At
-                # 10^10 keys the sidecar is ~20 GB; a whole-table
-                # read+rewrite per epoch (the r03 shape) would dwarf
-                # sparse epochs on its own.
-                delta = self.pbloom.build(due.select("url", "host_bucket"))
-                # due is checkpointed; distinct bucket ids are bounded
-                # metadata (≤ n_host_buckets rows on the driver)
-                touched = sorted(
-                    r["host_bucket"]
-                    for r in due.select("host_bucket").distinct().collect()
-                )
-                has_plain, parts = self.cat.partition_state("bloom_sidecar")
-                if self.cat.exists("bloom_sidecar") and (has_plain or parts):
-                    if has_plain:
-                        # legacy plain layout (pre-scoped writer, or a
-                        # rebuild): one consolidating partitioned
-                        # rewrite, then every epoch is scoped
-                        merged = self.pbloom.or_merge(
-                            self.cat.read("bloom_sidecar", BLOOM_SIDECAR)
-                            .unionByName(delta)
-                        )
-                        self.cat.overwrite_partitions(
-                            "bloom_sidecar", merged, "bucket", None
-                        )
-                    else:
-                        old = self.cat.read_buckets(
-                            "bloom_sidecar", BLOOM_SIDECAR, touched
-                        )
-                        merged = self.pbloom.or_merge(old.unionByName(delta))
-                        self.cat.overwrite_partitions(
-                            "bloom_sidecar", merged, "bucket", touched
-                        )
-                else:
-                    self.cat.overwrite_partitions(
-                        "bloom_sidecar", delta, "bucket", None
-                    )
+            # epoch delta folded map-side, OR-merged bucket-local; the
+            # driver never materializes any bitset. The commit is
+            # PARTITION-SCOPED (≙ Iceberg dynamic partition overwrite):
+            # only buckets with due URLs this epoch are OR-merged and
+            # rewritten; every other bucket's bitset file is carried
+            # forward verbatim — per-epoch sidecar cost is O(touched
+            # buckets), never O(sidecar). At 10^10 keys the sidecar is
+            # ~20 GB; a whole-table read+rewrite per epoch would dwarf
+            # sparse epochs on its own. _recover_sidecar already left
+            # any existing sidecar partitioned under this engine's
+            # parameters.
+            delta = self.pbloom.build(due.select("url", "host_bucket"))
+            if not self.cat.exists("bloom_sidecar"):
+                self.cat.overwrite_partitions("bloom_sidecar", delta, "bucket", None)
+                return
+            # due is checkpointed; distinct bucket ids are bounded
+            # metadata (≤ n_host_buckets rows on the driver)
+            touched = sorted(
+                r["host_bucket"]
+                for r in due.select("host_bucket").distinct().collect()
+            )
+            old = self.cat.read_buckets("bloom_sidecar", BLOOM_SIDECAR, touched)
+            merged = self.pbloom.or_merge(old.unionByName(delta))
+            self.cat.overwrite_partitions("bloom_sidecar", merged, "bucket", touched)
 
         def _seen_and_bucket_metrics():
             # one worker: seen append first, then the per-partition
@@ -704,7 +674,8 @@ class CrawlEngine:
             )
             snap_fut = pool.submit(_seen_and_bucket_metrics)
             futs.append(snap_fut)
-            futs.append(pool.submit(_bloom_task))
+            if self.pbloom is not None:
+                futs.append(pool.submit(_bloom_task))
             for f in futs:
                 f.result()  # propagate failures
         mark("sinks")
@@ -928,25 +899,6 @@ class CrawlEngine:
             epoch = int(prev.agg(F.max("epoch")).collect()[0][0]) + 1
             self.run_start_epoch = epoch
             self.fetch_seq_base = self.cat.read("urls_seen", URLS_SEEN).count()
-            if self.cfg.visit_again:
-                # -a: run-local seen starts empty — no bloom prefill
-                # from prior epochs (the sidecar, if any, only routes
-                # probes into the epoch-filtered exact anti-join)
-                pass
-            elif self.bloom is not None:
-                self.bloom = self.bloom.build_from(
-                    self.cat.read("urls_seen", URLS_SEEN).select("url")
-                )
-            elif self.pbloom is not None and not self.cat.exists("bloom_sidecar"):
-                seen_b = self.cat.read("urls_seen", URLS_SEEN).select(
-                    "url",
-                    host_bucket(F.col("host"), self.cfg.n_host_buckets).alias(
-                        "host_bucket"
-                    ),
-                )
-                self.cat.overwrite_partitions(
-                    "bloom_sidecar", self.pbloom.build(seen_b), "bucket", None
-                )
         while True:
             t0 = time.time()
             st = self.run_epoch(epoch)

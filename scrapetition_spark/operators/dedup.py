@@ -474,7 +474,7 @@ def neardup_clusters(pairs: DataFrame, max_iterations: int = 50) -> DataFrame:
     all-pairs work, labels monotonically decrease. One count() action
     per round is the progress guard; ``localCheckpoint`` cuts lineage
     so plans stay O(1) deep (same discipline as
-    operators/threads.py:_propagate_iterative)."""
+    operators/threads.py:propagate_threads)."""
     if max_iterations < 1:
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
     edges = (

@@ -15,7 +15,7 @@ operator, expressed Spark-first as a fixed-iteration power method:
   are the node count (one scalar, bounded metadata) and the per-
   iteration ``localCheckpoint`` that truncates lineage so the plan
   stays O(1) deep instead of growing by three joins per round (same
-  discipline as ``threads._propagate_iterative``). On a real cluster
+  discipline as ``threads.propagate_threads``). On a real cluster
   the checkpoint becomes ``persist(DISK_ONLY)`` + unpersist of the
   previous iteration; the loop shape is unchanged.
 - **Deterministic across engines.** Iterations are a fixed count (no

@@ -56,54 +56,24 @@ def propagate_threads(
     order_col: str | None = None,
     with_depth: bool = False,
     max_iterations: int = 1000,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Assign ``thread_col`` by fixpoint parent-chasing; returns the
     input frame with ``thread`` filled (orphans stay NULL) and
     optionally ``depth`` (root = 0, ≙ threadview.sql height).
 
-    ``strategy='auto'`` uses the delta-frontier iterative loop — a
-    same-session alternating A/B at sf0.1/local[32] (tools/c12_ab.py,
-    6 passes) measured it at median 1.92 s vs 2.99 s for Spark 4's
-    recursive-CTE plan, every pass agreeing, so the measured winner is
-    the default (VERDICT r02 next-1). ``'recursive'`` forces the
-    Catalyst UnionLoop CTE (no driver-side iteration — kept as the
-    strategy of choice if a future Spark narrows the gap, and as the
-    oracle-parity twin ``c12b``); ``'iterative'`` forces the loop
-    explicitly."""
-    keys = ([domain_col] if domain_col else []) + [id_col]
-    cur = collapse_duplicates(df, keys, order_col)
-    if strategy not in ("auto", "iterative", "recursive"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    use_recursive = strategy == "recursive"
-    if use_recursive:
-        out = _propagate_recursive_general(
-            cur, df.columns, id_col, parent_col, thread_col, domain_col
-        )
-        return out if with_depth else out.drop("depth")
-    return _propagate_iterative(
-        cur, df.columns, id_col, parent_col, thread_col, domain_col,
-        with_depth, max_iterations,
-    )
-
-
-def _propagate_iterative(
-    cur: DataFrame,
-    out_cols: list[str],
-    id_col: str,
-    parent_col: str,
-    thread_col: str,
-    domain_col: str | None,
-    with_depth: bool,
-    max_iterations: int,
-) -> DataFrame:
-    """Delta-frontier fixpoint: each round joins the (shrinking)
+    Delta-frontier fixpoint: each round joins the (shrinking)
     unresolved remainder against ONLY the rows resolved in the
     previous round — never rewrites the full table (the O(n·depth)
     shape VERDICT r01 flagged). Resolved rows accumulate as appended
     deltas, unioned once at the end; one count() action per round
-    (the progress guard, Utils.hs:99-105)."""
+    (the progress guard, Utils.hs:99-105). A same-session alternating
+    A/B at sf0.1/local[32] (6 passes) measured this loop at median
+    1.92 s vs 2.99 s for Spark 4's recursive-CTE plan of the same
+    semantics. The view form (no duplicate collapse) is
+    ``propagate_threads_recursive``."""
     keys = ([domain_col] if domain_col else []) + [id_col]
+    cur = collapse_duplicates(df, keys, order_col)
+    out_cols = df.columns
 
     # thread starters (Utils.hs:109): pre-assigned threads kept,
     # roots get thread := id; both at depth 0.
@@ -177,51 +147,6 @@ def _propagate_iterative(
     if with_depth:
         return out.withColumnRenamed("__depth", "depth")
     return out.drop("__depth")
-
-
-def _propagate_recursive_general(
-    cur: DataFrame,
-    out_cols: list[str],
-    id_col: str,
-    parent_col: str,
-    thread_col: str,
-    domain_col: str | None,
-) -> DataFrame:
-    """Recursive-CTE twin of the iterative loop (same semantics incl.
-    pre-assigned threads, domains and NULL-thread orphans); Catalyst
-    plans the fixpoint (UnionLoop), nothing materializes per round."""
-    import uuid
-
-    spark = cur.sparkSession
-    view = f"__threads_in_{uuid.uuid4().hex[:12]}"
-    cur.createOrReplaceTempView(view)
-    dom_sel = f", c.{domain_col}" if domain_col else ""
-    dom_join = f" AND c.{domain_col} <=> t.__dom" if domain_col else ""
-    dom_out = f" AND c.{domain_col} <=> t.__dom" if domain_col else ""
-    dom_col_decl = ", __dom" if domain_col else ""
-    other = ", ".join(f"c.{c}" for c in out_cols if c != thread_col)
-    try:
-        out = spark.sql(
-            f"""
-            WITH RECURSIVE t (__id, thread, depth{dom_col_decl}) AS (
-              SELECT {id_col}, coalesce({thread_col}, {id_col}), 0{dom_sel.replace('c.', '')}
-              FROM {view}
-              WHERE {thread_col} IS NOT NULL OR {parent_col} IS NULL
-              UNION ALL
-              SELECT c.{id_col}, t.thread, t.depth + 1{dom_sel}
-              FROM {view} c JOIN t ON c.{parent_col} = t.__id{dom_join}
-              WHERE c.{thread_col} IS NULL AND c.{parent_col} IS NOT NULL
-            )
-            SELECT {other}, t.thread AS {thread_col},
-                   CAST(t.depth AS INT) AS depth
-            FROM {view} c LEFT JOIN t ON c.{id_col} = t.__id{dom_out}
-            """
-        )
-        # force analysis before the view goes away
-        out.schema
-        return out
-    finally:
-        spark.catalog.dropTempView(view)
 
 
 def subthread(

@@ -8,7 +8,8 @@ set-oriented plans over the ``urls`` table:
 - C3 FIFO/LIFO merge with ``Data.List.union`` dedup semantics
 - C4 deterministic discovery order via the total lineage key
   ``(discovery_epoch, source_fetch_seq, dispatcher_idx, pos)``
-- C5 ``\\\\ seen`` → bloom-prefiltered anti-join (plans/seen.py)
+- C5 ``\\\\ seen`` → exact anti-join against ``urls_seen``, optionally
+  behind the partitioned bloom prefilter (plans/seen.py)
 - C7 cross-domain gate, C6 follow gate
 - C9 politeness: per-host fetch budget per epoch via a window over
   host-partitioned rows (the reference sleeps 2 s globally,
@@ -36,7 +37,7 @@ from pyspark.sql import functions as F
 
 from scrapetition_spark.config import CrawlConfig
 from scrapetition_spark.functions.urls import url_domain
-from scrapetition_spark.plans.seen import BloomFilter, unseen
+from scrapetition_spark.plans.seen import PartitionedBloomView, unseen
 
 LINEAGE_COLS = ["discovery_epoch", "source_fetch_seq", "dispatcher_idx", "pos"]
 
@@ -75,7 +76,7 @@ def candidate_predicate(cfg: CrawlConfig) -> F.Column:
 def plan_due(
     urls: DataFrame,
     seen: DataFrame,
-    bloom: BloomFilter | None,
+    bloom: PartitionedBloomView | None,
     cfg: CrawlConfig,
     fetch_seq_base: int,
     robots: DataFrame | None = None,

@@ -1,4 +1,4 @@
-"""Partitioned bloom seen-filter (north rule; SURVEY.md §4.1).
+"""Bloom seen-filters (north rule; SURVEY.md §4.1).
 
 The reference keeps the seen set as an in-memory Haskell list probed
 with ``elem`` (O(n) per probe, O(n²) per crawl —
@@ -8,14 +8,18 @@ URLs that is impossible; the scalable design is:
 1. an append-only ``urls_seen`` table (exact truth, partitioned by
    host bucket on a real deployment);
 2. a bloom sidecar built *distributed*: each partition folds its
-   ``xxhash64(url)`` values into a local bitset inside a vectorized
-   Arrow kernel (``mapInPandas``), the per-partition bitsets are
-   OR-merged, and the merged filter is broadcast for the next epoch;
-3. probes are vectorized bit-tests; bloom *negatives* are definitely
-   unseen (no join needed — the common case for a growing crawl),
-   bloom *positives* are verified exactly with a ``left_anti`` join
-   against ``urls_seen`` so false positives can never drop a URL
-   (SURVEY.md §7.3 exactness requirement).
+   ``xxhash64(url)`` values into local per-host-bucket bitsets inside
+   a vectorized Arrow kernel (``mapInPandas``), and the bitsets are
+   OR-merged per bucket (``PartitionedBloom``);
+3. probes are vectorized bit-tests, bucket-local; bloom *negatives*
+   are definitely unseen (no join needed — the common case for a
+   growing crawl), bloom *positives* are verified exactly with a
+   ``left_anti`` join against ``urls_seen`` so false positives can
+   never drop a URL (SURVEY.md §7.3 exactness requirement).
+
+``BloomFilter`` is the single driver-merged bitset with a broadcast
+probe: the building block the partitioned sidecar probes with, and a
+standalone filter for small key sets (``unseen`` accepts either).
 
 All hashing is JVM-side ``xxhash64``; Python only does numpy bit
 math on int64 arrays (no per-row Python). K hash functions derive
@@ -73,48 +77,41 @@ class BloomFilter:
         m_bits, k = _plan_params(expected_keys, bits_per_key)
         return cls(np.zeros(m_bits // 8, dtype=np.uint8), m_bits, k)
 
-    def union(self, other: "BloomFilter") -> "BloomFilter":
-        assert self.m_bits == other.m_bits and self.k == other.k
-        return BloomFilter(
-            np.bitwise_or(self.bits, other.bits),
-            self.m_bits,
-            self.k,
-            self.n_keys + other.n_keys,
-        )
-
     # ---- distributed build -------------------------------------------------
 
     def build_from(self, df: DataFrame, url_col: str = "url") -> "BloomFilter":
         """Fold df[url_col] into a new filter. Per-partition bitsets
         are built in an Arrow kernel and OR-merged on the driver
-        (bitset size is the broadcast budget: m/8 bytes)."""
+        (bitset size is the broadcast budget: m/8 bytes); each fold
+        also reports its row count, summed into ``n_keys``."""
         m_bits, k = self.m_bits, self.k
         # constant fold-fanout: one bitset per fold partition crosses
         # the driver regardless of cluster width (at 32+ cores the
         # per-partition bitsets would otherwise dominate epoch cost)
         hashed = df.select(F.xxhash64(F.col(url_col)).alias(_HASH_COL)).coalesce(8)
-        out_schema = StructType([StructField("bits", BinaryType())])
+        out_schema = StructType(
+            [StructField("bits", BinaryType()), StructField("n", LongType())]
+        )
 
         def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             local = np.zeros(m_bits // 8, dtype=np.uint8)
-            any_rows = False
+            n_rows = 0
             for b in batches:
                 if len(b) == 0:
                     continue
-                any_rows = True
+                n_rows += len(b)
                 h = b[_HASH_COL].to_numpy(dtype=np.int64)
                 for pos in _positions(h, m_bits, k):
                     np.bitwise_or.at(local, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-            if any_rows:
-                yield pd.DataFrame({"bits": [local.tobytes()]})
+            if n_rows:
+                yield pd.DataFrame({"bits": [local.tobytes()], "n": [n_rows]})
 
-        parts = hashed.mapInPandas(fold, out_schema).collect()
         merged = self.bits.copy()
-        n = 0
-        for row in parts:
+        n_keys = self.n_keys
+        for row in hashed.mapInPandas(fold, out_schema).collect():
             merged |= np.frombuffer(row["bits"], dtype=np.uint8)
-            n += 1
-        return BloomFilter(merged, m_bits, k, self.n_keys)
+            n_keys += row["n"]
+        return BloomFilter(merged, m_bits, k, n_keys)
 
     # ---- vectorized probe ---------------------------------------------------
 
@@ -145,8 +142,6 @@ class BloomFilter:
                 b["__maybe_seen"] = bf.contains(h)
                 yield b
 
-        from pyspark.sql.types import BooleanType
-
         out = StructType(out_schema.fields + [StructField("__maybe_seen", BooleanType())])
         return hashed.mapInPandas(probe, out)
 
@@ -158,7 +153,7 @@ class BloomFilter:
 # catalog table of (bucket, bits, n_keys) rows; at 10^10 keys × 16
 # bits/key the total is ~20 GB — un-broadcastable as one bitset (the
 # r01 global-bitset design), but fine as 256+ bucket rows living on
-# executors. The global BloomFilter above remains the small path.
+# executors. Probing reuses BloomFilter.contains on one bucket's bits.
 
 BLOOM_SIDECAR = StructType(
     [
@@ -314,8 +309,8 @@ class PartitionedBloom:
 
 @dataclass
 class PartitionedBloomView:
-    """A probe-ready handle: sidecar DataFrame + its parameters.
-    plan_due/unseen accept this in place of the global BloomFilter."""
+    """A probe-ready handle: sidecar DataFrame + its parameters, as
+    plan_due/unseen take it."""
 
     pb: PartitionedBloom
     sidecar: DataFrame

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import tempfile
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -64,7 +65,7 @@ def test_sequential_fifo_exact_order(spark, site, docs):
     cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=True,
                       politeness_sec=0)
     sim = simulate(site, [SEED], cfg)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run()
     assert _trace(cat) == sim.trace
@@ -77,7 +78,7 @@ def test_sequential_lifo_exact_order(spark, site, docs):
     cfg = CrawlConfig("www.zeit.de", follow_links=True, lifo=True,
                       sequential=True, politeness_sec=0)
     sim = simulate(site, [SEED], cfg)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run()
     assert _trace(cat) == sim.trace
@@ -92,7 +93,7 @@ def test_sequential_cross_domain_prefix(spark, site, docs):
     cfg = CrawlConfig("www.zeit.de", follow_links=True, cross_domain=True,
                       sequential=True, politeness_sec=0)
     sim = simulate(site, [SEED], cfg)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run(max_epochs=7)
     assert _trace(cat) == sim.trace[:7]
@@ -105,7 +106,7 @@ def test_no_follow_still_inserts(spark, site, docs):
     cfg = CrawlConfig("www.zeit.de", follow_links=False, sequential=True,
                       politeness_sec=0)
     sim = simulate(site, [SEED], cfg)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run()
     assert _trace(cat) == sim.trace == [SEED]
@@ -121,7 +122,7 @@ def test_all_links_dispatcher_hygiene(spark, site, docs):
                       sequential=True, politeness_sec=0,
                       dispatchers=ALL_LINKS_DISPATCHERS)
     sim = simulate(site, [SEED], cfg)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run()
     assert _trace(cat) == sim.trace
@@ -138,7 +139,7 @@ def test_wide_epochs_same_final_state(spark, site, docs):
     sim = simulate(site, [SEED], cfg_seq)
     cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=False,
                       politeness_sec=0, per_host_budget=4, max_urls_per_epoch=100)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=True, expected_urls=4096)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     stats = eng.run()
     assert len(stats) < len(sim.trace)  # actually batched
@@ -154,11 +155,11 @@ def test_resume_idempotent(spark, site, docs):
     cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=True,
                       politeness_sec=0)
     sim = simulate(site, [SEED], cfg)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run(max_epochs=3)
     # fresh engine = fresh driver process; state only from the catalog
-    eng2 = CrawlEngine(spark, cat, cfg, docs, use_bloom=False)
+    eng2 = CrawlEngine(spark, cat, cfg, docs)
     eng2.run()
     assert _trace(cat) == sim.trace
     assert _urlset(cat) == set(sim.inserted_urls)
@@ -173,6 +174,12 @@ def test_bloom_exactness(spark):
     cand = spark.range(n).select(F.concat(F.lit("u"), "id").alias("url"))
     seen = spark.range(0, n, 2).select(F.concat(F.lit("u"), "id").alias("url"))
     bloom = BloomFilter.empty(n, bits_per_key=8).build_from(seen)
+    # the fold counts its keys, so unseen() really probes the filter
+    assert bloom.n_keys == n // 2
+    h = np.array(
+        [r[0] for r in seen.select(F.xxhash64("url")).collect()], dtype=np.int64
+    )
+    assert bloom.contains(h).all()  # no false negatives
     got = {r["url"] for r in unseen(cand, seen, bloom).collect()}
     want = {f"u{i}" for i in range(1, n, 2)}
     assert got == want
@@ -190,7 +197,7 @@ def test_robots_gating(spark, site, docs):
         [("www.zeit.de", "/kultur/", 0)],
         ["host", "path_prefix", "allow"],
     )
-    eng, cat = _engine(spark, docs, cfg, robots=robots, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg, robots=robots)
     eng.seed([SEED])
     eng.run()
     trace = _trace(cat)
@@ -246,7 +253,7 @@ def test_salted_due_plan_equivalence(spark, site, docs):
 
     cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=False,
                       politeness_sec=0, per_host_budget=2)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run(max_epochs=2)  # populate a non-trivial frontier
 
@@ -285,7 +292,7 @@ def test_crawl_then_answer_and_cooccurrence(spark, site, docs):
     cfg = CrawlConfig("www.zeit.de", follow_links=True, politeness_sec=0,
                       per_host_budget=4)
     sim = simulate(site, [SEED], cfg)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=True, expected_urls=4096)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run()
 
@@ -346,7 +353,7 @@ def test_crawl_then_pagerank(spark, site, docs):
     cfg = CrawlConfig("www.zeit.de", follow_links=True, politeness_sec=0,
                       per_host_budget=4)
     sim = simulate(site, [SEED], cfg)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=True, expected_urls=4096)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run()
 

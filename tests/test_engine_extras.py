@@ -30,7 +30,7 @@ def test_robots_deny(spark):
                       politeness_sec=0, per_host_budget=8,
                       respect_robots=True)
     cat = Catalog(spark, tempfile.mkdtemp(prefix="robots-"))
-    eng = CrawlEngine(spark, cat, cfg, docs, robots=robots, use_bloom=False)
+    eng = CrawlEngine(spark, cat, cfg, docs, robots=robots)
     eng.seed([SEED])
     eng.run(max_epochs=8)
     fetched = {r["url"] for r in cat.read("urls_seen", URLS_SEEN).collect()}
@@ -55,7 +55,7 @@ def test_encoding_sniff_recorded(spark):
     cfg = CrawlConfig("www.zeit.de", follow_links=False, sequential=True,
                       politeness_sec=0)
     cat = Catalog(spark, tempfile.mkdtemp(prefix="enc-"))
-    eng = CrawlEngine(spark, cat, cfg, docs, use_bloom=False)
+    eng = CrawlEngine(spark, cat, cfg, docs)
     eng.seed([url])
     eng.run()
     row = cat.read("urls_seen", URLS_SEEN).collect()[0]
@@ -141,7 +141,7 @@ def test_crawl_urls_commit_partition_scoped(spark):
     cfg = CrawlConfig("", follow_links=False, cross_domain=True,
                       sequential=True, politeness_sec=0)
     cat = Catalog(spark, tempfile.mkdtemp(prefix="partcrawl-"))
-    eng = CrawlEngine(spark, cat, cfg, docs, use_bloom=False)
+    eng = CrawlEngine(spark, cat, cfg, docs)
     eng.seed(list(pages))
     eng.run()
 
@@ -335,7 +335,7 @@ def test_per_bucket_metrics(spark):
     cfg = CrawlConfig("www.zeit.de", follow_links=True, politeness_sec=0,
                       per_host_budget=4)
     cat = Catalog(spark, tempfile.mkdtemp(prefix="bucketmetrics-"))
-    eng = CrawlEngine(spark, cat, cfg, docs, use_bloom=False)
+    eng = CrawlEngine(spark, cat, cfg, docs)
     eng.seed(["https://www.zeit.de/politik/2020-01/art-a"])
     stats = eng.run(max_epochs=3)
 

@@ -1,6 +1,7 @@
 """Partitioned bloom sidecar (plans/seen.py): exactness, bounded
-per-bucket sizing at 10^7 keys, and crawl-state equivalence with the
-global-bitset path (VERDICT r01 next-6)."""
+per-bucket sizing at 10^7 keys, crawl-state equivalence with the
+default exact anti-join path (VERDICT r01 next-6), and sidecar
+recovery on resume."""
 
 from __future__ import annotations
 
@@ -81,7 +82,8 @@ def test_partitioned_sizing_at_1e7(spark):
 
 def test_crawl_partitioned_bloom_same_state(spark):
     """A full fixture crawl under bloom_mode='partitioned' reproduces
-    the global-bloom crawl's trace and url set exactly."""
+    the default (exact anti-join) crawl's trace and url set exactly.
+    Any other bloom_mode is rejected."""
     from scrapetition_spark.config import CrawlConfig
     from scrapetition_spark.crawl import CrawlEngine
     from scrapetition_spark.schemas import URLS, URLS_SEEN
@@ -92,6 +94,10 @@ def test_crawl_partitioned_bloom_same_state(spark):
     seed = "https://www.zeit.de/politik/2020-01/art-a"
     cfg = CrawlConfig("www.zeit.de", follow_links=True, politeness_sec=0,
                       per_host_budget=4)
+
+    with pytest.raises(ValueError):
+        CrawlEngine(spark, Catalog(spark, tempfile.mkdtemp(prefix="bloom-bad-")),
+                    cfg, docs, bloom_mode="global")
 
     def run(mode):
         cat = Catalog(spark, tempfile.mkdtemp(prefix=f"bloom-{mode}-"))
@@ -104,18 +110,22 @@ def test_crawl_partitioned_bloom_same_state(spark):
         urlset = {r["url"] for r in cat.read("urls", URLS).select("url").collect()}
         return trace, urlset, cat
 
-    t_g, u_g, _ = run("global")
+    t_d, u_d, cat_d = run(None)
     t_p, u_p, cat_p = run("partitioned")
-    assert t_g == t_p
-    assert u_g == u_p
+    assert t_d == t_p
+    assert u_d == u_p
+    assert not cat_d.exists("bloom_sidecar")
     assert cat_p.exists("bloom_sidecar")
     assert cat_p.read("bloom_sidecar", BLOOM_SIDECAR).count() > 0
 
 
 def test_crawl_partitioned_bloom_resume(spark):
-    """Interrupt after 2 epochs, resume with a FRESH engine (sidecar
-    rebuilt from urls_seen if absent; here it exists and is reused):
-    final state equals an uninterrupted run."""
+    """Interrupt after 2 epochs, damage the sidecar, resume with a
+    FRESH engine: final state equals an uninterrupted run. Each damage
+    is one input of the engine's single sidecar-recovery check — a
+    dropped sidecar and one rewritten into plain files are both
+    rebuilt from urls_seen in the partitioned layout, so later epochs
+    commit scoped."""
     from scrapetition_spark.config import CrawlConfig
     from scrapetition_spark.crawl import CrawlEngine
     from scrapetition_spark.schemas import URLS_SEEN
@@ -127,36 +137,42 @@ def test_crawl_partitioned_bloom_resume(spark):
     cfg = CrawlConfig("www.zeit.de", follow_links=True, politeness_sec=0,
                       per_host_budget=4)
 
+    def engine(cat):
+        return CrawlEngine(spark, cat, cfg, docs, bloom_mode="partitioned",
+                           expected_urls=1 << 12)
+
     cat1 = Catalog(spark, tempfile.mkdtemp(prefix="bloomres1-"))
-    eng = CrawlEngine(spark, cat1, cfg, docs, bloom_mode="partitioned",
-                      expected_urls=1 << 12)
+    eng = engine(cat1)
     eng.seed([seed])
     eng.run()
     want = {(r["url"], r["fetch_seq"]) for r in
             cat1.read("urls_seen", URLS_SEEN).collect()}
 
-    cat2 = Catalog(spark, tempfile.mkdtemp(prefix="bloomres2-"))
-    eng2 = CrawlEngine(spark, cat2, cfg, docs, bloom_mode="partitioned",
-                       expected_urls=1 << 12)
-    eng2.seed([seed])
-    eng2.run(max_epochs=2)  # interrupted
-    # drop the sidecar: resume must REBUILD it from urls_seen (the
-    # run()-prefill path) — written partition-scoped so later epochs
-    # commit scoped without a consolidating rewrite
-    cat2.drop("bloom_sidecar")
-    eng3 = CrawlEngine(spark, cat2, cfg, docs, bloom_mode="partitioned",
-                       expected_urls=1 << 12)
-    eng3.run()  # fresh engine, same catalog
-    got = {(r["url"], r["fetch_seq"]) for r in
-           cat2.read("urls_seen", URLS_SEEN).collect()}
-    assert got == want
-    has_plain, parts = cat2.partition_state("bloom_sidecar")
-    assert parts and not has_plain
+    def drop(cat):
+        cat.drop("bloom_sidecar")
+
+    def plain(cat):
+        cat.overwrite("bloom_sidecar", cat.read("bloom_sidecar", BLOOM_SIDECAR))
+        assert cat.partition_state("bloom_sidecar")[0]
+
+    for damage in (drop, plain):
+        cat2 = Catalog(spark, tempfile.mkdtemp(prefix=f"bloomres-{damage.__name__}-"))
+        eng2 = engine(cat2)
+        eng2.seed([seed])
+        eng2.run(max_epochs=2)  # interrupted
+        damage(cat2)
+        engine(cat2).run()  # fresh engine, same catalog
+        got = {(r["url"], r["fetch_seq"]) for r in
+               cat2.read("urls_seen", URLS_SEEN).collect()}
+        assert got == want, damage.__name__
+        has_plain, parts = cat2.partition_state("bloom_sidecar")
+        assert parts and not has_plain, damage.__name__
 
 
 def test_crawl_partitioned_bloom_resume_changed_params(spark):
     """ADVICE r02: a resumed engine with DIFFERENT bloom sizing
-    (expected_urls, n_host_buckets's bloom bucketing) must not probe
+    (expected_urls 1<<12 → 1<<16 moves (m_bits, k) from (1024, 16) to
+    (4096, 11)) must not probe
     the stored sidecar with mismatched (m_bits, k, n_buckets) — it
     detects the mismatch via the persisted parameters, rebuilds the
     sidecar from urls_seen, and fetches no duplicates."""
@@ -169,7 +185,7 @@ def test_crawl_partitioned_bloom_resume_changed_params(spark):
     docs = documents_df(spark, fixture_site()).localCheckpoint()
     seed = "https://www.zeit.de/politik/2020-01/art-a"
     cfg = CrawlConfig("www.zeit.de", follow_links=True, politeness_sec=0,
-                      per_host_budget=4, bloom_bits_per_key=16)
+                      per_host_budget=4)
 
     cat = Catalog(spark, tempfile.mkdtemp(prefix="bloomparam-"))
     eng = CrawlEngine(spark, cat, cfg, docs, bloom_mode="partitioned",
@@ -196,10 +212,10 @@ def test_crawl_partitioned_bloom_resume_changed_params(spark):
     # the stored sidecar would yield false negatives ("definitely
     # new") for exactly those seen URLs; the engine must detect the
     # persisted-parameter mismatch and rebuild instead
-    cfg2 = CrawlConfig("www.zeit.de", follow_links=True, politeness_sec=0,
-                       per_host_budget=4, bloom_bits_per_key=8)
-    eng2 = CrawlEngine(spark, cat, cfg2, docs, bloom_mode="partitioned",
+    eng2 = CrawlEngine(spark, cat, cfg, docs, bloom_mode="partitioned",
                        expected_urls=1 << 16)
+    assert (eng.pbloom.m_bits, eng.pbloom.k) == (1024, 16)
+    assert (eng2.pbloom.m_bits, eng2.pbloom.k) == (4096, 11)
     assert not eng2.pbloom.matches(
         cat.read("bloom_sidecar", BLOOM_SIDECAR))
     eng2.run()

@@ -1,5 +1,5 @@
 """Round-4 coverage: size-gated broadcast hints (the no-hint path must
-be bit-exact), auto bloom-mode selection, hostile-input round-trip
+be bit-exact), hostile-input round-trip
 (≙ the reference's SQL-injection suite,
 /root/reference/test/Test/Network/Scrapetition/SqlInjection.hs:32-65),
 catalog file hygiene (empty-MERGE skip, plain-dir cap, manifest byte
@@ -59,30 +59,13 @@ def test_no_broadcast_hint_wide_crawl_bit_exact(spark):
     cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=False,
                       politeness_sec=0, per_host_budget=4,
                       broadcast_max_rows=0)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=True, expected_urls=4096)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run()
     got = {r["url"] for r in cat.read("urls_seen", URLS_SEEN).collect()}
     assert got == set(sim.trace)
     urls = {r["url"] for r in cat.read("urls", URLS).select("url").collect()}
     assert urls == set(sim.inserted_urls)
-
-
-def test_auto_bloom_mode_selects_scale_path(spark):
-    """bloom_mode='auto' (the default): global while the driver bitset
-    is small, partitioned sidecar once expected_urls makes a single
-    bitset un-broadcastable (VERDICT r03 #2)."""
-    docs = documents_df(spark, {})
-    cfg = CrawlConfig("x", politeness_sec=0)
-    cat = Catalog(spark, tempfile.mkdtemp(prefix="r4bloom-"))
-    small = CrawlEngine(spark, cat, cfg, docs, expected_urls=1 << 16)
-    assert small.bloom is not None and small.pbloom is None
-    big = CrawlEngine(spark, cat, cfg, docs, expected_urls=1 << 31)
-    assert big.bloom is None and big.pbloom is not None
-    # explicit modes still honored
-    forced = CrawlEngine(spark, cat, cfg, docs, expected_urls=1 << 31,
-                         bloom_mode="global")
-    assert forced.bloom is not None
 
 
 # --------------------------------------------------------------------------
@@ -115,7 +98,7 @@ def test_hostile_values_survive_round_trip(spark):
     cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=True,
                       politeness_sec=0)
     sim = simulate(site, [seed], cfg)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([seed])
     eng.run()
     # S6: hostile URLs stored byte-exact (cross-scheme, quotes, `--`)
@@ -152,7 +135,7 @@ def test_table_name_overrides(spark):
                       politeness_sec=0,
                       table_names={"comments": "items",
                                    "votes": "comment_voting"})
-    eng, cat = _engine(spark, docs, cfg, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run(max_epochs=4)
     assert cat.exists("items") and not cat.exists("comments")
@@ -308,10 +291,10 @@ def test_crawl_with_expiry_resumes_exactly(spark):
     cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=True,
                       politeness_sec=0, expire_keep_snapshots=1)
     sim = simulate(site, [SEED], cfg)
-    eng, cat = _engine(spark, docs, cfg, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run(max_epochs=3)
-    eng2 = CrawlEngine(spark, cat, cfg, docs, use_bloom=False)
+    eng2 = CrawlEngine(spark, cat, cfg, docs)
     eng2.run()
     trace = [
         r["url"]
@@ -337,7 +320,7 @@ def test_expiry_with_colliding_table_names(spark):
     cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=True,
                       politeness_sec=0, expire_keep_snapshots=1,
                       table_names={"comments": "users", "users": "accounts"})
-    eng, cat = _engine(spark, docs, cfg, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run(max_epochs=4)
     assert cat.exists("users") and cat.exists("accounts")
@@ -497,13 +480,12 @@ def test_crawl_bucketed_seen_bit_exact_and_resume(spark):
                       politeness_sec=0, seen_bucket_min_bytes=0)
     sim = simulate(site, [SEED], cfg)
 
-    eng, cat = _engine(spark, docs, cfg, use_bloom=True, expected_urls=4096)
+    eng, cat = _engine(spark, docs, cfg)
     eng.seed([SEED])
     eng.run(max_epochs=3)
     # mid-crawl: layout already bucketed, pruning engaged
     assert cat.prunable_buckets("urls_seen", {"n_host_buckets": 256})
-    eng2 = CrawlEngine(spark, cat, cfg, docs, use_bloom=True,
-                       expected_urls=4096)
+    eng2 = CrawlEngine(spark, cat, cfg, docs)
     eng2.run()
     trace = [r["url"] for r in cat.read("urls_seen", URLS_SEEN)
              .orderBy("fetch_seq").collect()]
@@ -523,15 +505,15 @@ def test_crawl_bucketed_seen_resume_changed_host_buckets(spark):
     cfg1 = CrawlConfig("www.zeit.de", n_host_buckets=256, **base)
     cfg2 = CrawlConfig("www.zeit.de", n_host_buckets=64, **base)
 
-    eng, cat = _engine(spark, docs, cfg1, use_bloom=False)
+    eng, cat = _engine(spark, docs, cfg1)
     eng.seed([SEED])
     eng.run(max_epochs=2)
     assert cat.prunable_buckets("urls_seen", {"n_host_buckets": 256})
-    eng2 = CrawlEngine(spark, cat, cfg2, docs, use_bloom=False)
+    eng2 = CrawlEngine(spark, cat, cfg2, docs)
     eng2.run()
     assert cat.prunable_buckets("urls_seen", {"n_host_buckets": 64})
 
-    ref_eng, ref_cat = _engine(spark, docs, cfg1, use_bloom=False)
+    ref_eng, ref_cat = _engine(spark, docs, cfg1)
     ref_eng.seed([SEED])
     ref_eng.run()
     got = [r["url"] for r in cat.read("urls_seen", URLS_SEEN).collect()]

@@ -43,7 +43,7 @@ def test_stream_ingest_merges_frontier(spark):
     from scrapetition_spark.config import CrawlConfig
 
     eng = CrawlEngine(
-        spark, cat, CrawlConfig(start_domain=""), documents=None, use_bloom=False
+        spark, cat, CrawlConfig(start_domain=""), documents=None
     )
 
     def sink(batch_df, batch_id):

@@ -4,8 +4,8 @@ No multi-executor cluster exists in this sandbox, so per the driver
 instruction the two "cluster sizes" are two parallelism levels of the
 IDENTICAL job on the SAME input: one wide crawl epoch — due-set plan
 (politeness window over the host-bucketed frontier) → fetch join →
-span parse → item/edge MERGE sinks → frontier merge → seen append +
-bloom fold — over a synthetic web generated ONCE to parquet on disk
+span parse → item/edge MERGE sinks → frontier merge → seen append —
+over a synthetic web generated ONCE to parquet on disk
 and read by every level. Fresh JVM per run, fixed
 spark.sql.shuffle.partitions, cores are the only variable.
 
@@ -81,7 +81,7 @@ obs = []
 for attempt in range(2):
     cat_dir = tempfile.mkdtemp(prefix=f"scale{cpus}-", dir=_cat_parent)
     cat = Catalog(spark, cat_dir)
-    eng = CrawlEngine(spark, cat, cfg, web, expected_urls=1 << 22)
+    eng = CrawlEngine(spark, cat, cfg, web)
     # seed the whole corpus: the epoch must be big enough that
     # distributable work dominates fixed per-epoch driver cost — the
     # regime a 10^10-URL frontier is always in (politeness still caps
@@ -179,7 +179,7 @@ def main() -> None:
         "",
         "Identical job — ONE wide crawl epoch (due-set politeness plan →",
         "fetch join → span parse → MERGE sinks → frontier merge → seen",
-        f"append + bloom fold) over the same {docs:,}-doc on-disk synthetic",
+        f"append) over the same {docs:,}-doc on-disk synthetic",
         f"web (zipf hot hosts), ~{fetched:,} due URLs, run at several",
         "parallelism levels. Fresh JVM per run, fixed",
         "spark.sql.shuffle.partitions=64; every pass of every JVM is",
