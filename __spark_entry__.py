@@ -151,8 +151,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return A.a3_graph_bfs(_t(spark, sf, "orders"), _t(spark, sf, "lineitem"))
 
     def c12(spark, sf):
-        # the delta-frontier iterative loop (measured 1.92 vs 2.99 s
-        # median against a recursive-CTE form, 6-pass A/B at sf0.1)
+        # the delta-frontier iterative loop. An earlier A/B read it at
+        # 1.92 vs 2.99 s against a recursive-CTE form, but that session's
+        # generated-code cache thrashed and the script is gone; ROADMAP
+        # item 5 re-measures the two forms.
         comments = comments_from_events(_t(spark, sf, "events"))
         out = propagate_threads(comments, domain_col=None, with_depth=True)
         return out.select("id", "thread", "depth")

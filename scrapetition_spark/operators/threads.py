@@ -66,11 +66,14 @@ def propagate_threads(
     previous round — never rewrites the full table (the O(n·depth)
     shape VERDICT r01 flagged). Resolved rows accumulate as appended
     deltas, unioned once at the end; one count() action per round
-    (the progress guard, Utils.hs:99-105). A same-session alternating
-    A/B at sf0.1/local[32] (6 passes) measured this loop at median
-    1.92 s vs 2.99 s for Spark 4's recursive-CTE plan of the same
-    semantics. The view form (no duplicate collapse) is
-    ``propagate_threads_recursive``."""
+    (the progress guard, Utils.hs:99-105). An earlier A/B at
+    sf0.1/local[32] read this loop at median 1.92 s vs 2.99 s for
+    Spark 4's recursive-CTE plan of the same semantics, but it ran in
+    a session whose 100-entry generated-code cache thrashed (every
+    pass recompiled every class; see ``session.get_spark``), and its
+    script is gone, so the figures do not choose between the two
+    forms; ROADMAP item 5 re-measures them. The view form (no
+    duplicate collapse) is ``propagate_threads_recursive``."""
     keys = ([domain_col] if domain_col else []) + [id_col]
     cur = collapse_duplicates(df, keys, order_col)
     out_cols = df.columns

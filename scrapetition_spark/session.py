@@ -29,6 +29,31 @@ def get_spark(
     """Build (or fetch) a SparkSession with engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, else *).
+
+    Generated-code cache: 1024 entries. Whole-stage codegen compiles
+    each plan's Java source with Janino and keeps the class in a
+    JVM-wide LRU cache keyed by that source
+    (``spark.sql.codegen.cache.maxEntries``, a static conf; Spark's
+    default is 100). Working sets, as distinct classes compiled by a
+    cold run with an unbounded cache (``CodegenMetrics
+    .METRIC_COMPILATION_TIME`` count deltas, local[4], 4-core VM):
+
+    - one pass over the six perfbench corpus queries, sf0.001: 135;
+    - one 128-URL perfbench crawl epoch: 228 cold, 68 more on the
+      first warm epoch, then 13 per epoch (about 296 in all);
+    - one sweep over all of ``__spark_entry__.queries()``, sf0.001:
+      2425, and 434 new ones on a second sweep.
+
+    Repeated work walks its classes in a cycle, and an LRU smaller than
+    the cycle misses on every access. At 100 entries a repeated query
+    pass recompiled 126 classes and every warm crawl epoch about 283,
+    and the JIT warmed each new class up from scratch. At 1024, 3.5x
+    the largest repeated working set, a repeated pass compiles 0 and a
+    warm epoch 13: the classes whose source inlines a per-epoch
+    literal. The whole-suite sweep is a one-off correctness run, not a
+    loop, so the cache is not sized to hold it. The cap also bounds
+    memory: an evicted class's source leaves the heap and its class
+    can unload from metaspace.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -59,14 +84,10 @@ def get_spark(
         # scans still fan out across all cores (Spark splits parquet
         # at row-group boundaries).
         .config("spark.hadoop.parquet.block.size", str(16 * 1024 * 1024))
-        # Sink writes are device-bound at high local parallelism
-        # (BENCH addendum 2: tmpfs cuts sinks 2.6x); a denser codec
-        # trades spare CPU for bytes through the shared device.
-        # Default snappy; probe knob for the codec A/B.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "snappy"),
-        )
+        # zstd made the device-bound sinks slower, not faster
+        # (BENCH/BASELINE.md addendum 6).
+        .config("spark.sql.parquet.compression.codec", "snappy")
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     # Device-isolation probe knob (BENCH/BASELINE.md): point shuffle /
     # block-manager spill at a different device (e.g. /dev/shm) to

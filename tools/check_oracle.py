@@ -5,11 +5,26 @@ order-insensitive value hash.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
+The script and its Spark Python workers import the engine from the
+checkout the script sits in, whatever the working directory.
+
 Set CHECK_ORACLE_OUT=<path> to also write the results as a
 driver-format JSON file ({key: {rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err}}) — the committed
 CORRECTNESS_LOCAL_rN.json artifacts cover ALL keys even though the
 external driver truncates its own file at 50.
+
+Fields per key:
+
+- rows_match, schema_match: Spark and DuckDB return the same row
+  count / the same column names (order-insensitive);
+- hash_match: the order-insensitive value hashes are equal. It is
+  None when no hash was computed: the column names differ, a side
+  raised, or the key has no oracle;
+- spark_rows, oracle_rows: row counts, None for a side that raised
+  or has no oracle;
+- err: what failed, "no_oracle" for a rows-only key, else None.
+  A key with an oracle passes when err is None.
 """
 
 from __future__ import annotations
@@ -21,6 +36,8 @@ import sys
 
 import duckdb
 import pandas as pd
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def value_hash(df: pd.DataFrame) -> str:
@@ -38,7 +55,10 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
+    # the Python workers (UDFs) import the engine too
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     import __spark_entry__ as E
     from scrapetition_spark.session import get_spark
 
@@ -64,7 +84,7 @@ def main() -> int:
             failures.append(name)
             results[name] = {
                 "rows_match": False, "schema_match": False,
-                "hash_match": False, "spark_rows": None,
+                "hash_match": None, "spark_rows": None,
                 "oracle_rows": None, "err": f"spark error: {ex}",
             }
             continue
@@ -83,21 +103,24 @@ def main() -> int:
             failures.append(name)
             results[name] = {
                 "rows_match": False, "schema_match": False,
-                "hash_match": False, "spark_rows": len(sdf),
+                "hash_match": None, "spark_rows": len(sdf),
                 "oracle_rows": None, "err": f"oracle error: {ex}",
             }
             continue
         problems = []
+        hash_match = None
         if len(sdf) != len(odf):
             problems.append(f"rows {len(sdf)} vs {len(odf)}")
         if sorted(sdf.columns) != sorted(odf.columns):
             problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
-        elif value_hash(sdf) != value_hash(odf):
-            problems.append("value hash mismatch")
+        else:
+            hash_match = value_hash(sdf) == value_hash(odf)
+            if not hash_match:
+                problems.append("value hash mismatch")
         results[name] = {
             "rows_match": len(sdf) == len(odf),
             "schema_match": sorted(sdf.columns) == sorted(odf.columns),
-            "hash_match": not problems,
+            "hash_match": hash_match,
             "spark_rows": len(sdf),
             "oracle_rows": len(odf),
             "err": "; ".join(problems) or None,
