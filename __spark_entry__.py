@@ -295,7 +295,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def c5b(spark, sf):
         # same exact unseen-set contract through the PARTITIONED bloom
-        # sidecar (bucket-local build + cogroup probe): false
+        # sidecar (bitmap-aggregate build + bucket-join probe): false
         # positives verify exactly, so the result — and therefore the
         # oracle — is identical to c5's
         from scrapetition_spark.plans.seen import (

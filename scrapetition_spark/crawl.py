@@ -148,7 +148,10 @@ class CrawlEngine:
                 "bloom_sidecar", self.pbloom.build(seen_b), "bucket", None
             )
 
-    def _seen_filter(self) -> PartitionedBloomView | None:
+    def _seen_filter(self, active: list[int]) -> PartitionedBloomView | None:
+        """The bloom view over the ``active`` buckets' sidecar rows
+        only: a candidate probes its own bucket's row, so the epoch
+        reads O(active buckets) of the sidecar, never all of it."""
         if self.pbloom is None:
             return None
         if not self._sidecar_checked:
@@ -157,7 +160,7 @@ class CrawlEngine:
         if not self.cat.exists("bloom_sidecar"):
             return None
         return PartitionedBloomView(
-            self.pbloom, self.cat.read("bloom_sidecar", BLOOM_SIDECAR)
+            self.pbloom, self.cat.read_buckets("bloom_sidecar", BLOOM_SIDECAR, active)
         )
 
     # ------------------------------------------------------------------ util
@@ -171,20 +174,23 @@ class CrawlEngine:
     def _seen_bucket_spec(self) -> dict:
         return {"n_host_buckets": self.cfg.n_host_buckets}
 
-    def _read_seen_pruned(self, urls: DataFrame) -> DataFrame:
-        """The epoch's seen frame for the due-set anti-join. Once
-        urls_seen has converted to the bucketed layout (append_bucketed
-        past the size threshold), read ONLY the buckets the active
-        frontier touches: the anti-join matches on url equality, equal
-        urls share a host bucket, so seen rows in never-due buckets
-        cannot match any candidate. The distinct-bucket scan is one
-        column-pruned agg over the frontier (bounded result:
+    def _read_seen(self, urls: DataFrame) -> tuple[DataFrame, list[int] | None]:
+        """The epoch's seen frame for the due-set anti-join, and the
+        frontier's active host buckets (None when nothing needs them).
+        Once urls_seen has converted to the bucketed layout
+        (append_bucketed past the size threshold), read ONLY the
+        buckets the active frontier touches: the anti-join matches on
+        url equality, equal urls share a host bucket, so seen rows in
+        never-due buckets cannot match any candidate. The bloom probe
+        reads the same buckets of its sidecar. The distinct-bucket scan
+        is one column-pruned agg over the frontier (bounded result:
         ≤ n_host_buckets rows); at 10^10 seen URLs this turns the last
-        O(table)-per-epoch read into O(active buckets) — a
+        O(table)-per-epoch reads into O(active buckets) — a
         domain-restricted crawl (the reference default, gate C7) reads
         exactly one bucket."""
-        if not self.cat.prunable_buckets("urls_seen", self._seen_bucket_spec()):
-            return self.cat.read("urls_seen", URLS_SEEN)
+        prunable = self.cat.prunable_buckets("urls_seen", self._seen_bucket_spec())
+        if not prunable and self.pbloom is None:
+            return self.cat.read("urls_seen", URLS_SEEN), None
         from scrapetition_spark.plans.frontier import candidate_predicate
 
         # MUST be plan_due's own predicate (shared helper): the bucket
@@ -194,7 +200,9 @@ class CrawlEngine:
             r["host_bucket"]
             for r in active.select("host_bucket").distinct().collect()
         )
-        return self.cat.read_buckets("urls_seen", URLS_SEEN, buckets)
+        if not prunable:
+            return self.cat.read("urls_seen", URLS_SEEN), buckets
+        return self.cat.read_buckets("urls_seen", URLS_SEEN, buckets), buckets
 
     def _url_row(self, df: DataFrame, scheduled: bool) -> DataFrame:
         """Project a (target/lineage) frame onto the urls schema."""
@@ -303,7 +311,7 @@ class CrawlEngine:
 
         cfg = self.cfg
         urls = self.cat.read("urls", URLS)
-        seen = self._read_seen_pruned(urls)
+        seen, active = self._read_seen(urls)
         if cfg.visit_again:
             # -a (Main.hs:89-91, seen=[] at :246): drop persisted seen
             # rows from before this run; bloom positives for them fall
@@ -311,20 +319,24 @@ class CrawlEngine:
             seen = seen.filter(F.col("epoch") >= F.lit(self.run_start_epoch))
 
         due = plan_due(
-            urls, seen, self._seen_filter(), cfg, self.fetch_seq_base, self.robots
+            urls, seen, self._seen_filter(active), cfg, self.fetch_seq_base,
+            self.robots,
         )
+        # due_buckets: the host buckets with due URLs, known on the
+        # driver without another job (the bloom merge's touched set)
         if cfg.sequential:
             due = due.select(
                 "url", "host", "host_bucket", "fetch_seq"
             ).localCheckpoint()
-            n_due = due.count()
+            due_buckets = [r["host_bucket"] for r in due.select("host_bucket").collect()]
+            n_due = len(due_buckets)
         else:
             # materialize the due set once, then number it in parallel
             # (per-bucket windows + dense offsets — no global sort)
             raw = due.select(
                 "url", "host", "host_bucket", *LINEAGE_COLS
             ).localCheckpoint()
-            due, n_due = assign_fetch_seq(raw, cfg, self.fetch_seq_base)
+            due, n_due, due_buckets = assign_fetch_seq(raw, cfg, self.fetch_seq_base)
             due = due.select(
                 "url", "host", "host_bucket", "fetch_seq"
             ).localCheckpoint()
@@ -505,8 +517,7 @@ class CrawlEngine:
 
         # ---- discovered URLs per dispatcher (C4): mkAbsolute + nub +
         # pos, computed *inside the span array* (parse/kernel.py
-        # discover_urls) — map-side, no shuffle, no Python on the hot
-        # path; only dot-segment relative refs take the UDF fallback.
+        # discover_urls) — map-side, no shuffle, no Python.
         disc = discover_urls(
             hit,
             [
@@ -600,12 +611,7 @@ class CrawlEngine:
             if not self.cat.exists("bloom_sidecar"):
                 self.cat.overwrite_partitions("bloom_sidecar", delta, "bucket", None)
                 return
-            # due is checkpointed; distinct bucket ids are bounded
-            # metadata (≤ n_host_buckets rows on the driver)
-            touched = sorted(
-                r["host_bucket"]
-                for r in due.select("host_bucket").distinct().collect()
-            )
+            touched = sorted(set(due_buckets))
             old = self.cat.read_buckets("bloom_sidecar", BLOOM_SIDECAR, touched)
             merged = self.pbloom.or_merge(old.unionByName(delta))
             self.cat.overwrite_partitions("bloom_sidecar", merged, "bucket", touched)

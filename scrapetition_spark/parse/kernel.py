@@ -13,8 +13,9 @@ extraction is native column expressions — string ops stay inside
 whole-stage codegen, the only exchange is the window/groupBy on
 (url), which is needed anyway to assemble per-comment records and is
 perfectly distributed (one page = one tiny group, millions of pages
-= uniform keys). Pandas/Arrow UDFs are reserved for the genuinely
-non-native URL semantics (functions/urls.py). The per-row invariant
+= uniform keys). URL resolution is native too
+(functions/urls.py ``url_resolve_native``), so parsing and discovery
+start no Python worker. The per-row invariant
 holds trivially: spans are only read (ordered by ``offset``), never
 rewritten.
 
@@ -27,7 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scrapetition_spark import spans as SP
@@ -37,7 +38,7 @@ from scrapetition_spark.functions.urls import (
     fragment_or_url,
     hygienic_link,
     strip_query,
-    url_join,
+    url_resolve_native,
 )
 
 # P11 (ZeitDe.hs:386-388): "%FT%T%z" — ISO-8601 with numeric offset.
@@ -457,14 +458,10 @@ def discover_urls(
     first-occurrence in (collector_rank, offset) order, dense ``pos``.
 
     Scale design: everything happens *inside the span array* with
-    higher-order functions — filter → transform → array_sort →
-    array_distinct → posexplode — so the hot path is pure map-side
-    whole-stage-codegen work with zero shuffles and zero Python. Only
-    pages containing a relative ref that native RFC 3986 resolution
-    can't express (dot segments etc. — ``url_resolve_native`` returns
-    NULL) are routed through the vectorized ``url_join`` pandas UDF +
-    per-page windows; the whole page takes the fallback so within-page
-    ``nub`` order stays exact.
+    higher-order functions — filter → transform (native ``urljoin``,
+    ``url_resolve_native``) → array_sort → array_distinct →
+    posexplode — so every page is map-side work with zero shuffles
+    and zero Python, dot-segment refs included.
 
     ``dispatchers``: (dispatcher_idx, url_scheme_regex, collector
     roles).  Returns (source, dispatcher_idx, pos, target) — plus
@@ -472,10 +469,7 @@ def discover_urls(
     ``fetch_seq`` column, so callers never need a lineage join back to
     the due set to recover it — or None if no dispatcher collects URLs.
     """
-    from scrapetition_spark.functions.urls import url_resolve_native
-
-    parts_fast: list[DataFrame] = []
-    parts_slow: list[DataFrame] = []
+    parts: list[DataFrame] = []
     has_seq = "fetch_seq" in pages.columns
     cols = ["url", "fetch_seq", "spans"] if has_seq else ["url", "spans"]
     base = pages.select(*cols)
@@ -532,30 +526,23 @@ def discover_urls(
 
         # native absolutization inside the array — a plain string
         # array in (rank, offset) order (__cand is already sorted);
-        # NULL element ⇒ page needs the Python fallback
+        # nub = array_distinct over the ordered targets — first
+        # occurrence wins, O(k) hash-set dedup. (The first cut folded
+        # an O(k²) aggregate/concat over struct elements; the per-page
+        # array churn made this the epoch's only stage that stayed
+        # flat from 8→32 cores — allocation-bandwidth-bound, ~2×
+        # slower than this form on the 1.2M-page scaling epoch.)
         resolved = F.transform(
             "__cand", lambda x: url_resolve_native(F.col("url"), x["target"])
         )
-        pg = pg.withColumn("__tgt", resolved).withColumn(
-            "__needs_py", F.exists("__tgt", lambda t: t.isNull())
-        )
-
-        # fast path: nub = array_distinct over the ordered targets —
-        # first occurrence wins, O(k) hash-set dedup. (The first cut
-        # folded an O(k²) aggregate/concat over struct elements; the
-        # per-page array churn made this the epoch's only stage that
-        # stayed flat from 8→32 cores — allocation-bandwidth-bound,
-        # ~2× slower than this form on the 1.2M-page scaling epoch.)
         seq_out = (
             [F.col("fetch_seq").alias("source_fetch_seq")] if has_seq else []
         )
-        fast = (
-            pg.filter(~F.col("__needs_py"))
-            .select(
+        parts.append(
+            pg.select(
                 *(["url", "fetch_seq"] if has_seq else ["url"]),
-                F.posexplode(F.array_distinct("__tgt")),
-            )
-            .select(
+                F.posexplode(F.array_distinct(resolved)),
+            ).select(
                 F.col("url").alias("source"),
                 *seq_out,
                 F.lit(idx).alias("dispatcher_idx"),
@@ -563,40 +550,10 @@ def discover_urls(
                 F.col("col").alias("target"),
             )
         )
-        parts_fast.append(fast)
 
-        slow = (
-            pg.filter(F.col("__needs_py"))
-            .select(
-                *(["url", "fetch_seq"] if has_seq else ["url"]),
-                F.explode("__cand").alias("c"),
-            )
-            .select(
-                *(["url", "fetch_seq"] if has_seq else ["url"]),
-                F.col("c.rank").alias("rank"),
-                F.col("c.offset").alias("offset"),
-                url_join(F.col("url"), F.col("c.target")).alias("abs_target"),
-            )
-        )
-        w_nub = Window.partitionBy("url", "abs_target").orderBy("rank", "offset")
-        w_pos = Window.partitionBy("url").orderBy("rank", "offset")
-        slow = (
-            slow.withColumn("__rn", F.row_number().over(w_nub))
-            .filter(F.col("__rn") == 1)
-            .withColumn("pos", (F.row_number().over(w_pos) - 1).cast("int"))
-            .select(
-                F.col("url").alias("source"),
-                *seq_out,
-                F.lit(idx).alias("dispatcher_idx"),
-                "pos",
-                F.col("abs_target").alias("target"),
-            )
-        )
-        parts_slow.append(slow)
-
-    if not parts_fast:
+    if not parts:
         return None
-    out = parts_fast[0]
-    for p in parts_fast[1:] + parts_slow:
+    out = parts[0]
+    for p in parts[1:]:
         out = out.unionByName(p)
     return out

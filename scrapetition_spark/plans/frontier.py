@@ -60,7 +60,7 @@ def order_key(cfg: CrawlConfig) -> list[Column]:
 def candidate_predicate(cfg: CrawlConfig) -> F.Column:
     """The frontier-candidate predicate — the SINGLE definition shared
     by ``plan_due`` and the bucket-pruned seen read
-    (``CrawlEngine._read_seen_pruned``). The pruning soundness proof
+    (``CrawlEngine._read_seen``). The pruning soundness proof
     requires the pruned bucket set to cover every URL this predicate
     admits; keeping two copies would let a one-line edit here silently
     under-cover the anti-join and refetch seen URLs.
@@ -146,7 +146,7 @@ def plan_due(
 
 def assign_fetch_seq(
     due: DataFrame, cfg: CrawlConfig, fetch_seq_base: int
-) -> tuple[DataFrame, int]:
+) -> tuple[DataFrame, int, list[int]]:
     """Dense, deterministic ``fetch_seq`` over a wide-epoch due set
     WITHOUT a single-partition global sort: rows are numbered inside
     each host bucket (parallel windows — within-host order follows the
@@ -156,7 +156,8 @@ def assign_fetch_seq(
     documented wide-epoch relaxation: everything due in one epoch is
     fetched "simultaneously"; per-host order (the politeness
     invariant) stays exact. Call on a materialized (checkpointed) due
-    frame so the size scan is cheap."""
+    frame so the size scan is cheap. Returns the numbered frame, its
+    row count and its host buckets (from the same size scan)."""
     key = order_key(cfg)
     w = Window.partitionBy("host_bucket").orderBy(*key)
     d = due.withColumn("__rn", F.row_number().over(w))
@@ -169,12 +170,12 @@ def assign_fetch_seq(
         offsets[b] = acc
         acc += n
     if not offsets:  # empty due set
-        return due.withColumn("fetch_seq", F.lit(None).cast("long")), 0
+        return due.withColumn("fetch_seq", F.lit(None).cast("long")), 0, []
     spark = due.sparkSession
     from scrapetition_spark.session import local_df
 
-    # single-slice local frame: a defaultParallelism-sliced python RDD
-    # here costs a ~6 s worker-spawn storm per epoch (see local_df)
+    # the offsets are rows of a local relation, not literals in
+    # generated code, so each epoch's plan compiles to the same classes
     off_df = F.broadcast(
         local_df(spark, [(b, o) for b, o in offsets.items()],
                  "host_bucket int, __off long")
@@ -187,7 +188,7 @@ def assign_fetch_seq(
         )
         .drop("__rn", "__off")
     )
-    return out, acc
+    return out, acc, list(offsets)
 
 
 def select_urls_where(

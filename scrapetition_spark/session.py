@@ -6,8 +6,9 @@ Setup.hs:16-24) onto SparkSession construction + catalog bootstrap.
 Scale rationale (100 TB / 1000 executors):
 - AQE on: runtime coalescing of shuffle partitions, skew-join
   splitting for hot-host joins, dynamic broadcast conversion.
-- Arrow on: every pandas UDF (URL canonicalization, parse kernel)
-  crosses the JVM/Python boundary in columnar batches.
+- Arrow on: every pandas UDF (multimodal decode, export, streaming
+  state) crosses the JVM/Python boundary in columnar batches, and
+  ``local_df`` hands driver rows to the JVM as one Arrow batch.
 - shuffle.partitions is a local default; on a real cluster it is
   set per-job to ~2-3x total cores (or left to AQE's coalescing
   with a high initial value).
@@ -109,15 +110,24 @@ def get_spark(
 
 
 def local_df(spark: SparkSession, rows, schema):
-    """Driver-local rows as a SINGLE-partition DataFrame.
+    """Driver-local rows as a DataFrame over a JVM ``LocalRelation``.
 
-    ``spark.createDataFrame(rows, ...)`` parallelizes into
-    defaultParallelism slices (32 on local[32]), so every job over the
-    tiny frame schedules 32 Python-RDD tasks; under this sandbox each
-    such task can spawn a fresh Python worker (~0.2 s apiece), turning
-    a 1-row write into ~6 s (measured r03 — the bulk of the r01→r02
-    crawl bench regression). One slice = one task ≈ 0.3 s, and is the
-    right shape for small driver-side frames on a real cluster too."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
+    The rows cross to the JVM as one Arrow batch; Spark keeps a batch
+    under ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB
+    by default) as a local relation, so every job over the frame scans
+    rows held in the plan: no Python RDD under it (a Python RDD starts
+    Python workers whenever a job reads it) and no per-call literal in
+    generated code (which would recompile every epoch). ``schema`` is
+    a ``StructType`` or a DDL string; ``rows`` are tuples in schema
+    order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
     )
+    return spark.createDataFrame(table, schema)

@@ -125,9 +125,13 @@ def test_count_of_fans(spark):
 
 
 def test_url_resolve_native_matches_urljoin(spark):
-    """Property: wherever the native RFC 3986 fast path claims
-    coverage (non-null), it must equal mk_absolute_str (urljoin
-    semantics). NULL rows are the declared fallback domain."""
+    """Property: the native resolution equals mk_absolute_str
+    (urljoin semantics) on every row of the generator — absolute,
+    protocol-relative, rooted, fragment- and query-only refs,
+    dot segments (trailing ``..`` included), ``;params``, empty refs
+    and empty components, bases with no authority, a non-relative or
+    upper-case scheme or empty segments, malformed IPv6 netlocs and
+    leading whitespace."""
     from itertools import product
 
     from scrapetition_spark.functions.urls import (
@@ -140,6 +144,19 @@ def test_url_resolve_native_matches_urljoin(spark):
         "https://h7.test/a/b/",
         "https://h7.test",
         "http://u:p@h.test:8080/x/y",
+        "http://h.test/a/b;p?q",
+        "http://h.test/a;x/b;y",
+        "file:/srv/a/b",  # no authority
+        "http:a/b",  # no authority, relative path
+        "ws://h.test/a/b",  # no ;params for ws
+        "http://[::1]/a",
+        "http://[bad/a",  # unbalanced bracket: urljoin raises
+        "HTTP://H.test/a/b",  # urljoin lowercases the scheme
+        "http://h.test/a//b/c",  # empty middle segment
+        "http://h.test/./a/b",
+        "http://h.test/a?",  # empty query: dropped
+        "http://h.test/a;",  # empty params: dropped
+        "http://h.test/a/b?q#",
         "not a uri",
         "www.feu.de/x",
         "mailto:a@b.c",
@@ -149,33 +166,120 @@ def test_url_resolve_native_matches_urljoin(spark):
         "https://other.org/z?x#y",
         "ftp://f.test/z",
         "//cdn.test/lib.js",
+        "///triple",
         "/rooted/path?q=2",
         "/rooted#frag",
         "#frag-only",
         "?q=only",
+        "?",
+        "#",
         "plain/rel.html",
         "rel.html?a=1#b",
         "../up/one",
+        "../../../../too/far",
         "./here",
         "a/../b",
+        "a//b/./c",
+        "/a//b/../c",
         "/..",
+        "..",
+        ".",
+        "x/..",
+        "x/.",
+        ";p",
+        "seg;p?q",
+        "d/e;p/f;q",
+        "x?",
+        "x#",
+        "x;",
+        "/a;?q",
+        "//h.test?",
+        "//h.test/p;#f",
         "",
+        " ",
+        " /lead-space",
+        "\tx\ny",
+        "http:rel",
         "C:/windows/looking",
         "x y spaces",
+        "//[::1]:80/v6",
+        "//[nope]/v6",
     ]
     rows = list(product(bases, targets))
     df = spark.createDataFrame(rows, ["b", "t"])
     got = df.select(
         "b", "t", url_resolve_native(F.col("b"), F.col("t")).alias("n")
     ).collect()
-    n_covered = 0
+    assert len(got) == len(rows)
     for r in got:
-        if r["n"] is not None:
-            expect = mk_absolute_str(r["b"], r["t"])
-            assert r["n"] == expect, (r["b"], r["t"], r["n"], expect)
-            n_covered += 1
-    # the fast path must cover the crawl-dominant cases
-    assert n_covered >= len(rows) * 0.5
+        expect = mk_absolute_str(r["b"], r["t"])
+        assert r["n"] == expect, (r["b"], r["t"], r["n"], expect)
+
+
+def test_url_resolve_native_matches_urljoin_fuzzed(spark):
+    """Seeded random URLs assembled from schemes, netlocs (userinfo,
+    IPv6/IPvFuture literals, NFKC separators), dot/empty/``;param``
+    segments, queries and fragments, with control characters mixed in:
+    the native resolution equals mk_absolute_str on every row."""
+    import random
+
+    from scrapetition_spark.functions.urls import (
+        mk_absolute_str,
+        url_resolve_native,
+    )
+
+    rnd = random.Random(20261017)
+    schemes = ["http", "https", "HTTP", "ftp", "file", "ws", "mailto", "urn", "sip"]
+    nets = ["h.test", "u:p@h.test:80", "", "[::1]", "[v1.x]", "[1.2.3.4]",
+            "[fe80::1%25e]", "[::ffff:1.2.3.04]", "a]b", "[x", "h\uff0ft",
+            "h\u00e9.t", "H.Test"]
+    segs = ["a", "b", "..", ".", "", "c;p", "d;", ";q", "e.html", "x y"]
+    tails = ["", "?", "?q=1", "?a?b", "#", "#f", "?x#y", "#f?g"]
+
+    def path():
+        p = "/".join(rnd.choice(segs) for _ in range(rnd.randint(0, 4)))
+        return rnd.choice(["", "/"]) + p + rnd.choice(tails)
+
+    def base():
+        s = rnd.choice(schemes)
+        return f"{s}://{rnd.choice(nets)}{path()}" if rnd.random() < 0.8 else f"{s}:{path()}"
+
+    def target():
+        pre = rnd.choice(["", "", "", " ", "\t", "\x01 "])
+        r = rnd.random()
+        if r < 0.15:
+            t = f"//{rnd.choice(nets)}{path()}"
+        elif r < 0.2:
+            t = f"{rnd.choice(schemes)}:{path()}"
+        else:
+            t = path()
+        if rnd.random() < 0.1:
+            i = rnd.randint(0, len(t))
+            t = t[:i] + rnd.choice(["\t", "\r", "\n"]) + t[i:]
+        return pre + t
+
+    rows = [(base(), target()) for _ in range(3000)]
+    got = spark.createDataFrame(rows, "b string, t string").select(
+        "b", "t", url_resolve_native(F.col("b"), F.col("t")).alias("n")
+    ).collect()
+    bad = [(r["b"], r["t"], r["n"]) for r in got if r["n"] != mk_absolute_str(r["b"], r["t"])]
+    assert not bad, bad[:10]
+
+
+def test_nfkc_separator_class_matches_unicodedata():
+    """The netloc characters urlsplit rejects under NFKC, hard-coded
+    in the native resolution, are exactly this Python's set."""
+    import re
+    import unicodedata
+
+    from scrapetition_spark.functions.urls import _NFKC_SEPARATORS
+
+    want = {
+        c for c in map(chr, range(0x80, 0x110000))
+        if set("/?#@:") & set(unicodedata.normalize("NFKC", c))
+    }
+    got = set(re.findall(r"\\u([0-9a-f]{4})", _NFKC_SEPARATORS))
+    assert {chr(int(h, 16)) for h in got} == want
 
 
 def test_url_domain_native_equals_pandas_kernel(spark):
@@ -202,3 +306,33 @@ def test_url_domain_native_equals_pandas_kernel(spark):
     native = [r[0] for r in df.select(url_domain("url")).collect()]
     kernel = [r[0] for r in df.select(url_domain_udf("url")).collect()]
     assert native == kernel
+
+
+def test_ipv6_pattern_matches_ipaddress():
+    """The bracketed-host pattern of the native resolution accepts
+    exactly the strings ``ipaddress.IPv6Address`` accepts, over seeded
+    random colon-joined parts (hextets, empty parts, over-long and
+    non-hex parts, dotted IPv4 tails with leading zeros or big octets)
+    with optional scope ids."""
+    import ipaddress
+    import random
+    import re
+
+    from scrapetition_spark.functions.urls import _IPV6_RE
+
+    pattern = re.compile(_IPV6_RE.replace("\\z", "\\Z"))
+    parts = ["", "0", "1", "ab", "ffff", "FfFf"] * 4 + [
+        "12345", "g", "1.2.3.4", "01.2.3.4", "256.1.1.1", "1.2.3"]
+    rnd = random.Random(6)
+    cases = ["::", "::1", "1::", "::ffff:1.2.3.4", "1:2:3:4:5:6:7:8",
+             "1:2:3:4:5:6:7::", "::2:3:4:5:6:7:8", "1:2:3:4:5:6:1.2.3.4"]
+    for _ in range(20000):
+        s = ":".join(rnd.choice(parts) for _ in range(rnd.randint(1, 10)))
+        cases.append(s + rnd.choice(["", "", "%eth0", "%", "%a%b"]))
+    for s in cases:
+        try:
+            ipaddress.IPv6Address(s)
+            ok = True
+        except ValueError:
+            ok = False
+        assert bool(pattern.match(s)) == ok, s

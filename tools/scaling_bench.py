@@ -30,10 +30,12 @@ import sys
 import time
 
 WEB_DIR = "/tmp/scaling-web"
+# the checkout this script lives in: the child processes (driver and
+# Python workers) import the engine from it
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 GEN = r"""
 import sys
-sys.path.insert(0, "/root/repo")
 from scrapetition_spark.session import get_spark
 from scrapetition_spark.sources.fixtures import synthetic_web
 
@@ -47,7 +49,6 @@ print("GENERATED")
 
 RUNNER = r"""
 import json, os, shutil, sys, time, tempfile
-sys.path.insert(0, "/root/repo")
 from scrapetition_spark.session import get_spark
 from scrapetition_spark.config import CrawlConfig, Dispatcher
 from scrapetition_spark.crawl import CrawlEngine
@@ -101,10 +102,11 @@ print(json.dumps({"cpus": int(cpus), "fetched": fetched, "seconds": dt,
 
 
 def run_cmd(code: str, *args: str, timeout: int = 3600) -> str:
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="32g")
+    pythonpath = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="32g", PYTHONPATH=pythonpath)
     out = subprocess.run(
         [sys.executable, "-c", code, *args],
-        capture_output=True, text=True, timeout=timeout, cwd="/root/repo",
+        capture_output=True, text=True, timeout=timeout, cwd=ROOT,
         env=env,
     )
     return out.stdout + ("" if out.returncode == 0 else f"\nSTDERR: {out.stderr[-2000:]}")
@@ -266,8 +268,8 @@ def main() -> None:
         "",
         f"_Generated {time.strftime('%Y-%m-%d %H:%M:%S')} by tools/scaling_bench.py_",
     ]
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    out_path = os.environ.get("SCALING_OUT", "/root/repo/BENCH/BASELINE.md")
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
+    out_path = os.environ.get("SCALING_OUT", os.path.join(ROOT, "BENCH", "BASELINE.md"))
     with open(out_path, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(json.dumps({
