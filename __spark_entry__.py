@@ -717,12 +717,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return cat.read("urls_seen", URLS_SEEN).select("url", "status")
 
     def crawl_epoch_scoped(spark, sf):
-        """Wide-epoch crawl with every 10^10-scale storage path FORCED
-        from birth: partitioned bloom sidecar (scoped per-epoch
-        commits), bucketed urls_seen + pruned seen reads
-        (seen_bucket_min_bytes=0). The final seen SET must equal the
+        """Wide-epoch crawl through the partitioned bloom sidecar
+        (scoped per-epoch commits) in front of the pruned seen reads
+        of the bucketed urls_seen. The final seen SET must equal the
         default-path crawl's — the driver-verified witness that the
-        scale layouts change plans, never results."""
+        bloom prefilter changes plans, never results."""
         import tempfile
 
         from scrapetition_spark.config import CrawlConfig
@@ -734,7 +733,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = documents_df(spark, fixture_site())
         cfg = CrawlConfig(FIXTURE_START_DOMAIN, follow_links=True,
                           sequential=False, per_host_budget=4,
-                          politeness_sec=0, seen_bucket_min_bytes=0)
+                          politeness_sec=0)
         cat = Catalog(spark, tempfile.mkdtemp(prefix="entryscoped-"))
         eng = CrawlEngine(spark, cat, cfg, docs, expected_urls=4096,
                           bloom_mode="partitioned")

@@ -104,34 +104,19 @@ class CrawlConfig:
     per_host_budget: int = 1  # max fetches per host per epoch (politeness)
     max_urls_per_epoch: int | None = 100_000  # global due-set cap (None = unbounded)
     n_host_buckets: int = 256  # salted frontier partitioning
-    # urls-table commit granularity: host buckets fold into this many
-    # commit buckets; an epoch rewrites only touched commit buckets
-    # (local default 16 keeps file counts sane; production = up to
-    # n_host_buckets so per-epoch commit cost stays O(epoch activity))
+    # Commit buckets of urls and of the item/edge sinks (comments,
+    # users, votes, articles, url_edges): host buckets fold into this
+    # many. Every table is bucketed from its first write, and an epoch
+    # reads and rewrites only the commit buckets its fetched pages and
+    # discovered links touch. Local default 16 keeps file counts sane;
+    # production = up to n_host_buckets, so a crawl of few hosts reads
+    # few buckets.
     n_commit_buckets: int = 16
-    # epochs touching ≥ this fraction of commit buckets use a plain
-    # consolidated urls rewrite instead of a partition-scoped commit
-    commit_dense_fraction: float = 0.5
     n_frontier_salts: int = 8  # hot-host two-phase top-K (1 = off)
-    # item/edge sink tables (comments/users/votes/articles/url_edges)
-    # are stored in this many key-hash buckets so each epoch's MERGE
-    # anti-join scans only touched buckets (O(epoch activity), not
-    # O(table)); production = 256+ so per-bucket data stays bounded
-    n_item_buckets: int = 8
-    # item tables smaller than this stay in plain appended files (one
-    # anti-join job, no bucket bookkeeping); the first MERGE after
-    # crossing pays one consolidating rewrite into buckets, then every
-    # epoch is bucket-pruned. None = env SPARK_GRAFT_BUCKET_MIN_BYTES
-    # or 256 MiB.
-    item_bucket_min_bytes: int | None = None
-    # urls_seen smaller than this stays in plain appended files; on
-    # crossing it converts (one rewrite) to host-bucket dirs, after
-    # which each epoch (a) appends only per-bucket files and (b) reads
-    # only the buckets the active frontier touches for the exact seen
-    # anti-join — the last O(table)-per-epoch scan in the crawl loop
-    # becomes O(active buckets). None = env SPARK_GRAFT_BUCKET_MIN_BYTES
-    # or 256 MiB (same default as the item sinks).
-    seen_bucket_min_bytes: int | None = None
+    # Accepted only as 0 (urls_seen is always bucketed); kept because
+    # the benchmark's crawl workload still passes it. The next change
+    # to the benchmark removes it.
+    seen_bucket_min_bytes: int = 0
     # Epoch frames derived from the due set (due, fetched, followed)
     # get an explicit F.broadcast hint only while their known row
     # count is at or below this; above it the join is left to the
@@ -157,3 +142,9 @@ class CrawlConfig:
     # {"comments": "items", "votes": "comment_voting"}
     table_names: dict = field(default_factory=dict)
     extra: dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        if self.seen_bucket_min_bytes != 0:
+            raise ValueError(
+                "seen_bucket_min_bytes must be 0: urls_seen is always bucketed"
+            )

@@ -23,13 +23,24 @@ the pure-Python simulator in tests/reference_sim.py). Wide epochs
 
 Resume (≙ ``scrapetition -d``, app/Main.hs:247-250): the loop is a
 pure function of the catalog tables, and every write is an idempotent
-merge — restarting after any partial epoch converges to the same
-state (tested in tests/test_crawl.py).
+merge — a crawl stopped between epochs resumes to the same state
+(tested in tests/test_crawl.py). A failure inside an epoch is not
+covered: the epoch's sinks commit one by one, so resuming after one
+can lose rows (ROADMAP item 1).
+
+Every crawl-state table is bucketed from its first write, and each
+table's bucket is a function of its key that equals the fetched
+page's host bucket (urls, the item sinks: the commit bucket
+``pmod(host_bucket, n_commit_buckets)``; urls_seen and the bloom
+sidecar: the host bucket). The epoch therefore knows on the driver,
+from its due set and its discovered links, which buckets each sink
+touches, and every sink reads and writes only those.
 """
 
 from __future__ import annotations
 
 import time
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -54,6 +65,7 @@ from scrapetition_spark.schemas import (
     ARTICLES,
     COMMENTS,
     CRAWL_METRICS,
+    CRAWL_METRICS_BUCKETS,
     UNIQUE_KEYS,
     URL_EDGES,
     URLS,
@@ -97,9 +109,7 @@ class CrawlEngine:
     ):
         self.spark = spark
         if cfg.table_names:
-            from scrapetition_spark.sources.catalog import RenamedCatalog
-
-            catalog = RenamedCatalog(catalog, cfg.table_names)
+            catalog = Catalog(catalog.spark, catalog.root, cfg.table_names)
         self.cat = catalog
         self.cfg = cfg
         self.documents = documents
@@ -118,6 +128,7 @@ class CrawlEngine:
         )
         self.fetch_seq_base = 0
         self._sidecar_checked = False
+        self._fallback_buckets: dict[str, int] | None = None
         # first epoch of THIS run: visit_again (-a) ignores seen rows
         # from epochs before it (≙ runScrapers urls [] — Main.hs:246
         # starts the run's seen set empty; within-run dedup stays)
@@ -174,12 +185,61 @@ class CrawlEngine:
     def _seen_bucket_spec(self) -> dict:
         return {"n_host_buckets": self.cfg.n_host_buckets}
 
+    def _commit_spec(self) -> dict:
+        """Bucket spec of urls and the item sinks."""
+        return {
+            "n_commit_buckets": self.cfg.n_commit_buckets,
+            "n_host_buckets": self.cfg.n_host_buckets,
+        }
+
+    def _commit_bucket(self, host: F.Column) -> F.Column:
+        """Commit bucket of a host: the bucket of urls and of the item
+        sinks. Host buckets fold into ``n_commit_buckets`` of them."""
+        return F.pmod(
+            host_bucket(host, self.cfg.n_host_buckets),
+            F.lit(self.cfg.n_commit_buckets),
+        )
+
+    def _fallback_bucket(self, fallback: str) -> int:
+        """Commit bucket of a literal domain ``_domain_or`` stores for
+        an item whose page URL has no host. One tiny JVM job, once per
+        engine."""
+        if self._fallback_buckets is None:
+            self._fallback_buckets = self.spark.range(1).select(*[
+                self._commit_bucket(F.lit(d)).alias(d) for d in ("UNKOWN", "UNKNOWN")
+            ]).first().asDict()
+        return self._fallback_buckets[fallback]
+
+    def _read_urls(self) -> tuple[DataFrame, bool]:
+        """The whole urls table, and whether it is stored in the live
+        layout. If it is not (plain files from an older catalog, or
+        another bucket spec), its ``host_bucket`` column is recomputed
+        under the live ``n_host_buckets``, and the epoch's commit
+        rewrites the whole table."""
+        urls = self.cat.read("urls", URLS)
+        live = self.cat.prunable_buckets("urls", self._commit_spec())
+        if not live:
+            urls = urls.withColumn(
+                "host_bucket",
+                host_bucket(F.col("host"), self.cfg.n_host_buckets).cast("int"),
+            )
+        return urls, live
+
+    def _commit_urls(self, out: DataFrame, touched: list[int] | None) -> None:
+        """The one write of ``urls``: a partition-scoped overwrite of the
+        ``touched`` commit buckets with ``out``'s rows (the whole table
+        when None), bucket spec recorded after the commit."""
+        self.cat.overwrite_partitions(
+            "urls", out, F.pmod(F.col("host_bucket"), F.lit(self.cfg.n_commit_buckets)),
+            touched, self._commit_spec(),
+        )
+
     def _read_seen(self, urls: DataFrame) -> tuple[DataFrame, list[int] | None]:
         """The epoch's seen frame for the due-set anti-join, and the
         frontier's active host buckets (None when nothing needs them).
-        Once urls_seen has converted to the bucketed layout
-        (append_bucketed past the size threshold), read ONLY the
-        buckets the active frontier touches: the anti-join matches on
+        When urls_seen is stored in the live bucket layout (always,
+        except for a catalog written under another spec), read ONLY
+        the buckets the active frontier touches: the anti-join matches on
         url equality, equal urls share a host bucket, so seen rows in
         never-due buckets cannot match any candidate. The bloom probe
         reads the same buckets of its sidecar. The distinct-bucket scan
@@ -233,17 +293,7 @@ class CrawlEngine:
         seeds and schedule them. Seeds carry lineage epoch -1 so they
         sort before (FIFO) / after (LIFO) every discovery."""
         rows = [(u, i) for i, u in enumerate(urls)]
-        df = local_df(self.spark, rows, "target string, pos long").select(
-            "target",
-            F.lit(-1).alias("discovery_epoch"),
-            F.lit(-1).cast("long").alias("source_fetch_seq"),
-            F.lit(-1).alias("dispatcher_idx"),
-            F.col("pos"),
-        )
-        self.cat.merge_insert(
-            "urls", self._url_row(df, scheduled=True), UNIQUE_KEYS["urls"], URLS,
-            order_cols=["pos"],
-        )
+        self._seed(local_df(self.spark, rows, "target string, pos long"))
 
     def seed_frame(self, targets: DataFrame) -> None:
         """Distributed seeding: schedule a whole DataFrame of URLs
@@ -253,29 +303,40 @@ class CrawlEngine:
         single-partition sort); within-host pop order stays
         deterministic, cross-host seed order is immaterial to the
         politeness queue."""
-        df = targets.select(
+        self._seed(targets.select(
+            "target",
+            F.pmod(F.xxhash64("target"), F.lit(1 << 31)).cast("int").alias("pos"),
+        ))
+
+    def _seed(self, targets: DataFrame) -> None:
+        """INSERT OR IGNORE the ``targets`` (first ``pos`` per target
+        wins) into urls as scheduled rows. Seeding rewrites the whole
+        table, so a catalog in another layout leaves it in the live
+        one."""
+        first = targets.groupBy("target").agg(F.min("pos").alias("pos")).select(
             "target",
             F.lit(-1).alias("discovery_epoch"),
             F.lit(-1).cast("long").alias("source_fetch_seq"),
             F.lit(-1).alias("dispatcher_idx"),
-            F.pmod(F.xxhash64("target"), F.lit(1 << 31)).cast("int").alias("pos"),
+            "pos",
         )
-        self.cat.merge_insert(
-            "urls", self._url_row(df, scheduled=True), UNIQUE_KEYS["urls"], URLS,
-            order_cols=["pos"],
+        urls, _ = self._read_urls()
+        new = self._url_row(first, scheduled=True).join(
+            urls.select("url"), ["url"], "left_anti"
         )
+        self._commit_urls(urls.unionByName(new), None)
 
     def resume_not_seen(self) -> None:
         """≙ ``crawl (NotSeenFromDB ...)`` (Main.hs:247-250; S11):
         schedule every known URL with first_seen IS NULL."""
-        urls = self.cat.read("urls", URLS)
+        urls, _ = self._read_urls()
         rescheduled = urls.withColumn(
             "in_frontier",
             F.when(F.col("first_seen").isNull(), F.lit(1)).otherwise(
                 F.col("in_frontier")
             ),
         )
-        self.cat.overwrite("urls", rescheduled)
+        self._commit_urls(rescheduled, None)
 
     def _hint(self, df: DataFrame, n_rows: int) -> DataFrame:
         """Size-gated broadcast hint (VERDICT r03 #1): hint only while
@@ -310,7 +371,7 @@ class CrawlEngine:
             return out
 
         cfg = self.cfg
-        urls = self.cat.read("urls", URLS)
+        urls, urls_live = self._read_urls()
         seen, active = self._read_seen(urls)
         if cfg.visit_again:
             # -a (Main.hs:89-91, seen=[] at :246): drop persisted seen
@@ -322,21 +383,24 @@ class CrawlEngine:
             urls, seen, self._seen_filter(active), cfg, self.fetch_seq_base,
             self.robots,
         )
-        # due_buckets: the host buckets with due URLs, known on the
-        # driver without another job (the bloom merge's touched set)
+        # due_counts: due URLs per host bucket, known on the driver
+        # without another job — every sink's touched buckets and the
+        # per-bucket metrics derive from it
         if cfg.sequential:
             due = due.select(
                 "url", "host", "host_bucket", "fetch_seq"
             ).localCheckpoint()
-            due_buckets = [r["host_bucket"] for r in due.select("host_bucket").collect()]
-            n_due = len(due_buckets)
+            due_counts = dict(Counter(
+                r["host_bucket"] for r in due.select("host_bucket").collect()
+            ))
+            n_due = sum(due_counts.values())
         else:
             # materialize the due set once, then number it in parallel
             # (per-bucket windows + dense offsets — no global sort)
             raw = due.select(
                 "url", "host", "host_bucket", *LINEAGE_COLS
             ).localCheckpoint()
-            due, n_due, due_buckets = assign_fetch_seq(raw, cfg, self.fetch_seq_base)
+            due, n_due, due_counts = assign_fetch_seq(raw, cfg, self.fetch_seq_base)
             due = due.select(
                 "url", "host", "host_bucket", "fetch_seq"
             ).localCheckpoint()
@@ -429,8 +493,22 @@ class CrawlEngine:
 
         kind_idx = {d.item_kind: i for i, d in enumerate(dispatchers) if d.item_kind}
 
+        # Touched commit buckets. An item row's page URL is due, so its
+        # domain is a due host or the _domain_or literal; an edge's
+        # source is a due page.
+        ncb = cfg.n_commit_buckets
+        due_commit = {b % ncb for b in due_counts}
+
+        def by_domain(fallback: str) -> tuple[F.Column, list[int]]:
+            return self._commit_bucket(F.col("domain")), sorted(
+                due_commit | {self._fallback_bucket(fallback)}
+            )
+
         n_discovered = 0
-        sink_tasks: list[tuple] = []  # executed concurrently below
+        disc_counts: dict[int, int] = {}
+        # (table, batch, keys, schema, order, bucket expr, touched
+        # buckets), executed concurrently below
+        sink_tasks: list[tuple] = []
         # ---- item sinks (S8) — insertion order (fetch_seq,
         # dispatcher_idx, pos) ≙ the reference's sequential executeMany.
         if "comment" in kind_idx:
@@ -447,7 +525,7 @@ class CrawlEngine:
             )
             sink_tasks.append(
                 ("comments", batch, UNIQUE_KEYS["comments"], COMMENTS,
-                 ["fetch_seq", "dispatcher_idx", "pos"])
+                 ["fetch_seq", "dispatcher_idx", "pos"], *by_domain("UNKOWN"))
             )
 
         user_parts = []
@@ -473,7 +551,7 @@ class CrawlEngine:
             )
             sink_tasks.append(
                 ("users", batch, UNIQUE_KEYS["users"], USERS,
-                 ["fetch_seq", "dispatcher_idx", "pos"])
+                 ["fetch_seq", "dispatcher_idx", "pos"], *by_domain("UNKNOWN"))
             )
 
         if "vote" in kind_idx:
@@ -487,7 +565,7 @@ class CrawlEngine:
             )
             sink_tasks.append(
                 ("votes", batch, UNIQUE_KEYS["votes"], VOTES,
-                 ["fetch_seq", "dispatcher_idx", "pos"])
+                 ["fetch_seq", "dispatcher_idx", "pos"], *by_domain("UNKOWN"))
             )
 
         article_parts = []
@@ -510,9 +588,12 @@ class CrawlEngine:
                 F.lit(cfg.scraper_name).alias("scraper"),
                 "fetch_seq", "dispatcher_idx", "pos",
             )
+            # keyed by canonical alone: bucketed by canonical's host,
+            # which the epoch does not know, so the MERGE collects it
             sink_tasks.append(
                 ("articles", batch, UNIQUE_KEYS["articles"], ARTICLES,
-                 ["fetch_seq", "dispatcher_idx", "pos"])
+                 ["fetch_seq", "dispatcher_idx", "pos"],
+                 self._commit_bucket(url_domain(F.col("canonical"))), None)
             )
 
         # ---- discovered URLs per dispatcher (C4): mkAbsolute + nub +
@@ -541,19 +622,26 @@ class CrawlEngine:
                 "target",
             ).localCheckpoint()
             td1 = time.time()
-            n_discovered = disc.count()
+            # discovered targets per host bucket: the urls commit's
+            # touched buckets and the per-bucket metrics
+            disc_counts = {
+                r["b"]: r["n"]
+                for r in disc.groupBy(
+                    host_bucket(url_domain(F.col("target")), cfg.n_host_buckets)
+                    .alias("b")
+                ).agg(F.count("*").alias("n")).collect()
+            }
+            n_discovered = sum(disc_counts.values())
             if debug:
-                # sub-attribution for the saturation probes (VERDICT
-                # r03 #4): ckpt = span-array URL extraction + lineage
-                # join + block-manager write (one action); count reads
-                # the checkpoint back
+                # sub-attribution for the saturation probes: ckpt =
+                # span-array URL extraction + block-manager write (one
+                # action); buckets reads the checkpoint back
                 print(
                     f"[epoch {epoch}] disc ckpt={td1 - td0:.1f}s "
-                    f"count={time.time() - td1:.1f}s", flush=True,
+                    f"buckets={time.time() - td1:.1f}s", flush=True,
                 )
         mark("discovered")
 
-        urls_now = self.cat.read("urls", URLS)
         if disc is not None and n_discovered > 0:
             # S7: link-graph edges (dedup on (source,target), URL.hs:94)
             edges = disc.select(
@@ -563,7 +651,8 @@ class CrawlEngine:
                 "source_fetch_seq", "dispatcher_idx", "pos",
             )
             sink_tasks.append(
-                ("url_edges", edges, UNIQUE_KEYS["url_edges"], URL_EDGES, _URL_ORDER)
+                ("url_edges", edges, UNIQUE_KEYS["url_edges"], URL_EDGES, _URL_ORDER,
+                 self._commit_bucket(url_domain(F.col("source"))), sorted(due_commit))
             )
 
             # follow gates + within-epoch union dedup → frontier rows.
@@ -611,7 +700,7 @@ class CrawlEngine:
             if not self.cat.exists("bloom_sidecar"):
                 self.cat.overwrite_partitions("bloom_sidecar", delta, "bucket", None)
                 return
-            touched = sorted(set(due_buckets))
+            touched = sorted(due_counts)
             old = self.cat.read_buckets("bloom_sidecar", BLOOM_SIDECAR, touched)
             merged = self.pbloom.or_merge(old.unionByName(delta))
             self.cat.overwrite_partitions("bloom_sidecar", merged, "bucket", touched)
@@ -623,59 +712,37 @@ class CrawlEngine:
             # the pool's other jobs can't race the snapshot id.
             self.cat.append_bucketed(
                 "urls_seen", seen_batch, self._seen_bucket_expr(),
-                self._seen_bucket_spec(), cfg.seen_bucket_min_bytes,
+                self._seen_bucket_spec(),
             )
             snap = self.cat.head("urls_seen")
-            due_b = due.groupBy("host_bucket").agg(F.count("*").alias("urls_due"))
-            if disc is not None and n_discovered > 0:
-                disc_b = disc.groupBy(
-                    host_bucket(
-                        url_domain(F.col("target")), cfg.n_host_buckets
-                    ).alias("host_bucket")
-                ).agg(F.count("*").alias("urls_discovered"))
-                bucket_m = due_b.join(disc_b, ["host_bucket"], "full_outer")
-            else:
-                bucket_m = due_b.withColumn(
-                    "urls_discovered", F.lit(None).cast("long")
-                )
+            rows = [
+                (epoch, b, due_counts.get(b, 0), disc_counts.get(b), snap)
+                for b in sorted(due_counts.keys() | disc_counts.keys())
+            ]
             self.cat.append(
                 "crawl_metrics_buckets",
-                bucket_m.select(
-                    F.lit(epoch).cast("int").alias("epoch"),
-                    F.col("host_bucket").cast("int"),
-                    F.coalesce(F.col("urls_due"), F.lit(0))
-                    .cast("long").alias("urls_due"),
-                    F.col("urls_discovered").cast("long"),
-                    F.lit(snap).cast("long").alias("snapshot_id"),
-                ),
+                local_df(self.spark, rows, CRAWL_METRICS_BUCKETS),
                 hint_partitions=1,
             )
             return snap
 
-        def _item_bucket(keys: list[str]) -> F.Column:
-            # key-hash commit bucket for the bucketed item-sink MERGE
-            # (catalog.merge_insert bucket_expr): deterministic from
-            # the UNIQUE key alone, so the same row always lands in —
-            # and the anti-join only ever scans — the same bucket
-            return F.pmod(
-                F.xxhash64(*[F.col(k) for k in keys]),
-                F.lit(cfg.n_item_buckets),
-            ).cast("int")
-
+        spec = self._commit_spec()
+        # a urls table in another layout is rewritten whole (None)
+        urls_touched = (
+            sorted(due_commit | {b % ncb for b in disc_counts}) if urls_live else None
+        )
         with ThreadPoolExecutor(max_workers=8) as pool:
             futs = [
                 pool.submit(
                     self.cat.merge_insert, tbl, batch, keys, schema, order,
-                    _item_bucket(keys),
-                    {"n_item_buckets": cfg.n_item_buckets},
-                    cfg.item_bucket_min_bytes,
+                    bucket, spec, touched,
                 )
-                for tbl, batch, keys, schema, order in sink_tasks
+                for tbl, batch, keys, schema, order, bucket, touched in sink_tasks
             ]
             futs.append(
                 pool.submit(
-                    self._rewrite_urls, urls_now, fetched, disc, followed,
-                    epoch, n_due,
+                    self._rewrite_urls, fetched, disc, followed, epoch, n_due,
+                    urls_touched,
                 )
             )
             snap_fut = pool.submit(_seen_and_bucket_metrics)
@@ -702,13 +769,17 @@ class CrawlEngine:
 
     def _rewrite_urls(
         self,
-        urls: DataFrame,
         fetched: DataFrame,
         disc: DataFrame | None,
         followed: DataFrame | None,
         epoch: int,
         n_due: int,
+        touched: list[int] | None,
     ) -> None:
+        """S6 inserts + S9 seen-update + C3 frontier merge as one
+        partition-scoped commit of the ``touched`` commit buckets —
+        every bucket a fetched or discovered URL lands in; None
+        rewrites the whole table into the live layout."""
         now = F.current_timestamp()
         cfg = self.cfg
 
@@ -724,66 +795,10 @@ class CrawlEngine:
 
         n_followed = followed.count() if followed is not None else 0
 
-        # Commit planning: every row this epoch can change (fetched,
-        # discovered, followed) hashes to a commit bucket derivable
-        # from its URL. Policy, adaptive on the touch-set density:
-        # - SPARSE epoch (the 10^10-frontier steady state: activity
-        #   concentrated in few commit buckets): partition-scoped
-        #   commit — rewrite only touched buckets, carry the rest
-        #   forward; per-epoch cost O(epoch activity), not O(table)
-        #   (the quadratic-crawl scale-killer VERDICT r01 flagged).
-        # - DENSE epoch (small corpus, everything active — the local
-        #   bench shape): plain consolidated overwrite; a scoped
-        #   commit would rewrite everything anyway and pay an extra
-        #   repartition shuffle + per-bucket file fan-out for nothing.
-        # Transitions cost one full write; plain files hold rows of
-        # unknown buckets, so the first sparse epoch after any plain
-        # write consolidates with one full partitioned rewrite.
-        ncb = cfg.n_commit_buckets
-        commit_expr = F.pmod(F.col("host_bucket"), F.lit(ncb))
-        has_plain, parts = self.cat.partition_state("urls")
-
-        # The scoped-commit layout is only valid under the bucket spec
-        # it was written with: reopening with a different
-        # (n_commit_buckets, n_host_buckets) would derive touched
-        # buckets that disagree with the stored host_bucket column and
-        # silently drop/misroute rows. Persist the spec as a table
-        # property; on mismatch force ONE consolidating rewrite with
-        # host_bucket recomputed from the live config.
-        spec = {"n_commit_buckets": ncb, "n_host_buckets": cfg.n_host_buckets}
-        stored = self.cat.get_meta("urls").get("commit_spec")
-        spec_mismatch = self.cat.exists("urls") and stored != spec
-        if spec_mismatch:
-            urls = urls.withColumn(
-                "host_bucket",
-                host_bucket(F.col("host"), cfg.n_host_buckets).cast("int"),
-            )
-        if stored != spec:
-            self.cat.set_meta("urls", {**self.cat.get_meta("urls"),
-                                       "commit_spec": spec})
-        tb = fetched.select(F.col("url"))
-        if disc is not None:
-            tb = tb.unionByName(disc.select(F.col("target").alias("url")))
-        bucket_of = F.pmod(
-            host_bucket(url_domain(F.col("url")), cfg.n_host_buckets),
-            F.lit(ncb),
-        )
-        touched_set = {
-            r["b"] for r in tb.select(bucket_of.alias("b")).distinct().collect()
-        }
-        dense = len(touched_set) >= ncb * cfg.commit_dense_fraction
-        touched: list[int] | None = None
-        if spec_mismatch:
-            # consolidate the whole table under the live spec
-            commit_mode = "full_partitioned" if not dense else "plain"
-        elif dense:
-            commit_mode = "plain"
-        elif has_plain or not parts:
-            commit_mode = "full_partitioned"
+        if touched is None:
+            urls, _ = self._read_urls()
         else:
-            commit_mode = "scoped"
-            touched = sorted(touched_set)
-            urls = urls.filter(commit_expr.isin(touched))
+            urls = self.cat.read_buckets("urls", URLS, touched)
 
         # S6: discovered URLs always inserted (App.hs:89-90), even when
         # not followed (C6) or cross-domain (C7). First occurrence wins.
@@ -886,11 +901,7 @@ class CrawlEngine:
                 )
             out = out.unionByName(ins.select(*[fld.name for fld in URLS.fields]))
 
-        out = out.select(*[fld.name for fld in URLS.fields])
-        if commit_mode == "plain":
-            self.cat.overwrite("urls", out)
-        else:
-            self.cat.overwrite_partitions("urls", out, commit_expr, touched)
+        self._commit_urls(out.select(*[fld.name for fld in URLS.fields]), touched)
 
     # ------------------------------------------------------------------ run
 
@@ -912,14 +923,8 @@ class CrawlEngine:
                 break
             stats.append(st)
             if self.cfg.expire_keep_snapshots is not None:
-                # tables() yields PHYSICAL names; route expiry through
-                # the inner catalog, not the renaming view — a physical
-                # name that collides with a logical key (e.g.
-                # --items-table users) would be re-mapped and the wrong
-                # table expired.
-                phys = getattr(self.cat, "_inner", self.cat)
-                for t in phys.tables():
-                    phys.expire_snapshots(t, self.cfg.expire_keep_snapshots)
+                for t in self.cat.tables():
+                    self.cat.expire_snapshots(t, self.cfg.expire_keep_snapshots)
             if sleep and self.cfg.politeness_sec > 0:
                 remaining = self.cfg.politeness_sec - (time.time() - t0)
                 if remaining > 0:

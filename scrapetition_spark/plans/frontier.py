@@ -146,7 +146,7 @@ def plan_due(
 
 def assign_fetch_seq(
     due: DataFrame, cfg: CrawlConfig, fetch_seq_base: int
-) -> tuple[DataFrame, int, list[int]]:
+) -> tuple[DataFrame, int, dict[int, int]]:
     """Dense, deterministic ``fetch_seq`` over a wide-epoch due set
     WITHOUT a single-partition global sort: rows are numbered inside
     each host bucket (parallel windows — within-host order follows the
@@ -157,7 +157,8 @@ def assign_fetch_seq(
     fetched "simultaneously"; per-host order (the politeness
     invariant) stays exact. Call on a materialized (checkpointed) due
     frame so the size scan is cheap. Returns the numbered frame, its
-    row count and its host buckets (from the same size scan)."""
+    row count and its row count per host bucket (the same size
+    scan)."""
     key = order_key(cfg)
     w = Window.partitionBy("host_bucket").orderBy(*key)
     d = due.withColumn("__rn", F.row_number().over(w))
@@ -170,7 +171,7 @@ def assign_fetch_seq(
         offsets[b] = acc
         acc += n
     if not offsets:  # empty due set
-        return due.withColumn("fetch_seq", F.lit(None).cast("long")), 0, []
+        return due.withColumn("fetch_seq", F.lit(None).cast("long")), 0, {}
     spark = due.sparkSession
     from scrapetition_spark.session import local_df
 
@@ -188,7 +189,7 @@ def assign_fetch_seq(
         )
         .drop("__rn", "__off")
     )
-    return out, acc, list(offsets)
+    return out, acc, dict(sizes)
 
 
 def select_urls_where(

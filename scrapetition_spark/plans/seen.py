@@ -5,8 +5,8 @@ with ``elem`` (O(n) per probe, O(n²) per crawl —
 /root/reference/src/Network/Scrapetition/App.hs:69,107). At 10^10
 URLs that is impossible; the scalable design is:
 
-1. an append-only ``urls_seen`` table (exact truth, partitioned by
-   host bucket on a real deployment);
+1. an append-only ``urls_seen`` table (exact truth, bucketed by
+   host bucket);
 2. a bloom sidecar of one ``(bucket, bits, n_keys)`` row per host
    bucket (``PartitionedBloom``), built and OR-merged by Spark's own
    bitmap aggregates: every key's k bit positions are native

@@ -16,11 +16,10 @@ parquet + JSON manifests:
   reads at HEAD or at any snapshot id (resume/time travel);
 - ``merge_insert`` = MERGE WHEN NOT MATCHED INSERT: batch-internal
   first-occurrence dedup + ``left_anti`` against the live table.
-  With a ``bucket_expr`` the table is stored bucketed by key hash
-  (≙ an Iceberg bucket-partitioned table) and the anti-join reads
-  ONLY the buckets the batch touches — per-epoch MERGE cost is
-  O(touched buckets), not O(table), which is what keeps N append
-  epochs from going quadratic on the read side at crawl scale.
+  With a ``bucket_expr`` the table is stored in buckets derived from
+  its key (≙ an Iceberg bucket-partitioned table) and the anti-join
+  reads ONLY the buckets the batch touches — per-epoch MERGE cost is
+  O(touched buckets), not O(table).
   (The seen-date upsert S9 needs no separate merge_update: it is
   folded into the crawl engine's single urls rewrite.)
 
@@ -42,17 +41,14 @@ from pyspark.sql.types import StructType
 
 from scrapetition_spark.session import local_df
 
-
-def _env_int(name: str, default: int) -> int:
-    raw = os.environ.get(name)
-    if raw is None:
-        return int(default)
-    try:
-        return int(raw)
-    except ValueError as e:
-        raise ValueError(
-            f"environment override {name}={raw!r} is not an integer"
-        ) from e
+# Small-file control: each commit coalesces to at most this many files
+# (a partitioned commit: one file per bucket, over twice as many write
+# tasks). Same role as Iceberg's write.target-file-size bin-packing —
+# without it every commit emits shuffle-partition-count tiny files,
+# which bloats the manifest and serializes on filesystem contention
+# (measured: a 64-file parquet write is 2.7× slower than 8-file at 32
+# local threads).
+WRITE_PARTITIONS = 8
 
 
 def _dir_bytes(path: str) -> int:
@@ -95,43 +91,27 @@ class Snapshot:
     # member dir → on-disk bytes, recorded AT WRITE TIME and carried
     # forward with the dir (≙ Iceberg's total-files-size snapshot
     # summary): table_bytes sums these instead of re-walking the data
-    # dir on every sub-threshold MERGE (ADVICE r03).
+    # dir on every call.
     sizes: dict[str, int]
 
 
 class Catalog:
-    def __init__(self, spark: SparkSession, root: str, write_partitions: int = 8):
+    def __init__(
+        self, spark: SparkSession, root: str, names: dict[str, str] | None = None
+    ):
         self.spark = spark
         self.root = root
-        # Small-file control: epoch batches are modest (≤ a few M
-        # rows), so each commit coalesces to at most this many files.
-        # Same role as Iceberg's write.target-file-size bin-packing —
-        # without it every commit emits shuffle-partition-count tiny
-        # files, which (a) bloats the manifest at 10^10-URL scale and
-        # (b) serializes on filesystem contention (measured: a 64-file
-        # parquet write is 2.7× slower than 8-file at 32 local
-        # threads). Raise for genuinely huge single commits.
-        self.write_partitions = _env_int(
-            "SPARK_GRAFT_WRITE_PARTITIONS", write_partitions
-        )
-        # parsed ONCE at construction so a malformed env override
-        # fails here with a clear message, not mid-crawl inside a
-        # sink thread-pool task (ADVICE r03)
-        self.bucket_min_bytes_default = _env_int(
-            "SPARK_GRAFT_BUCKET_MIN_BYTES", 256 << 20
-        )
-        # plain (non-bucketed) member-dir cap: a sub-threshold MERGE
-        # converts to the bucketed layout when the table accumulates
-        # more dirs than this, even below the byte threshold — long
-        # sub-threshold crawls would otherwise grow O(epochs) dirs
-        # that every anti-join and manifest carry re-touches
-        self.max_plain_dirs = _env_int("SPARK_GRAFT_MAX_PLAIN_DIRS", 64)
+        # logical→physical table names (≙ the reference's
+        # --items-table / --users-table / --voting-table overrides,
+        # app/Main.hs:117-131): callers address logical names
+        # ("comments", "users", "votes"); unmapped names are physical.
+        self.names = dict(names or {})
         os.makedirs(root, exist_ok=True)
 
     # ----- snapshot plumbing ------------------------------------------------
 
     def _tdir(self, table: str) -> str:
-        return os.path.join(self.root, table)
+        return os.path.join(self.root, self.names.get(table, table))
 
     def _head_path(self, table: str) -> str:
         return os.path.join(self._tdir(table), "_HEAD")
@@ -143,6 +123,12 @@ class Catalog:
                 return int(f.read().strip())
         except FileNotFoundError:
             return -1
+
+    def _head_snapshot(self, table: str) -> Snapshot:
+        """The HEAD snapshot; an empty one if the table has none."""
+        if not self.exists(table):
+            return Snapshot(-1, [], {}, {})
+        return self._snapshot(table, self.head(table))
 
     def _snapshot(self, table: str, snapshot_id: int) -> Snapshot:
         with open(os.path.join(self._tdir(table), f"snap-{snapshot_id}.json")) as f:
@@ -180,15 +166,14 @@ class Catalog:
     ) -> list[str]:
         """Write df as new parquet files inside the table's data dir;
         returns their paths. Existing files are never touched.
-        ``hint_partitions`` lets a caller that knows a commit is
-        genuinely large raise the file fan-out above the configured
-        floor (the sandbox proxy for Iceberg's size-based
-        bin-packing; probing df.rdd for its partition count here
-        would force AQE query-stage execution — a hidden double-run
-        of the whole plan — so sizing is explicit, not inferred)."""
+        ``hint_partitions`` lets a caller that knows a commit's size
+        set the file fan-out in place of ``WRITE_PARTITIONS`` (probing
+        df.rdd for its partition count here would force AQE
+        query-stage execution — a hidden double-run of the whole plan
+        — so sizing is explicit, not inferred)."""
         part = f"part-{uuid.uuid4().hex[:12]}"
         out = os.path.join(self._tdir(table), "data", part)
-        n = hint_partitions if hint_partitions else self.write_partitions
+        n = hint_partitions if hint_partitions else WRITE_PARTITIONS
         df.coalesce(n).write.mode("overwrite").parquet(out)
         return [out]
 
@@ -239,18 +224,8 @@ class Catalog:
         return self._append_files(table, self._write_files(table, df, hint_partitions))
 
     def _append_files(self, table: str, new_files: list[str]) -> int:
-        prev_files: list[str] = []
-        prev_parts: dict[str, list[str]] = {}
-        prev_sizes: dict[str, int] = {}
-        if self.exists(table):
-            prev = self._snapshot(table, self.head(table))
-            prev_files, prev_parts, prev_sizes = prev.files, prev.parts, prev.sizes
-        return self._commit(
-            table,
-            prev_files + new_files,
-            parts=prev_parts,
-            carry_sizes=prev_sizes,
-        )
+        prev = self._head_snapshot(table)
+        return self._commit(table, prev.files + new_files, prev.parts, prev.sizes)
 
     def append_skip_empty(self, table: str, df: DataFrame) -> int:
         """Append ``df``, but if the write produced zero rows, retract
@@ -276,40 +251,65 @@ class Catalog:
     def empty_commit(self, table: str) -> int:
         """Advance the snapshot without data change (epoch with no
         writes keeps snapshot ids aligned with epochs if desired)."""
-        if self.exists(table):
-            prev = self._snapshot(table, self.head(table))
-            return self._commit(table, prev.files, parts=prev.parts,
-                                carry_sizes=prev.sizes)
-        return self._commit(table, [])
+        prev = self._head_snapshot(table)
+        return self._commit(table, prev.files, prev.parts, prev.sizes)
 
     def table_bytes(self, table: str, snap: "Snapshot | None" = None) -> int:
         """On-disk bytes of the member files at HEAD, summed from the
         per-dir byte totals the manifest records at write time (≙
         Iceberg's total-files-size snapshot summary) — no os.walk of
-        the data dir per call (ADVICE r03: the walk grew with file
-        accumulation and every sub-threshold MERGE paid it). Dirs
-        from manifests predating the summary fall back to one stat
-        walk. Callers that already hold the HEAD ``Snapshot`` pass it
-        in to skip a redundant manifest parse."""
-        if snap is None:
-            if not self.exists(table):
-                return 0
-            snap = self._snapshot(table, self.head(table))
+        the data dir per call. Dirs from manifests predating the
+        summary fall back to one stat walk. Callers that already hold
+        the HEAD ``Snapshot`` pass it in to skip a redundant manifest
+        parse."""
+        snap = snap or self._head_snapshot(table)
         return sum(
             snap.sizes[d] if d in snap.sizes else _dir_bytes(d)
             for d in self._paths(snap)
         )
 
     def partition_state(self, table: str) -> tuple[bool, dict[str, list[str]]]:
-        """(has_plain_files, parts) at HEAD — callers use this to
-        decide between a partition-scoped commit and a full rewrite
-        (plain appended files hold rows of unknown buckets, so the
-        first partition-scoped commit after any plain write must
-        consolidate everything)."""
-        if not self.exists(table):
-            return False, {}
-        snap = self._snapshot(table, self.head(table))
+        """(has_plain_files, parts) at HEAD. Plain appended files hold
+        rows of unknown buckets, so a table holding any is rewritten
+        once into buckets before its next partition-scoped commit."""
+        snap = self._head_snapshot(table)
         return bool(snap.files), snap.parts
+
+    def _write_partitioned(
+        self, table: str, df: DataFrame, part_col: str | F.Column
+    ) -> tuple[str, set[str]]:
+        """Write ``df`` into one new data dir holding a ``__part=<k>``
+        subdir per bucket ``k`` it has rows in; returns the dir and
+        those buckets. A write without rows leaves no dir behind."""
+        part = f"part-{uuid.uuid4().hex[:12]}"
+        out = os.path.join(self._tdir(table), "data", part)
+        expr = F.col(part_col) if isinstance(part_col, str) else part_col
+        # repartition BY the bucket → exactly one file per bucket
+        # (partitionBy alone would emit one per (task, bucket)); __part
+        # is hoisted into directory names and stripped from the data
+        # files, so a derived bucket expression never pollutes the
+        # table schema
+        (
+            df.withColumn("__part", expr)
+            .repartition(2 * WRITE_PARTITIONS, F.col("__part"))
+            .write.partitionBy("__part")
+            .mode("overwrite")
+            .parquet(out)
+        )
+        found = {d.split("=", 1)[1] for d in os.listdir(out) if d.startswith("__part=")}
+        if not found:
+            shutil.rmtree(out, ignore_errors=True)
+        return out, found
+
+    def _record_spec(self, table: str, bucket_spec: dict | None) -> None:
+        """Store ``bucket_spec`` as the table's layout property. Called
+        only once the layout it describes is committed: a crash in
+        between leaves the old spec, so the mismatch is detected again
+        and the table rewritten again — never pruned under a spec its
+        files were not written with."""
+        meta = self.get_meta(table)
+        if bucket_spec is not None and meta.get("bucket_spec") != bucket_spec:
+            self.set_meta(table, {**meta, "bucket_spec": bucket_spec})
 
     def overwrite_partitions(
         self,
@@ -317,46 +317,23 @@ class Catalog:
         df: DataFrame,
         part_col: str | F.Column,
         touched: list[int] | None = None,
+        bucket_spec: dict | None = None,
     ) -> int:
         """Partition-scoped overwrite (≙ Iceberg's dynamic partition
-        overwrite): replace only the ``touched`` commit buckets with
-        ``df``'s rows, carrying every other bucket's files forward
-        UNCHANGED — per-epoch commit cost is O(touched data), not
-        O(table) (the quadratic-crawl scale-killer VERDICT r01
-        flagged). ``touched=None`` = full rewrite (also required when
-        plain appended files exist — guarded below)."""
-        prev = (
-            self._snapshot(table, self.head(table))
-            if self.exists(table)
-            else Snapshot(-1, [], {}, {})
-        )
+        overwrite): replace only the ``touched`` buckets with ``df``'s
+        rows, carrying every other bucket's files forward UNCHANGED —
+        per-epoch commit cost is O(touched data), not O(table).
+        ``touched=None`` = full rewrite (also required when plain
+        appended files exist — guarded below). ``bucket_spec`` is
+        recorded after the commit."""
+        prev = self._head_snapshot(table)
         if touched is not None and prev.files:
             raise ValueError(
                 f"{table} has non-partitioned files; a partition-scoped "
                 "commit would drop their untouched-bucket rows — pass "
                 "touched=None to consolidate first"
             )
-        part = f"part-{uuid.uuid4().hex[:12]}"
-        out = os.path.join(self._tdir(table), "data", part)
-        expr = F.col(part_col) if isinstance(part_col, str) else part_col
-        # repartition BY the commit bucket → exactly one file per
-        # bucket (partitionBy alone would emit one per (task, bucket));
-        # __part is hoisted into directory names and stripped from the
-        # data files, so a derived bucket expression never pollutes
-        # the table schema
-        n = max(1, min(self.write_partitions * 2, 64))
-        (
-            df.withColumn("__part", expr)
-            .repartition(n, F.col("__part"))
-            .write.partitionBy("__part")
-            .mode("overwrite")
-            .parquet(out)
-        )
-        found = {
-            d.split("=", 1)[1]
-            for d in os.listdir(out)
-            if d.startswith("__part=")
-        }
+        out, found = self._write_partitioned(table, df, part_col)
         if touched is None:
             parts = {k: [os.path.join(out, f"__part={k}")] for k in sorted(found)}
         else:
@@ -366,17 +343,17 @@ class Catalog:
                 parts[k] = (
                     [os.path.join(out, f"__part={k}")] if k in found else []
                 )
-        return self._commit(table, [], parts=parts, carry_sizes=prev.sizes)
+        sid = self._commit(table, [], parts=parts, carry_sizes=prev.sizes)
+        self._record_spec(table, bucket_spec)
+        return sid
 
     def read_buckets(
         self, table: str, schema: StructType, buckets: list[int]
     ) -> DataFrame:
-        """Read only the given commit buckets (plus any non-bucketed
-        plain files, whose rows belong to unknown buckets) — the
+        """Read only the given buckets (plus any non-bucketed plain
+        files, whose rows belong to unknown buckets) — the
         partition-pruned scan behind the bucketed MERGE."""
-        if not self.exists(table):
-            return local_df(self.spark, [], schema)
-        snap = self._snapshot(table, self.head(table))
+        snap = self._head_snapshot(table)
         paths = list(snap.files)
         for b in buckets:
             paths += snap.parts.get(str(b), [])
@@ -385,36 +362,26 @@ class Catalog:
         return self.spark.read.parquet(*paths)
 
     def append_partitions(
-        self, table: str, df: DataFrame, part_col: str | F.Column
+        self,
+        table: str,
+        df: DataFrame,
+        part_col: str | F.Column,
+        bucket_spec: dict | None = None,
     ) -> int:
         """Bucketed append: write ``df``'s rows into per-bucket data
         dirs and ADD them to each bucket's member list — existing
         files of every bucket are carried forward verbatim (≙ an
         Iceberg append to a bucket-partitioned table: new data files,
-        manifests of old ones reused)."""
-        prev = (
-            self._snapshot(table, self.head(table))
-            if self.exists(table)
-            else Snapshot(-1, [], {}, {})
-        )
-        part = f"part-{uuid.uuid4().hex[:12]}"
-        out = os.path.join(self._tdir(table), "data", part)
-        expr = F.col(part_col) if isinstance(part_col, str) else part_col
-        n = max(1, min(self.write_partitions * 2, 64))
-        (
-            df.withColumn("__part", expr)
-            .repartition(n, F.col("__part"))
-            .write.partitionBy("__part")
-            .mode("overwrite")
-            .parquet(out)
-        )
-        found = {
-            d.split("=", 1)[1] for d in os.listdir(out) if d.startswith("__part=")
-        }
+        manifests of old ones reused). ``bucket_spec`` is recorded
+        after the commit."""
+        prev = self._head_snapshot(table)
+        out, found = self._write_partitioned(table, df, part_col)
         parts = {k: list(v) for k, v in prev.parts.items()}
         for k in sorted(found):
             parts.setdefault(k, []).append(os.path.join(out, f"__part={k}"))
-        return self._commit(table, prev.files, parts, carry_sizes=prev.sizes)
+        sid = self._commit(table, prev.files, parts, carry_sizes=prev.sizes)
+        self._record_spec(table, bucket_spec)
+        return sid
 
     def compact_buckets(self, table: str, max_files: int = 16) -> int | None:
         """Fold any bucket whose member-dir list exceeds ``max_files``
@@ -422,9 +389,7 @@ class Catalog:
         Iceberg rewrite_data_files scoped to hot partitions). Reads
         ONLY the overfull buckets. Returns the new snapshot id, or
         None if nothing needed compaction."""
-        if not self.exists(table):
-            return None
-        snap = self._snapshot(table, self.head(table))
+        snap = self._head_snapshot(table)
         over = {k: v for k, v in snap.parts.items() if len(v) > max_files}
         if not over:
             return None
@@ -448,35 +413,29 @@ class Catalog:
         order_cols: list[str] | None = None,
         bucket_expr: F.Column | None = None,
         bucket_spec: dict | None = None,
-        bucket_min_bytes: int | None = None,
+        touched: list[int] | None = None,
     ) -> int:
         """MERGE ... WHEN NOT MATCHED THEN INSERT (≙ INSERT OR IGNORE,
         Sql.hs:19-105). Batch-internal duplicates collapse to the
         first occurrence in ``order_cols`` order (the reference's
         insertion order ≙ executeMany sequencing); existing rows win.
 
-        With ``bucket_expr`` (a deterministic int expression over the
-        key columns) the table lives in key-hash buckets and the MERGE
-        is bucket-pruned: the anti-join scans only the buckets the
-        batch touches, and the insert appends per-bucket files without
-        rewriting anything — per-epoch cost O(touched buckets), never
-        O(table). This is the scale path for the item/edge sinks
-        (VERDICT r02: the whole-table ``self.read`` here was the last
-        quadratic in the epoch loop).
+        Without ``bucket_expr`` the table is a plain file list and the
+        anti-join reads all of it (the generic insert of the streaming
+        sink).
 
-        The bucketed layout is ADAPTIVE (``bucket_min_bytes``,
-        default env SPARK_GRAFT_BUCKET_MIN_BYTES or 256 MiB): while
-        the table is smaller than the threshold the MERGE takes the
-        plain path — one anti-join job + a coalesced append, no batch
-        checkpoint, no touched-bucket job, no partitioned shuffle
-        write — because pruning a small table saves nothing and the
-        bucket bookkeeping costs ~3 Spark jobs per sink per epoch
-        (measured: first-epoch sinks 126.7 s vs 47.8 s at local[32]
-        on the 2.1M-URL scaling job when bucketing from birth). The
-        first MERGE after the table crosses the threshold pays one
-        consolidating rewrite, then every later epoch is pruned —
-        the long-crawl quadratic stays dead. Pass 0 to bucket from
-        birth (tests), or None for the default."""
+        With ``bucket_expr`` (a deterministic int expression over the
+        key columns, so a key always lands in the same bucket) the
+        table is bucketed from its first write and the MERGE is
+        bucket-pruned: the anti-join reads only the ``touched``
+        buckets and the insert appends per-bucket files, so one MERGE
+        costs O(touched buckets), never O(table). ``touched`` must
+        cover every bucket the batch has rows in. A caller that knows
+        them (the crawl epoch, from its due set) passes them; else
+        they are collected from the batch, for one batch checkpoint
+        and one distinct-bucket job. A table stored in another layout
+        — plain files, or buckets under another ``bucket_spec`` — is
+        first rewritten once into this one."""
         cols = [f.name for f in schema.fields]
         if order_cols:
             # first-occurrence-in-order dedup as a hash aggregate
@@ -492,89 +451,40 @@ class Catalog:
             )
         else:
             batch = batch.select(*cols).dropDuplicates(keys)
-        def plain_merge() -> int:
+
+        if bucket_expr is None:
             existing = self.read(table, schema)
             # null-safe key comparison (eqNullSafe) — UNIQUE treats
             # NULLs as distinct in SQLite, but our keys are never null
             # in practice.
             cond = [batch[k].eqNullSafe(existing[k]) for k in keys]
-            # a MERGE whose every key already exists (common for the
-            # sparse item sinks of a long crawl) commits NO new data
-            # dir — without this a sub-threshold sink grows one dir
-            # per epoch forever (ADVICE r03: an O(epochs) file-count
-            # quadratic of the same class the r03 bucketing removed).
-            # append_skip_empty reads emptiness from the written
-            # footers, so the anti-join executes exactly once.
-            fresh = batch.join(existing, cond, "left_anti")
-            return self.append_skip_empty(table, fresh)
-
-        if bucket_expr is None:
-            return plain_merge()
-
-        # ---- bucketed MERGE -------------------------------------------------
-        snap = (
-            self._snapshot(table, self.head(table)) if self.exists(table) else None
-        )
-        has_plain = bool(snap.files) if snap else False
-        parts = snap.parts if snap else {}
-        if bucket_min_bytes is None:
-            bucket_min_bytes = self.bucket_min_bytes_default
-        already_bucketed = snap is not None and bool(parts) and not has_plain
-        n_plain_dirs = len(snap.files) if snap else 0
-        if (
-            not already_bucketed
-            and self.table_bytes(table, snap) < bucket_min_bytes
-            and n_plain_dirs <= self.max_plain_dirs
-        ):
-            # small-table regime: whole-table anti-join is cheaper
-            # than bucket maintenance; no bucket_spec is recorded so
-            # the eventual conversion consolidates everything. The
-            # dir-count guard bounds the plain regime in FILES too:
-            # a crawl that stays under the byte threshold for
-            # thousands of epochs converts once max_plain_dirs is
-            # hit instead of accumulating O(epochs) dirs.
-            return plain_merge()
-        spec_pending = False
-        if bucket_spec is not None:
-            # bucket layout is only valid under the bucket count it
-            # was written with: reopening with a different spec would
-            # prune the anti-join to the WRONG buckets and re-insert
-            # existing keys. On mismatch, consolidate once under the
-            # live spec (same contract as the urls commit spec). The
-            # meta write is DEFERRED to the end of this call: a crash
-            # between "spec recorded" and "layout rewritten" would
-            # otherwise leave prunable_buckets approving an old-spec
-            # layout — meta must only ever claim a spec the committed
-            # layout actually has (the safe failure is re-detecting
-            # the mismatch and re-consolidating).
-            stored = self.get_meta(table).get("bucket_spec")
-            if self.exists(table) and stored != bucket_spec:
-                has_plain = True
-            spec_pending = stored != bucket_spec
-        if has_plain:
-            # legacy plain files hold rows of unknown buckets: one
-            # consolidating rewrite converts the table to bucketed
-            # layout (paid once, then every epoch is pruned)
-            self.overwrite_partitions(
-                table, self.read(table, schema), bucket_expr, None
+            # a MERGE whose every key already exists commits NO new
+            # data dir; append_skip_empty reads emptiness from the
+            # written footers, so the anti-join executes exactly once.
+            return self.append_skip_empty(
+                table, batch.join(existing, cond, "left_anti")
             )
-        # materialize the deduped batch once: the touched-bucket scan
-        # and the anti-join both read the checkpoint instead of
-        # re-running the (parse-derived) batch plan
-        batch = batch.withColumn("__mb", bucket_expr).localCheckpoint()
-        touched = sorted(
-            r["__mb"] for r in batch.select("__mb").distinct().collect()
-        )
+
+        if not self.exists(table):
+            return self.append_partitions(table, batch, bucket_expr, bucket_spec)
+        if not self.prunable_buckets(table, bucket_spec):
+            self.overwrite_partitions(
+                table, self.read(table, schema), bucket_expr, None, bucket_spec
+            )
+        if touched is None:
+            # materialize the deduped batch once: the touched-bucket
+            # scan and the anti-join both read the checkpoint instead
+            # of re-running the batch plan
+            batch = batch.localCheckpoint()
+            touched = sorted(
+                r["b"]
+                for r in batch.select(bucket_expr.alias("b")).distinct().collect()
+            )
         existing = self.read_buckets(table, schema, touched).select(*keys)
         cond = [batch[k].eqNullSafe(existing[k]) for k in keys]
-        fresh = batch.join(existing, cond, "left_anti").drop("__mb")
-        sid = self.append_partitions(table, fresh, bucket_expr)
-        sid = self.compact_buckets(table) or sid
-        if spec_pending:
-            self.set_meta(
-                table, {**self.get_meta(table), "bucket_spec": bucket_spec}
-            )
-        return sid
+        fresh = batch.join(existing, cond, "left_anti")
+        sid = self.append_partitions(table, fresh, bucket_expr, bucket_spec)
+        return self.compact_buckets(table) or sid
 
     def append_bucketed(
         self,
@@ -582,82 +492,30 @@ class Catalog:
         df: DataFrame,
         bucket_expr: F.Column,
         bucket_spec: dict,
-        bucket_min_bytes: int | None = None,
     ) -> int:
-        """Adaptive bucketed APPEND (no dedup — the append-only twin of
-        ``merge_insert``'s layout policy, same thresholds): plain
-        appends while the table is small (no partitioned-shuffle write,
-        no bucket bookkeeping — bucketing-from-birth measurably hurts,
-        see merge_insert); ONE consolidating partitioned rewrite on
-        crossing the byte/dir threshold; per-bucket appends plus
-        hot-bucket compaction after. Readers that know their touched
-        buckets can then ``read_buckets`` instead of scanning the whole
-        table — at 10^10 seen URLs the per-epoch seen scan is the last
-        O(table) read in the crawl loop, and bucket pruning makes it
-        O(frontier-active buckets).
+        """Bucketed APPEND (no dedup — the append-only twin of the
+        bucketed ``merge_insert``): per-bucket appends plus hot-bucket
+        compaction, so a reader that knows its buckets scans them with
+        ``read_buckets``, not the whole table. A table stored in
+        another layout — plain files, or buckets under another
+        ``bucket_spec`` — is rewritten once, together with ``df``,
+        into this one."""
+        if self.prunable_buckets(table, bucket_spec):
+            sid = self.append_partitions(table, df, bucket_expr, bucket_spec)
+            return self.compact_buckets(table) or sid
+        merged = self.read(table, df.schema).unionByName(df)
+        return self.overwrite_partitions(table, merged, bucket_expr, None, bucket_spec)
 
-        ``bucket_spec`` is persisted as a table property: a layout is
-        only prunable under the bucket parameters it was written with,
-        so a spec change forces one consolidating rewrite (same
-        contract as merge_insert / the urls commit spec)."""
-        if bucket_min_bytes is None:
-            bucket_min_bytes = self.bucket_min_bytes_default
-        snap = (
-            self._snapshot(table, self.head(table)) if self.exists(table) else None
-        )
-        has_plain = bool(snap.files) if snap else False
-        parts = snap.parts if snap else {}
-        already_bucketed = snap is not None and bool(parts) and not has_plain
-        stored = self.get_meta(table).get("bucket_spec")
-        # a table still in the plain regime has no stored spec (by the
-        # same design as merge_insert: nothing is recorded until the
-        # conversion, so it consolidates everything) — None means "not
-        # yet bucketed", NOT a mismatch. Treating it as one forced the
-        # bucketed conversion on the SECOND sub-threshold append,
-        # defeating the adaptive small-table policy.
-        spec_mismatch = (
-            snap is not None and stored is not None and stored != bucket_spec
-        )
-        n_plain_dirs = len(snap.files) if snap else 0
-        if (
-            not already_bucketed
-            and not spec_mismatch
-            and self.table_bytes(table, snap) < bucket_min_bytes
-            and n_plain_dirs <= self.max_plain_dirs
-        ):
-            return self.append(table, df)
-        # the spec meta is written AFTER the layout it describes is
-        # committed (see merge_insert): a crash in between must leave
-        # the old meta so the mismatch is re-detected on resume
-        # instead of pruning old-spec dirs with the new expr.
-        spec_pending = stored != bucket_spec
-        if has_plain or spec_mismatch or not already_bucketed:
-            # consolidate existing rows + the new batch in one
-            # partitioned write (bucket_expr recomputes every row's
-            # bucket under the live spec)
-            merged = (
-                self.read(table, df.schema).unionByName(df)
-                if self.exists(table)
-                else df
-            )
-            sid = self.overwrite_partitions(table, merged, bucket_expr, None)
-        else:
-            sid = self.append_partitions(table, df, bucket_expr)
-            sid = self.compact_buckets(table) or sid
-        if spec_pending:
-            self.set_meta(
-                table, {**self.get_meta(table), "bucket_spec": bucket_spec}
-            )
-        return sid
-
-    def prunable_buckets(self, table: str, bucket_spec: dict) -> bool:
-        """True iff ``read_buckets`` pruning is sound for this table:
-        fully bucketed layout (no plain files whose rows belong to
-        unknown buckets) written under exactly ``bucket_spec``."""
-        has_plain, parts = self.partition_state(table)
+    def prunable_buckets(self, table: str, bucket_spec: dict | None) -> bool:
+        """True iff ``read_buckets`` pruning is sound for this table: it
+        has no snapshot yet, or it holds no plain files (rows of
+        unknown buckets) and was written under exactly
+        ``bucket_spec``."""
+        if not self.exists(table):
+            return True
+        has_plain, _ = self.partition_state(table)
         return (
-            bool(parts)
-            and not has_plain
+            not has_plain
             and self.get_meta(table).get("bucket_spec") == bucket_spec
         )
 
@@ -725,52 +583,19 @@ class Catalog:
         return removed
 
     def tables(self) -> list[str]:
-        """Every table with a committed snapshot under this root."""
+        """Every table with a committed snapshot under this root, by the
+        name this catalog addresses it with. A physical table shadowed
+        by a mapped logical name is not addressable, so not listed."""
+        logical = {p: t for t, p in self.names.items()}
         out = []
         for name in sorted(os.listdir(self.root)):
-            if os.path.isfile(os.path.join(self.root, name, "_HEAD")):
+            if not os.path.isfile(os.path.join(self.root, name, "_HEAD")):
+                continue
+            if name in logical:
+                out.append(logical[name])
+            elif name not in self.names:
                 out.append(name)
         return out
 
     def drop(self, table: str) -> None:
         shutil.rmtree(self._tdir(table), ignore_errors=True)
-
-
-class RenamedCatalog:
-    """Logical→physical table-name view over a Catalog (≙ the
-    reference's ``--items-table`` / ``--users-table`` /
-    ``--voting-table`` overrides, app/Main.hs:117-131): the engine
-    keeps addressing logical names ("comments", "users", "votes");
-    the mapping decides where they live. Unmapped names pass
-    through. Only methods whose FIRST parameter is literally named
-    ``table`` are remapped (by signature inspection), and the remap
-    honors keyword-style calls — a blanket first-positional rewrite
-    would silently narrow the Catalog API (``read(table=...)`` would
-    lose its argument; non-table-first helpers would remap garbage)."""
-
-    def __init__(self, inner: Catalog, names: dict[str, str]):
-        self._inner = inner
-        self._names = dict(names)
-
-    def __getattr__(self, attr):
-        import inspect
-
-        f = getattr(self._inner, attr)
-        if not callable(f):
-            return f
-        try:
-            params = list(inspect.signature(f).parameters)
-        except (TypeError, ValueError):
-            return f
-        if not params or params[0] != "table":
-            return f
-        names = self._names
-
-        def wrapped(*a, **k):
-            if "table" in k:
-                k = {**k, "table": names.get(k["table"], k["table"])}
-            elif a:
-                a = (names.get(a[0], a[0]),) + a[1:]
-            return f(*a, **k)
-
-        return wrapped

@@ -177,8 +177,7 @@ def test_catalog_bucketed_merge_insert(spark):
     df1 = spark.createDataFrame(
         [(f"k{i}", "a") for i in range(20)], schema
     )
-    cat.merge_insert("t", df1, ["id"], df1.schema, bucket_expr=bexpr,
-                     bucket_min_bytes=0)
+    cat.merge_insert("t", df1, ["id"], df1.schema, bucket_expr=bexpr)
     has_plain, parts1 = cat.partition_state("t")
     assert not has_plain and parts1  # bucketed from birth, no plain files
 
@@ -189,8 +188,7 @@ def test_catalog_bucketed_merge_insert(spark):
         for r in df2.select(F.pmod(F.xxhash64("id"), F.lit(4)).cast("int").alias("b"))
         .distinct().collect()
     }
-    cat.merge_insert("t", df2, ["id"], df2.schema, bucket_expr=bexpr,
-                     bucket_min_bytes=0)
+    cat.merge_insert("t", df2, ["id"], df2.schema, bucket_expr=bexpr)
     _, parts2 = cat.partition_state("t")
     for k in parts1:
         if k not in touched:
@@ -206,8 +204,7 @@ def test_catalog_bucketed_merge_insert(spark):
     # counts bounded: never more than the compaction threshold dirs
     for i in range(18):
         d = spark.createDataFrame([(f"k{i}", "dup"), (f"x{i}", "c")], schema)
-        cat.merge_insert("t", d, ["id"], d.schema, bucket_expr=bexpr,
-                         bucket_min_bytes=0)
+        cat.merge_insert("t", d, ["id"], d.schema, bucket_expr=bexpr)
     _, parts3 = cat.partition_state("t")
     assert max(len(v) for v in parts3.values()) <= 16
     rows = {r["id"]: r["v"] for r in cat.read("t").collect()}
@@ -217,64 +214,10 @@ def test_catalog_bucketed_merge_insert(spark):
     cat2 = Catalog(spark, tempfile.mkdtemp(prefix="bmerge2-"))
     cat2.append("t", df1)
     assert cat2.partition_state("t")[0] is True
-    cat2.merge_insert("t", df2, ["id"], df2.schema, bucket_expr=bexpr,
-                      bucket_min_bytes=0)
+    cat2.merge_insert("t", df2, ["id"], df2.schema, bucket_expr=bexpr)
     has_plain, parts = cat2.partition_state("t")
     assert has_plain is False and parts
     assert cat2.read("t").count() == 21
-
-
-def test_catalog_adaptive_bucket_threshold(spark):
-    """Adaptive bucketing: MERGEs below ``bucket_min_bytes`` stay on
-    the cheap plain-append path (no bucket bookkeeping while pruning
-    saves nothing); the first MERGE after the table crosses the
-    threshold consolidates into buckets ONCE, and every later MERGE is
-    bucket-pruned with dedup semantics unchanged throughout."""
-    cat = Catalog(spark, tempfile.mkdtemp(prefix="abucket-"))
-    bexpr = F.pmod(F.xxhash64("id"), F.lit(4)).cast("int")
-    schema = "id string, v string"
-    big = 1 << 16  # each tiny commit is a few KB
-
-    df1 = spark.createDataFrame([(f"k{i}", "a") for i in range(20)], schema)
-    cat.merge_insert("t", df1, ["id"], df1.schema, bucket_expr=bexpr,
-                     bucket_min_bytes=big)
-    has_plain, parts = cat.partition_state("t")
-    assert has_plain and not parts  # small table: plain files, no buckets
-
-    # still below threshold: plain append, dedup against whole table
-    df2 = spark.createDataFrame([("k0", "XX"), ("new", "b")], schema)
-    cat.merge_insert("t", df2, ["id"], df2.schema, bucket_expr=bexpr,
-                     bucket_min_bytes=big)
-    assert cat.partition_state("t")[0] is True
-    rows = {r["id"]: r["v"] for r in cat.read("t").collect()}
-    assert rows["k0"] == "a" and rows["new"] == "b" and len(rows) == 21
-
-    # force the threshold crossing: next MERGE consolidates to buckets
-    df3 = spark.createDataFrame([("k0", "YY"), ("late", "c")], schema)
-    cat.merge_insert("t", df3, ["id"], df3.schema, bucket_expr=bexpr,
-                     bucket_min_bytes=1)
-    has_plain, parts = cat.partition_state("t")
-    assert has_plain is False and parts  # consolidated into buckets
-    rows = {r["id"]: r["v"] for r in cat.read("t").collect()}
-    assert rows["k0"] == "a" and rows["late"] == "c" and len(rows) == 22
-
-    # once bucketed, stays bucketed (even if "size" is below threshold
-    # again): untouched bucket dirs are carried forward verbatim
-    df4 = spark.createDataFrame([("k0", "ZZ"), ("tail", "d")], schema)
-    before = dict(parts)
-    cat.merge_insert("t", df4, ["id"], df4.schema, bucket_expr=bexpr,
-                     bucket_min_bytes=1 << 30)
-    has_plain, after = cat.partition_state("t")
-    assert has_plain is False and after
-    touched = {
-        str(r["b"])
-        for r in df4.select(bexpr.alias("b")).distinct().collect()
-    }
-    for k in before:
-        if k not in touched:
-            assert after[k] == before[k]
-    rows = {r["id"]: r["v"] for r in cat.read("t").collect()}
-    assert rows["k0"] == "a" and rows["tail"] == "d" and len(rows) == 23
 
 
 def test_select_urls_where(spark):
@@ -367,23 +310,25 @@ def test_broadcast_hint_fully_disabled_at_zero(spark):
     assert CrawlEngine._hint(on, df, 0) is not df
 
 
-def test_renamed_catalog_keyword_and_non_table_methods(spark, tmp_path):
-    """The renaming proxy honors keyword-style calls and leaves
-    non-table-first methods untouched (review finding: a blanket
-    first-positional rewrite broke both)."""
+def test_catalog_name_map(spark, tmp_path):
+    """A catalog with a name map stores each logical table under its
+    physical name, keyword-style calls included; ``tables()`` lists
+    logical names and leaves out a physical table that a mapped
+    logical name shadows."""
     from pyspark.sql import functions as F
 
-    from scrapetition_spark.sources.catalog import Catalog, RenamedCatalog
+    from scrapetition_spark.sources.catalog import Catalog
 
-    inner = Catalog(spark, str(tmp_path / "cat"))
-    cat = RenamedCatalog(inner, {"comments": "phys_comments"})
+    plain = Catalog(spark, str(tmp_path / "cat"))
     df = spark.range(3).select(F.col("id").alias("k"))
+    plain.append("comments", df.limit(1))  # shadowed by the mapping
+    cat = Catalog(spark, plain.root, {"comments": "phys_comments"})
     cat.append(table="comments", df=df)          # keyword-style call
-    assert inner.exists("phys_comments")
+    assert plain.exists("phys_comments")
     assert cat.read(table="comments", schema=df.schema).count() == 3
-    assert not inner.exists("comments")
-    # non-table-first methods pass through unwrapped
-    assert set(cat.tables()) == {"phys_comments"}
+    assert plain.read("comments").count() == 1
+    assert cat.tables() == ["comments"]
+    assert plain.tables() == ["comments", "phys_comments"]
 
 
 def test_bucket_spec_meta_survives_crashed_consolidation(spark, tmp_path):
@@ -402,7 +347,7 @@ def test_bucket_spec_meta_survives_crashed_consolidation(spark, tmp_path):
     spec_a = {"n_host_buckets": 4}
     expr_a = F.abs(F.hash("url")) % 4
     # force the bucketed layout from birth
-    cat.append_bucketed("seen", df, expr_a, spec_a, bucket_min_bytes=0)
+    cat.append_bucketed("seen", df, expr_a, spec_a)
     assert cat.get_meta("seen").get("bucket_spec") == spec_a
     assert cat.prunable_buckets("seen", spec_a)
 
@@ -418,14 +363,14 @@ def test_bucket_spec_meta_survives_crashed_consolidation(spark, tmp_path):
     cat.overwrite_partitions = dying
     df2 = spark.range(50, 60).select(F.col("id").cast("string").alias("url"))
     with _pytest.raises(RuntimeError, match="simulated crash"):
-        cat.append_bucketed("seen", df2, expr_b, spec_b, bucket_min_bytes=0)
+        cat.append_bucketed("seen", df2, expr_b, spec_b)
     cat.overwrite_partitions = real
     # the meta still claims the OLD spec — pruning under the new spec
     # stays disabled, so nothing reads wrong buckets
     assert cat.get_meta("seen").get("bucket_spec") == spec_a
     assert not cat.prunable_buckets("seen", spec_b)
     # retry converges: consolidation under spec_b, meta follows
-    cat.append_bucketed("seen", df2, expr_b, spec_b, bucket_min_bytes=0)
+    cat.append_bucketed("seen", df2, expr_b, spec_b)
     assert cat.get_meta("seen").get("bucket_spec") == spec_b
     assert cat.prunable_buckets("seen", spec_b)
     assert cat.read("seen", df.schema).count() == 60
@@ -445,8 +390,7 @@ def test_merge_insert_spec_meta_survives_crashed_consolidation(spark, tmp_path):
     spec_a, expr_a = {"n": 4}, F.abs(F.hash("url")) % 4
     spec_b, expr_b = {"n": 8}, F.abs(F.hash("url")) % 8
     cat.merge_insert("items", df, ["url"], df.schema,
-                     bucket_expr=expr_a, bucket_spec=spec_a,
-                     bucket_min_bytes=0)
+                     bucket_expr=expr_a, bucket_spec=spec_a)
     assert cat.get_meta("items").get("bucket_spec") == spec_a
 
     real = cat.overwrite_partitions
@@ -456,13 +400,11 @@ def test_merge_insert_spec_meta_survives_crashed_consolidation(spark, tmp_path):
     df2 = spark.range(40, 60).select(F.col("id").cast("string").alias("url"))
     with _pytest.raises(RuntimeError, match="simulated crash"):
         cat.merge_insert("items", df2, ["url"], df.schema,
-                         bucket_expr=expr_b, bucket_spec=spec_b,
-                         bucket_min_bytes=0)
+                         bucket_expr=expr_b, bucket_spec=spec_b)
     cat.overwrite_partitions = real
     assert cat.get_meta("items").get("bucket_spec") == spec_a
     cat.merge_insert("items", df2, ["url"], df.schema,
-                     bucket_expr=expr_b, bucket_spec=spec_b,
-                     bucket_min_bytes=0)
+                     bucket_expr=expr_b, bucket_spec=spec_b)
     assert cat.get_meta("items").get("bucket_spec") == spec_b
     # MERGE semantics intact across the crash + retry: 60 distinct keys
     assert cat.read("items", df.schema).count() == 60

@@ -103,7 +103,7 @@ def test_crawl_epochs_start_no_python_worker(spark):
     def wide():
         cfg = CrawlConfig("h0.test", follow_links=True, politeness_sec=0,
                           per_host_budget=8, max_urls_per_epoch=None,
-                          dispatchers=SYNTH_DISPATCHERS, seen_bucket_min_bytes=0)
+                          dispatchers=SYNTH_DISPATCHERS)
         cat = Catalog(spark, tempfile.mkdtemp(prefix="pyfree-wide-"))
         eng = CrawlEngine(spark, cat, cfg, synth, bloom_mode="partitioned")
         eng.seed(seeds)

@@ -2,8 +2,8 @@
 be bit-exact), hostile-input round-trip
 (≙ the reference's SQL-injection suite,
 /root/reference/test/Test/Network/Scrapetition/SqlInjection.hs:32-65),
-catalog file hygiene (empty-MERGE skip, plain-dir cap, manifest byte
-summaries) and snapshot expiry (≙ Iceberg expire_snapshots)."""
+catalog file hygiene (empty-MERGE skip, manifest byte summaries) and
+snapshot expiry (≙ Iceberg expire_snapshots)."""
 
 from __future__ import annotations
 
@@ -168,8 +168,7 @@ def _ndirs(cat, table):
 
 def test_merge_insert_all_duplicate_batch_commits_no_data(spark):
     """A MERGE whose keys all exist must not add a data dir — a long
-    sub-threshold crawl would otherwise grow O(epochs) dirs
-    (ADVICE r03)."""
+    crawl would otherwise grow O(epochs) dirs."""
     cat = Catalog(spark, tempfile.mkdtemp(prefix="r4cat-"))
     sch = _schema()
     cat.merge_insert("t", _mk(spark, [("a", 1), ("b", 2)]), ["k"], sch)
@@ -180,34 +179,6 @@ def test_merge_insert_all_duplicate_batch_commits_no_data(spark):
     assert _ndirs(cat, "t") == before  # but NO new data dir
     got = {(r["k"], r["v"]) for r in cat.read("t", sch).collect()}
     assert got == {("a", 1), ("b", 2)}
-
-
-def test_plain_dir_cap_converts_to_buckets(spark):
-    """A sub-threshold table that accumulates more plain dirs than
-    max_plain_dirs converts to the bucketed layout even below the byte
-    threshold (file-count quadratic guard, ADVICE r03)."""
-    cat = Catalog(spark, tempfile.mkdtemp(prefix="r4cap-"))
-    cat.max_plain_dirs = 1
-    sch = _schema()
-    bucket = F.pmod(F.xxhash64("k"), F.lit(4)).cast("int")
-    spec = {"n": 4}
-    huge = 1 << 40  # byte threshold never crossed — only the dir cap
-    for i in range(3):
-        cat.merge_insert(
-            "t", _mk(spark, [(f"k{i}", i)]), ["k"], sch,
-            bucket_expr=bucket, bucket_spec=spec, bucket_min_bytes=huge,
-        )
-    has_plain, parts = cat.partition_state("t")
-    assert not has_plain and parts  # converted
-    got = {(r["k"], r["v"]) for r in cat.read("t", sch).collect()}
-    assert got == {("k0", 0), ("k1", 1), ("k2", 2)}
-    # and later merges stay bucketed + dedup correctly
-    cat.merge_insert(
-        "t", _mk(spark, [("k1", 99), ("k3", 3)]), ["k"], sch,
-        bucket_expr=bucket, bucket_spec=spec, bucket_min_bytes=huge,
-    )
-    got = {(r["k"], r["v"]) for r in cat.read("t", sch).collect()}
-    assert got == {("k0", 0), ("k1", 1), ("k2", 2), ("k3", 3)}
 
 
 def test_table_bytes_matches_filesystem(spark):
@@ -228,12 +199,6 @@ def test_table_bytes_matches_filesystem(spark):
         snap = cat._snapshot(t, cat.head(t))
         walked = sum(_dir_bytes(d) for d in cat._paths(snap))
         assert cat.table_bytes(t) == walked > 0
-
-
-def test_malformed_env_override_fails_at_construction(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_BUCKET_MIN_BYTES", "lots")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_BUCKET_MIN_BYTES"):
-        Catalog(spark, tempfile.mkdtemp(prefix="r4env-"))
 
 
 def test_expire_snapshots_bounds_disk_and_keeps_time_travel(spark):
@@ -412,72 +377,19 @@ def test_bloom_sidecar_scoped_commit_carries_untouched_buckets(spark):
 
 
 # --------------------------------------------------------------------------
-# adaptive bucketed urls_seen (round-4 follow-up: the per-epoch seen
-# scan was the last O(table) read in the crawl loop; once the table
-# crosses the size threshold it lives in host buckets and each epoch
-# reads only the buckets the active frontier touches)
-
-
-def test_append_bucketed_adaptive_layout(spark):
-    from scrapetition_spark.schemas import URLS_SEEN  # noqa: F401
-
-    sch = "k int, host string, v string"
-    bucket = F.pmod(F.xxhash64("host"), F.lit(8)).cast("int")
-    spec = {"n": 8}
-
-    def frame(lo, hi):
-        return spark.range(lo, hi).select(
-            F.col("id").cast("int").alias("k"),
-            F.concat(F.lit("h"), (F.col("id") % 5).cast("string")).alias("host"),
-            F.col("id").cast("string").alias("v"),
-        )
-
-    # big threshold: stays plain — including on the SECOND append (a
-    # plain table stores no bucket_spec; None must read as "not yet
-    # bucketed", not as a spec mismatch forcing the conversion)
-    cat = Catalog(spark, tempfile.mkdtemp(prefix="ab-plain-"))
-    cat.append_bucketed("t", frame(0, 10), bucket, spec, 1 << 30)
-    cat.append_bucketed("t", frame(10, 20), bucket, spec, 1 << 30)
-    has_plain, parts = cat.partition_state("t")
-    assert has_plain and not parts
-    assert {r["k"] for r in cat.read("t").collect()} == set(range(20))
-
-    # threshold 0: bucketed from birth; later appends stay scoped
-    cat2 = Catalog(spark, tempfile.mkdtemp(prefix="ab-bucket-"))
-    cat2.append_bucketed("t", frame(0, 10), bucket, spec, 0)
-    cat2.append_bucketed("t", frame(10, 20), bucket, spec, 0)
-    has_plain, parts = cat2.partition_state("t")
-    assert parts and not has_plain
-    assert cat2.prunable_buckets("t", spec)
-    assert not cat2.prunable_buckets("t", {"n": 16})
-    got = {r["k"] for r in cat2.read("t").collect()}
-    assert got == set(range(20))
-
-    # crossing: plain first, then one consolidating rewrite
-    cat3 = Catalog(spark, tempfile.mkdtemp(prefix="ab-cross-"))
-    cat3.append_bucketed("t", frame(0, 10), bucket, spec, 1 << 30)
-    assert not cat3.prunable_buckets("t", spec)
-    cat3.append_bucketed("t", frame(10, 20), bucket, spec, 0)  # crosses
-    assert cat3.prunable_buckets("t", spec)
-    got = {r["k"] for r in cat3.read("t").collect()}
-    assert got == set(range(20))
-
-    # spec change: consolidates under the new spec, stays correct
-    cat3.append_bucketed("t", frame(20, 30), bucket, {"n": 16}, 0)
-    assert cat3.prunable_buckets("t", {"n": 16})
-    got = {r["k"] for r in cat3.read("t").collect()}
-    assert got == set(range(30))
+# bucketed urls_seen (the per-epoch seen scan reads only the buckets
+# the active frontier touches)
 
 
 def test_crawl_bucketed_seen_bit_exact_and_resume(spark):
-    """seen_bucket_min_bytes=0 forces the bucketed urls_seen layout
-    (and so the pruned per-epoch seen read) from the first epoch: the
-    crawl trace must stay bit-exact vs the simulator, and a fresh
-    engine resuming mid-crawl must fetch no duplicates."""
+    """urls_seen is bucketed (and so the per-epoch seen read pruned)
+    from the first epoch: the crawl trace must stay bit-exact vs the
+    simulator, and a fresh engine resuming mid-crawl must fetch no
+    duplicates."""
     site = fixture_site()
     docs = documents_df(spark, site)
     cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=True,
-                      politeness_sec=0, seen_bucket_min_bytes=0)
+                      politeness_sec=0)
     sim = simulate(site, [SEED], cfg)
 
     eng, cat = _engine(spark, docs, cfg)
@@ -500,8 +412,7 @@ def test_crawl_bucketed_seen_resume_changed_host_buckets(spark):
     set equals an uninterrupted run's."""
     site = fixture_site()
     docs = documents_df(spark, site)
-    base = dict(follow_links=True, politeness_sec=0, per_host_budget=4,
-                seen_bucket_min_bytes=0)
+    base = dict(follow_links=True, politeness_sec=0, per_host_budget=4)
     cfg1 = CrawlConfig("www.zeit.de", n_host_buckets=256, **base)
     cfg2 = CrawlConfig("www.zeit.de", n_host_buckets=64, **base)
 
