@@ -69,12 +69,11 @@ def main(argv: list[str] | None = None) -> int:
     # override shadowing an engine-reserved table would corrupt crawl
     # state (the reference rejects nothing here — SQLite would simply
     # break later; we surface it at parse time).
+    from scrapetition_spark.crawl import ENGINE_TABLES
+
     sink_names = [args.items_table, args.users_table, args.voting_table]
-    reserved = {
-        "urls", "urls_seen", "url_edges", "bloom_sidecar",
-        # engine-owned item/metric tables the overrides must not shadow
-        "articles", "crawl_metrics", "crawl_metrics_buckets",
-    }
+    # every engine table but the three renamable sinks
+    reserved = set(ENGINE_TABLES) - {"comments", "users", "votes"}
     if len(set(sink_names)) != len(sink_names):
         p.error(f"sink table names must be distinct, got {sink_names}")
     clash = sorted(set(sink_names) & reserved)

@@ -14,19 +14,20 @@ driver loop over set-oriented Spark jobs. One epoch =
     → frontier merge with FIFO/LIFO union semantics (C3/C4)
     → seen-set append (C2), plus the bloom sidecar OR-merge when the
       partitioned prefilter is on
-    → metrics + snapshot commit (exact resume)
+    → metrics row, then the epoch's commit record (exact resume)
 
 ``cfg.sequential=True`` fetches exactly one URL per epoch, which
 reproduces the reference's crawl order bit-for-bit (verified against
 the pure-Python simulator in tests/reference_sim.py). Wide epochs
 (the scale path) preserve the same seen *set* and per-host order.
 
-Resume (≙ ``scrapetition -d``, app/Main.hs:247-250): the loop is a
-pure function of the catalog tables, and every write is an idempotent
-merge — a crawl stopped between epochs resumes to the same state
-(tested in tests/test_crawl.py). A failure inside an epoch is not
-covered: the epoch's sinks commit one by one, so resuming after one
-can lose rows (ROADMAP item 1).
+Resume (≙ ``scrapetition -d``, app/Main.hs:247-250): each epoch ends
+in one commit point, a record of every ``ENGINE_TABLES`` HEAD
+(``Catalog.record_heads``), and every entry point that writes first
+rolls back to it (``Catalog.restore_heads``). An epoch that fails at
+any write resumes to the clean crawl's state (tests/test_crawl.py,
+tests/test_partitioned_bloom.py), and ``urls.first_seen`` is exact,
+so the default due set needs no seen-set anti-join.
 
 Every crawl-state table is bucketed from its first write, and each
 table's bucket is a function of its key that equals the fetched
@@ -39,11 +40,12 @@ touches, and every sink reads and writes only those.
 
 from __future__ import annotations
 
+import logging
 import time
 from collections import Counter
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from scrapetition_spark.config import CrawlConfig
@@ -52,6 +54,7 @@ from scrapetition_spark.parse import discover_urls, parse_pages
 from scrapetition_spark.plans.frontier import (
     LINEAGE_COLS,
     assign_fetch_seq,
+    candidate_predicate,
     gate_discovered,
     plan_due,
 )
@@ -65,7 +68,6 @@ from scrapetition_spark.schemas import (
     ARTICLES,
     COMMENTS,
     CRAWL_METRICS,
-    CRAWL_METRICS_BUCKETS,
     UNIQUE_KEYS,
     URL_EDGES,
     URLS,
@@ -76,6 +78,13 @@ from scrapetition_spark.schemas import (
 from scrapetition_spark.sources.catalog import Catalog
 
 _URL_ORDER = ["source_fetch_seq", "dispatcher_idx", "pos"]
+# every table the engine writes, by logical name: the epoch's commit
+# record holds the HEAD of each
+ENGINE_TABLES = (
+    "urls", "urls_seen", "bloom_sidecar", "comments", "users", "votes",
+    "articles", "url_edges", "crawl_metrics",
+)
+log = logging.getLogger(__name__)
 
 
 def _domain_or(fallback: str) -> F.Column:
@@ -136,14 +145,13 @@ class CrawlEngine:
 
     def _recover_sidecar(self) -> None:
         """Once per engine: make the stored sidecar agree with the
-        exact urls_seen truth before anything probes or merges it. A
-        sidecar that is absent while urls_seen has rows (dropped, or
-        the crash window between the two writes), stored under a
-        different (m_bits, k, n_buckets) (engine reconfigured between
-        runs — probing it would yield silent false negatives), or held
-        in plain files (rows of unknown buckets, which a scoped commit
-        would drop) is rebuilt from urls_seen in the partitioned
-        layout, so every later merge into it is a scoped commit."""
+        exact urls_seen truth before anything probes or merges it (the
+        two commit in one epoch record, so no crash splits them). A
+        sidecar absent while urls_seen has rows (dropped, or the crawl
+        began without ``bloom_mode``), stored under other (m_bits, k,
+        n_buckets) (probing it would yield silent false negatives), or
+        held in plain files (rows of unknown buckets, which a scoped
+        commit would drop) is rebuilt from urls_seen, partitioned."""
         if self.cat.exists("bloom_sidecar"):
             has_plain, _ = self.cat.partition_state("bloom_sidecar")
             stale = has_plain or not self.pbloom.matches(
@@ -158,6 +166,13 @@ class CrawlEngine:
             self.cat.overwrite_partitions(
                 "bloom_sidecar", self.pbloom.build(seen_b), "bucket", None
             )
+
+    def _restore(self) -> None:
+        """Roll the engine tables back to the last epoch record. A
+        rollback can restore a sidecar this engine already checked, so
+        the next probe checks it again."""
+        if self.cat.restore_heads():
+            self._sidecar_checked = False
 
     def _seen_filter(self, active: list[int]) -> PartitionedBloomView | None:
         """The bloom view over the ``active`` buckets' sidecar rows
@@ -234,25 +249,16 @@ class CrawlEngine:
             touched, self._commit_spec(),
         )
 
-    def _read_seen(self, urls: DataFrame) -> tuple[DataFrame, list[int] | None]:
-        """The epoch's seen frame for the due-set anti-join, and the
-        frontier's active host buckets (None when nothing needs them).
-        When urls_seen is stored in the live bucket layout (always,
-        except for a catalog written under another spec), read ONLY
-        the buckets the active frontier touches: the anti-join matches on
-        url equality, equal urls share a host bucket, so seen rows in
-        never-due buckets cannot match any candidate. The bloom probe
-        reads the same buckets of its sidecar. The distinct-bucket scan
-        is one column-pruned agg over the frontier (bounded result:
-        ≤ n_host_buckets rows); at 10^10 seen URLs this turns the last
-        O(table)-per-epoch reads into O(active buckets) — a
-        domain-restricted crawl (the reference default, gate C7) reads
-        exactly one bucket."""
-        prunable = self.cat.prunable_buckets("urls_seen", self._seen_bucket_spec())
-        if not prunable and self.pbloom is None:
-            return self.cat.read("urls_seen", URLS_SEEN), None
-        from scrapetition_spark.plans.frontier import candidate_predicate
-
+    def _read_seen(self, urls: DataFrame) -> tuple[DataFrame, list[int]]:
+        """The seen frame for the due-set anti-join of the bloom and
+        ``-a`` paths, and the frontier's active host buckets. A bucketed
+        urls_seen (always, but for a catalog written under another
+        spec) is read ONLY in those buckets: the anti-join matches on
+        url equality and equal urls share a host bucket, so seen rows
+        of other buckets match no candidate. The bloom probe reads the
+        same buckets of its sidecar. At 10^10 seen URLs this makes the
+        read O(active buckets); a domain-restricted crawl (the
+        reference default, gate C7) reads exactly one bucket."""
         # MUST be plan_due's own predicate (shared helper): the bucket
         # cover is only sound for exactly the candidate set it joins
         active = urls.filter(candidate_predicate(self.cfg))
@@ -260,9 +266,9 @@ class CrawlEngine:
             r["host_bucket"]
             for r in active.select("host_bucket").distinct().collect()
         )
-        if not prunable:
-            return self.cat.read("urls_seen", URLS_SEEN), buckets
-        return self.cat.read_buckets("urls_seen", URLS_SEEN, buckets), buckets
+        if self.cat.prunable_buckets("urls_seen", self._seen_bucket_spec()):
+            return self.cat.read_buckets("urls_seen", URLS_SEEN, buckets), buckets
+        return self.cat.read("urls_seen", URLS_SEEN), buckets
 
     def _url_row(self, df: DataFrame, scheduled: bool) -> DataFrame:
         """Project a (target/lineage) frame onto the urls schema."""
@@ -313,6 +319,7 @@ class CrawlEngine:
         wins) into urls as scheduled rows. Seeding rewrites the whole
         table, so a catalog in another layout leaves it in the live
         one."""
+        self._restore()
         first = targets.groupBy("target").agg(F.min("pos").alias("pos")).select(
             "target",
             F.lit(-1).alias("discovery_epoch"),
@@ -325,10 +332,12 @@ class CrawlEngine:
             urls.select("url"), ["url"], "left_anti"
         )
         self._commit_urls(urls.unionByName(new), None)
+        self.cat.record_heads(ENGINE_TABLES)
 
     def resume_not_seen(self) -> None:
         """≙ ``crawl (NotSeenFromDB ...)`` (Main.hs:247-250; S11):
         schedule every known URL with first_seen IS NULL."""
+        self._restore()
         urls, _ = self._read_urls()
         rescheduled = urls.withColumn(
             "in_frontier",
@@ -337,6 +346,7 @@ class CrawlEngine:
             ),
         )
         self._commit_urls(rescheduled, None)
+        self.cat.record_heads(ENGINE_TABLES)
 
     def _hint(self, df: DataFrame, n_rows: int) -> DataFrame:
         """Size-gated broadcast hint (VERDICT r03 #1): hint only while
@@ -354,10 +364,7 @@ class CrawlEngine:
     # ------------------------------------------------------------------ epoch
 
     def run_epoch(self, epoch: int) -> EpochStats:
-        import os
-
         t0 = time.time()
-        debug = os.environ.get("SPARK_GRAFT_DEBUG")
         marks: list[tuple[str, float]] = []
 
         def mark(label: str) -> None:
@@ -372,7 +379,12 @@ class CrawlEngine:
 
         cfg = self.cfg
         urls, urls_live = self._read_urls()
-        seen, active = self._read_seen(urls)
+        if self.pbloom is None and not cfg.visit_again:
+            # urls.first_seen commits with urls_seen in one epoch record:
+            # the candidate predicate alone excludes every fetched URL
+            seen, active = None, None
+        else:
+            seen, active = self._read_seen(urls)
         if cfg.visit_again:
             # -a (Main.hs:89-91, seen=[] at :246): drop persisted seen
             # rows from before this run; bloom positives for them fall
@@ -608,7 +620,6 @@ class CrawlEngine:
             ],
         )
         if disc is not None:
-            td0 = time.time()
             # hit carries fetch_seq, so discover_urls passes the lineage
             # through as source_fetch_seq — no join back to the due set
             # (disc sources ⊆ hit ⊆ due by construction; the old inner
@@ -621,7 +632,6 @@ class CrawlEngine:
                 "pos",
                 "target",
             ).localCheckpoint()
-            td1 = time.time()
             # discovered targets per host bucket: the urls commit's
             # touched buckets and the per-bucket metrics
             disc_counts = {
@@ -632,14 +642,6 @@ class CrawlEngine:
                 ).agg(F.count("*").alias("n")).collect()
             }
             n_discovered = sum(disc_counts.values())
-            if debug:
-                # sub-attribution for the saturation probes: ckpt =
-                # span-array URL extraction + block-manager write (one
-                # action); buckets reads the checkpoint back
-                print(
-                    f"[epoch {epoch}] disc ckpt={td1 - td0:.1f}s "
-                    f"buckets={time.time() - td1:.1f}s", flush=True,
-                )
         mark("discovered")
 
         if disc is not None and n_discovered > 0:
@@ -705,27 +707,6 @@ class CrawlEngine:
             merged = self.pbloom.or_merge(old.unionByName(delta))
             self.cat.overwrite_partitions("bloom_sidecar", merged, "bucket", touched)
 
-        def _seen_and_bucket_metrics():
-            # one worker: seen append first, then the per-partition
-            # lineage/metrics rows (north rule) keyed to the snapshot
-            # the append just created — sequenced inside the task so
-            # the pool's other jobs can't race the snapshot id.
-            self.cat.append_bucketed(
-                "urls_seen", seen_batch, self._seen_bucket_expr(),
-                self._seen_bucket_spec(),
-            )
-            snap = self.cat.head("urls_seen")
-            rows = [
-                (epoch, b, due_counts.get(b, 0), disc_counts.get(b), snap)
-                for b in sorted(due_counts.keys() | disc_counts.keys())
-            ]
-            self.cat.append(
-                "crawl_metrics_buckets",
-                local_df(self.spark, rows, CRAWL_METRICS_BUCKETS),
-                hint_partitions=1,
-            )
-            return snap
-
         spec = self._commit_spec()
         # a urls table in another layout is rewritten whole (None)
         urls_touched = (
@@ -745,27 +726,41 @@ class CrawlEngine:
                     urls_touched,
                 )
             )
-            snap_fut = pool.submit(_seen_and_bucket_metrics)
-            futs.append(snap_fut)
+            futs.append(
+                pool.submit(
+                    self.cat.append_bucketed, "urls_seen", seen_batch,
+                    self._seen_bucket_expr(), self._seen_bucket_spec(),
+                )
+            )
             if self.pbloom is not None:
                 futs.append(pool.submit(_bloom_task))
             for f in futs:
                 f.result()  # propagate failures
         mark("sinks")
 
-        self.fetch_seq_base += n_due
         dur = int((time.time() - t0) * 1000)
+        # per-partition lineage/metrics (north rule): due and
+        # discovered URLs per host bucket, in the epoch's one row
+        buckets = [
+            {"host_bucket": b, "urls_due": due_counts.get(b, 0),
+             "urls_discovered": disc_counts.get(b)}
+            for b in sorted(due_counts.keys() | disc_counts.keys())
+        ]
         metrics = local_df(
             self.spark,
-            [(epoch, n_due, n_due, n_discovered, None, dur, snap_fut.result())],
+            [(epoch, n_due, n_due, n_discovered, None, dur,
+              self.cat.head("urls_seen"), buckets)],
             CRAWL_METRICS,
         )
         self.cat.append("crawl_metrics", metrics, hint_partitions=1)
+        # the epoch's one commit point: until this record, every write
+        # above is undone by the next entry point's restore_heads
+        self.cat.record_heads(ENGINE_TABLES)
+        self.fetch_seq_base += n_due
         mark("metrics")  # post-sinks epoch bookkeeping is measured too
-        if debug:
-            print(f"[epoch {epoch}] due={n_due} " +
-                  " ".join(f"{l}={s:.1f}s" for l, s in marks), flush=True)
-        return EpochStats(epoch, n_due, n_discovered, dur, stage_seconds())
+        stages = stage_seconds()
+        log.debug("epoch %d: due=%d stage seconds %s", epoch, n_due, stages)
+        return EpochStats(epoch, n_due, n_discovered, dur, stages)
 
     def _rewrite_urls(
         self,
@@ -910,12 +905,11 @@ class CrawlEngine:
         App.hs:45-47) or max_epochs is hit. ``sleep=True`` enforces the
         politeness budget in wall-clock (threadDelay ≙ App.hs:68)."""
         stats: list[EpochStats] = []
-        epoch = 0
-        prev = self.cat.read("crawl_metrics", CRAWL_METRICS)
-        if prev.count() > 0:
-            epoch = int(prev.agg(F.max("epoch")).collect()[0][0]) + 1
-            self.run_start_epoch = epoch
-            self.fetch_seq_base = self.cat.read("urls_seen", URLS_SEEN).count()
+        self._restore()  # crawl_metrics and urls_seen are exact after it
+        last = self.cat.read("crawl_metrics", CRAWL_METRICS).agg(F.max("epoch")).first()[0]
+        epoch = 0 if last is None else last + 1
+        self.fetch_seq_base = self.cat.read("urls_seen", URLS_SEEN).count() if epoch else 0
+        self.run_start_epoch = epoch
         while True:
             t0 = time.time()
             st = self.run_epoch(epoch)

@@ -75,7 +75,7 @@ def candidate_predicate(cfg: CrawlConfig) -> F.Column:
 
 def plan_due(
     urls: DataFrame,
-    seen: DataFrame,
+    seen: DataFrame | None,
     bloom: PartitionedBloomView | None,
     cfg: CrawlConfig,
     fetch_seq_base: int,
@@ -83,9 +83,10 @@ def plan_due(
 ) -> DataFrame:
     """The epoch due set: unseen frontier rows, robots-filtered,
     politeness-budgeted per host, globally capped, with assigned
-    ``fetch_seq`` continuing the global fetch counter."""
+    ``fetch_seq`` continuing the global fetch counter. ``seen=None``:
+    the candidate predicate alone decides (``first_seen`` is exact)."""
     active = urls.filter(candidate_predicate(cfg))
-    cand = unseen(active, seen, bloom)
+    cand = active if seen is None else unseen(active, seen, bloom)
 
     if robots is not None and cfg.respect_robots:
         deny = robots.filter(F.col("allow") == 0).select(

@@ -178,21 +178,14 @@ CRAWL_METRICS = StructType(
         StructField("urls_discovered", LongType(), True),
         StructField("items_written", LongType(), True),
         StructField("duration_ms", LongType(), True),
+        # urls_seen HEAD after the epoch's append
         StructField("snapshot_id", LongType(), True),
-    ]
-)
-
-# per-partition (host-bucket) epoch metrics — the north rule asks for
-# "per-partition lineage/metrics" at each checkpoint, not just the
-# per-epoch roll-up above: which buckets fetched/discovered how much,
-# tied to the snapshot id for exact-resume auditing.
-CRAWL_METRICS_BUCKETS = StructType(
-    [
-        StructField("epoch", IntegerType(), False),
-        StructField("host_bucket", IntegerType(), False),
-        StructField("urls_due", LongType(), True),
-        StructField("urls_discovered", LongType(), True),
-        StructField("snapshot_id", LongType(), True),
+        # per-partition lineage: due/discovered URLs per host bucket
+        StructField("buckets", ArrayType(StructType([
+            StructField("host_bucket", IntegerType(), False),
+            StructField("urls_due", LongType(), True),
+            StructField("urls_discovered", LongType(), True),
+        ])), True),
     ]
 )
 
@@ -226,6 +219,5 @@ TABLE_SCHEMAS: dict[str, StructType] = {
     "votes": VOTES,
     "articles": ARTICLES,
     "crawl_metrics": CRAWL_METRICS,
-    "crawl_metrics_buckets": CRAWL_METRICS_BUCKETS,
     "robots": ROBOTS,
 }

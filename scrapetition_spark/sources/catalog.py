@@ -12,8 +12,13 @@ parquet + JSON manifests:
   member parquet files (appends never rewrite existing files — same
   as Iceberg manifest reuse, so N epochs cost O(new data), not
   O(table) per epoch);
-- ``_HEAD`` points at the current snapshot (the epoch checkpoint);
-  reads at HEAD or at any snapshot id (resume/time travel);
+- ``_HEAD`` points at the current snapshot; reads at HEAD or at any
+  snapshot id (resume/time travel);
+- a manifest also records the bucket spec of its files (≙ an Iceberg
+  partition spec id per snapshot): layout and files move together;
+- ``record_heads`` stores the HEADs of many tables as one commit
+  record (the epoch checkpoint), ``restore_heads`` rolls them back
+  to it;
 - ``merge_insert`` = MERGE WHEN NOT MATCHED INSERT: batch-internal
   first-occurrence dedup + ``left_anti`` against the live table.
   With a ``bucket_expr`` the table is stored in buckets derived from
@@ -35,7 +40,7 @@ import shutil
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -93,6 +98,9 @@ class Snapshot:
     # summary): table_bytes sums these instead of re-walking the data
     # dir on every call.
     sizes: dict[str, int]
+    # bucket spec the parts were written under (None: none given);
+    # every commit that keeps the layout carries it forward
+    spec: dict | None = None
 
 
 class Catalog:
@@ -134,7 +142,8 @@ class Catalog:
         with open(os.path.join(self._tdir(table), f"snap-{snapshot_id}.json")) as f:
             d = json.load(f)
             return Snapshot(
-                snapshot_id, d["files"], d.get("parts", {}), d.get("sizes", {})
+                snapshot_id, d["files"], d.get("parts", {}), d.get("sizes", {}),
+                d.get("spec"),
             )
 
     def _commit(
@@ -143,6 +152,7 @@ class Catalog:
         files: list[str],
         parts: dict[str, list[str]] | None = None,
         carry_sizes: dict[str, int] | None = None,
+        spec: dict | None = None,
     ) -> int:
         sid = self.head(table) + 1
         tdir = self._tdir(table)
@@ -154,12 +164,17 @@ class Catalog:
         members = list(files) + [p for dirs in (parts or {}).values() for p in dirs]
         sizes = {p: carry[p] if p in carry else _dir_bytes(p) for p in members}
         with open(os.path.join(tdir, f"snap-{sid}.json"), "w") as f:
-            json.dump({"files": files, "parts": parts or {}, "sizes": sizes}, f)
+            json.dump(
+                {"files": files, "parts": parts or {}, "sizes": sizes, "spec": spec}, f
+            )
+        self._set_head(table, sid)
+        return sid
+
+    def _set_head(self, table: str, sid: int) -> None:
         tmp = self._head_path(table) + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(sid))
         os.replace(tmp, self._head_path(table))  # atomic pointer swap
-        return sid
 
     def _write_files(
         self, table: str, df: DataFrame, hint_partitions: int | None = None
@@ -176,25 +191,6 @@ class Catalog:
         n = hint_partitions if hint_partitions else WRITE_PARTITIONS
         df.coalesce(n).write.mode("overwrite").parquet(out)
         return [out]
-
-    # ----- table properties (≙ Iceberg table properties) --------------------
-
-    def get_meta(self, table: str) -> dict:
-        """Durable table-level properties (e.g. the commit-bucket spec
-        a partition-scoped layout was written under)."""
-        try:
-            with open(os.path.join(self._tdir(table), "_META.json")) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
-
-    def set_meta(self, table: str, meta: dict) -> None:
-        tdir = self._tdir(table)
-        os.makedirs(tdir, exist_ok=True)
-        tmp = os.path.join(tdir, "_META.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(tdir, "_META.json"))
 
     # ----- public API -------------------------------------------------------
 
@@ -225,19 +221,16 @@ class Catalog:
 
     def _append_files(self, table: str, new_files: list[str]) -> int:
         prev = self._head_snapshot(table)
-        return self._commit(table, prev.files + new_files, prev.parts, prev.sizes)
+        return self._commit(
+            table, prev.files + new_files, prev.parts, prev.sizes, prev.spec
+        )
 
     def append_skip_empty(self, table: str, df: DataFrame) -> int:
         """Append ``df``, but if the write produced zero rows, retract
-        the fresh dir and advance the snapshot unchanged
-        (``empty_commit``). Emptiness is read from the written parquet
-        footers driver-side, so the plan behind ``df`` executes exactly
-        ONCE — inside the write. (The first cut probed emptiness with
-        an eager ``localCheckpoint()`` + ``isEmpty()``, which
-        materialized the whole frame to executor-local disk before the
-        real parquet write — doubling sink I/O on every first-epoch
-        MERGE; measured on the 2.1M-URL scaling epoch, see
-        BENCH/BASELINE.md.)"""
+        the fresh dir and advance the snapshot unchanged. Emptiness is
+        read from the written parquet footers driver-side, so the plan
+        behind ``df`` executes exactly ONCE — inside the write (an
+        eager ``isEmpty()`` probe doubled sink I/O; BENCH/BASELINE.md)."""
         new_files = self._write_files(table, df)
         # every dir must be READABLY empty (0): a -1 (unreadable
         # footer) from one dir must not cancel a +1 from another —
@@ -245,14 +238,8 @@ class Catalog:
         if all(_parquet_rows(p) == 0 for p in new_files):
             for p in new_files:
                 shutil.rmtree(p, ignore_errors=True)
-            return self.empty_commit(table)
+            new_files = []
         return self._append_files(table, new_files)
-
-    def empty_commit(self, table: str) -> int:
-        """Advance the snapshot without data change (epoch with no
-        writes keeps snapshot ids aligned with epochs if desired)."""
-        prev = self._head_snapshot(table)
-        return self._commit(table, prev.files, prev.parts, prev.sizes)
 
     def table_bytes(self, table: str, snap: "Snapshot | None" = None) -> int:
         """On-disk bytes of the member files at HEAD, summed from the
@@ -301,16 +288,6 @@ class Catalog:
             shutil.rmtree(out, ignore_errors=True)
         return out, found
 
-    def _record_spec(self, table: str, bucket_spec: dict | None) -> None:
-        """Store ``bucket_spec`` as the table's layout property. Called
-        only once the layout it describes is committed: a crash in
-        between leaves the old spec, so the mismatch is detected again
-        and the table rewritten again — never pruned under a spec its
-        files were not written with."""
-        meta = self.get_meta(table)
-        if bucket_spec is not None and meta.get("bucket_spec") != bucket_spec:
-            self.set_meta(table, {**meta, "bucket_spec": bucket_spec})
-
     def overwrite_partitions(
         self,
         table: str,
@@ -324,8 +301,9 @@ class Catalog:
         rows, carrying every other bucket's files forward UNCHANGED —
         per-epoch commit cost is O(touched data), not O(table).
         ``touched=None`` = full rewrite (also required when plain
-        appended files exist — guarded below). ``bucket_spec`` is
-        recorded after the commit."""
+        appended files exist — guarded below). The snapshot records
+        ``bucket_spec`` (a scoped commit without one keeps the
+        table's)."""
         prev = self._head_snapshot(table)
         if touched is not None and prev.files:
             raise ValueError(
@@ -343,9 +321,9 @@ class Catalog:
                 parts[k] = (
                     [os.path.join(out, f"__part={k}")] if k in found else []
                 )
-        sid = self._commit(table, [], parts=parts, carry_sizes=prev.sizes)
-        self._record_spec(table, bucket_spec)
-        return sid
+        if touched is not None and bucket_spec is None:
+            bucket_spec = prev.spec
+        return self._commit(table, [], parts, prev.sizes, bucket_spec)
 
     def read_buckets(
         self, table: str, schema: StructType, buckets: list[int]
@@ -372,16 +350,17 @@ class Catalog:
         dirs and ADD them to each bucket's member list — existing
         files of every bucket are carried forward verbatim (≙ an
         Iceberg append to a bucket-partitioned table: new data files,
-        manifests of old ones reused). ``bucket_spec`` is recorded
-        after the commit."""
+        manifests of old ones reused). The snapshot records
+        ``bucket_spec``, or keeps the table's when none is given."""
         prev = self._head_snapshot(table)
         out, found = self._write_partitioned(table, df, part_col)
         parts = {k: list(v) for k, v in prev.parts.items()}
         for k in sorted(found):
             parts.setdefault(k, []).append(os.path.join(out, f"__part={k}"))
-        sid = self._commit(table, prev.files, parts, carry_sizes=prev.sizes)
-        self._record_spec(table, bucket_spec)
-        return sid
+        return self._commit(
+            table, prev.files, parts, prev.sizes,
+            prev.spec if bucket_spec is None else bucket_spec,
+        )
 
     def compact_buckets(self, table: str, max_files: int = 16) -> int | None:
         """Fold any bucket whose member-dir list exceeds ``max_files``
@@ -402,7 +381,7 @@ class Catalog:
                 "overwrite"
             ).parquet(out)
             parts[k] = [out]
-        return self._commit(table, snap.files, parts, carry_sizes=snap.sizes)
+        return self._commit(table, snap.files, parts, snap.sizes, snap.spec)
 
     def merge_insert(
         self,
@@ -511,13 +490,8 @@ class Catalog:
         has no snapshot yet, or it holds no plain files (rows of
         unknown buckets) and was written under exactly
         ``bucket_spec``."""
-        if not self.exists(table):
-            return True
-        has_plain, _ = self.partition_state(table)
-        return (
-            not has_plain
-            and self.get_meta(table).get("bucket_spec") == bucket_spec
-        )
+        snap = self._head_snapshot(table)
+        return snap.snapshot_id < 0 or (not snap.files and snap.spec == bucket_spec)
 
     def expire_snapshots(self, table: str, keep_last: int = 2) -> int:
         """Delete snapshot manifests older than the newest
@@ -599,3 +573,39 @@ class Catalog:
 
     def drop(self, table: str) -> None:
         shutil.rmtree(self._tdir(table), ignore_errors=True)
+
+    # ----- commit record: one atomic commit point over many tables ---------
+
+    def record_heads(self, tables: tuple[str, ...]) -> None:
+        """Store the HEAD of each of ``tables`` (-1: absent) as the
+        catalog's commit record, swapped in atomically like ``_HEAD``.
+        Until the next record, later writes to them are uncommitted."""
+        path = os.path.join(self.root, "_RECORD.json")
+        with open(path + ".tmp", "w") as f:
+            json.dump({t: self.head(t) for t in tables}, f)
+        os.replace(path + ".tmp", path)
+
+    def restore_heads(self) -> bool:
+        """Move every recorded table back to its record (≙ Iceberg
+        rollback-to-snapshot): drop a table recorded absent, reset a
+        HEAD past its record and delete the manifests above it. The
+        recorded snapshots survive as long as expiry runs only after a
+        record. Returns whether any table moved (none without a record)."""
+        try:
+            with open(os.path.join(self.root, "_RECORD.json")) as f:
+                heads = json.load(f)
+        except FileNotFoundError:
+            return False
+        moved = False
+        for table, sid in heads.items():
+            moved |= self.head(table) > sid
+            if sid < 0:
+                self.drop(table)
+            elif self.exists(table):
+                if self.head(table) > sid:
+                    self._set_head(table, sid)
+                tdir = self._tdir(table)
+                for name in os.listdir(tdir):
+                    if name.startswith("snap-") and int(name[5:-5]) > sid:
+                        os.remove(os.path.join(tdir, name))
+        return moved

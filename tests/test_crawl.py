@@ -7,11 +7,14 @@ seen/url/item *sets* (SURVEY.md §7.3)."""
 
 from __future__ import annotations
 
+import os
 import tempfile
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
 
+from epoch_faults import COMMIT_POINTS, SINK_POINTS, crawl_state, crawl_through_faults
 from reference_sim import simulate
 from scrapetition_spark.config import ALL_LINKS_DISPATCHERS, CrawlConfig
 from scrapetition_spark.crawl import CrawlEngine
@@ -21,6 +24,8 @@ from scrapetition_spark.sources.fixtures import documents_df, fixture_site
 from scrapetition_spark.plans.seen import BloomFilter
 
 SEED = "https://www.zeit.de/politik/2020-01/art-a"
+SEQ_FIFO = CrawlConfig("www.zeit.de", follow_links=True, sequential=True,
+                       politeness_sec=0)
 
 
 @pytest.fixture(scope="module")
@@ -36,6 +41,15 @@ def docs(spark, site):
 def _engine(spark, docs, cfg, **kw):
     cat = Catalog(spark, tempfile.mkdtemp(prefix="crawl-"))
     return CrawlEngine(spark, cat, cfg, docs, **kw), cat
+
+
+@pytest.fixture(scope="module")
+def fifo_catalog(spark, docs):
+    """The clean sequential FIFO crawl of the fixture site."""
+    eng, cat = _engine(spark, docs, SEQ_FIFO)
+    eng.seed([SEED])
+    eng.run()
+    return cat
 
 
 def _trace(cat):
@@ -60,13 +74,9 @@ def _commentids(cat):
     return {r["id"] for r in cat.read("comments", COMMENTS).collect()}
 
 
-def test_sequential_fifo_exact_order(spark, site, docs):
-    cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=True,
-                      politeness_sec=0)
-    sim = simulate(site, [SEED], cfg)
-    eng, cat = _engine(spark, docs, cfg)
-    eng.seed([SEED])
-    eng.run()
+def test_sequential_fifo_exact_order(site, fifo_catalog):
+    cat = fifo_catalog
+    sim = simulate(site, [SEED], SEQ_FIFO)
     assert _trace(cat) == sim.trace
     assert _urlset(cat) == set(sim.inserted_urls)
     assert _edgeset(cat) == set(sim.edges)
@@ -148,20 +158,32 @@ def test_wide_epochs_same_final_state(spark, site, docs):
     assert _commentids(cat) == {c["id"] for c in sim.comments}
 
 
-def test_resume_idempotent(spark, site, docs):
-    """Kill-and-restart (≙ -d resume, Main.hs:247-250): a new engine
-    on the same catalog finishes the crawl to the identical state."""
-    cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=True,
-                      politeness_sec=0)
+def test_failure_at_every_write_resumes_to_clean_state(
+    spark, site, docs, fifo_catalog, monkeypatch
+):
+    """Kill-and-restart inside epochs (≙ -d resume, Main.hs:247-250):
+    the sequential crawl's epochs fail, in turn, at each of their
+    writes — every item sink, url_edges, the urls commit, the
+    urls_seen append, the metrics append and the epoch record — and a
+    fresh engine resumes after each, with per-epoch snapshot expiry at
+    its tightest. The catalog ends equal to the clean crawl's (trace,
+    urls, edges, items, each epoch's metrics row once), the trace is
+    bit-exact vs the simulator, urls_seen stays bucketed and expiry
+    still bounds the manifests."""
+    cfg = replace(SEQ_FIFO, expire_keep_snapshots=1)
     sim = simulate(site, [SEED], cfg)
-    eng, cat = _engine(spark, docs, cfg)
-    eng.seed([SEED])
-    eng.run(max_epochs=3)
-    # fresh engine = fresh driver process; state only from the catalog
-    eng2 = CrawlEngine(spark, cat, cfg, docs)
-    eng2.run()
+    cat = crawl_through_faults(
+        spark, monkeypatch, lambda c: CrawlEngine(spark, c, cfg, docs), SEED,
+        SINK_POINTS + COMMIT_POINTS, len(sim.trace),
+    )
+    assert crawl_state(cat) == crawl_state(fifo_catalog)
     assert _trace(cat) == sim.trace
     assert _urlset(cat) == set(sim.inserted_urls)
+    assert cat.prunable_buckets("urls_seen", {"n_host_buckets": cfg.n_host_buckets})
+    for t in cat.tables():
+        snaps = [f for f in os.listdir(os.path.join(cat.root, t))
+                 if f.startswith("snap-")]
+        assert len(snaps) <= 2, t
 
 
 def test_bloom_exactness(spark):
@@ -246,7 +268,6 @@ def test_salted_due_plan_equivalence(spark, site, docs):
     """Two-phase salted top-K (hot-host skew defusal) must produce the
     identical due set and per-host order as the direct window."""
     from scrapetition_spark.plans.frontier import assign_fetch_seq, plan_due
-    from dataclasses import replace
 
     cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=False,
                       politeness_sec=0, per_host_budget=2)

@@ -271,8 +271,10 @@ def test_export_tsv_roundtrip(spark):
 
 def test_per_bucket_metrics(spark):
     """North rule: per-partition lineage/metrics at every checkpoint —
-    bucket-level due/discovered counts must sum to the epoch totals."""
-    from scrapetition_spark.schemas import CRAWL_METRICS, CRAWL_METRICS_BUCKETS
+    each epoch's one crawl_metrics row carries its due/discovered
+    counts per host bucket, which sum to the epoch totals, and the
+    urls_seen snapshot the epoch committed."""
+    from scrapetition_spark.schemas import CRAWL_METRICS
 
     docs = documents_df(spark, fixture_site())
     cfg = CrawlConfig("www.zeit.de", follow_links=True, politeness_sec=0,
@@ -282,17 +284,17 @@ def test_per_bucket_metrics(spark):
     eng.seed(["https://www.zeit.de/politik/2020-01/art-a"])
     stats = eng.run(max_epochs=3)
 
-    per_epoch = {r["epoch"]: r for r in cat.read("crawl_metrics", CRAWL_METRICS).collect()}
-    buckets = cat.read("crawl_metrics_buckets", CRAWL_METRICS_BUCKETS).collect()
-    by_epoch: dict[int, list] = {}
-    for r in buckets:
-        by_epoch.setdefault(r["epoch"], []).append(r)
-    for ep, rows in by_epoch.items():
-        assert sum(r["urls_due"] for r in rows) == per_epoch[ep]["urls_due"]
-        disc = sum(r["urls_discovered"] or 0 for r in rows)
-        assert disc == per_epoch[ep]["urls_discovered"]
-        # snapshot-keyed: every bucket row carries the epoch's snapshot
-        assert all(r["snapshot_id"] == per_epoch[ep]["snapshot_id"] for r in rows)
+    rows = cat.read("crawl_metrics", CRAWL_METRICS).orderBy("epoch").collect()
+    assert [r["epoch"] for r in rows] == [s.epoch for s in stats]
+    for r in rows:
+        assert r["buckets"]
+        assert len({b["host_bucket"] for b in r["buckets"]}) == len(r["buckets"])
+        assert sum(b["urls_due"] for b in r["buckets"]) == r["urls_due"]
+        disc = sum(b["urls_discovered"] or 0 for b in r["buckets"])
+        assert disc == r["urls_discovered"]
+    # each epoch appended to urls_seen; the last row names its HEAD
+    snaps = [r["snapshot_id"] for r in rows]
+    assert snaps == sorted(set(snaps)) and snaps[-1] == cat.head("urls_seen")
 
 
 def test_broadcast_hint_fully_disabled_at_zero(spark):
@@ -332,11 +334,11 @@ def test_catalog_name_map(spark, tmp_path):
 
 
 def test_bucket_spec_meta_survives_crashed_consolidation(spark, tmp_path):
-    """Crash-window regression (review finding): the bucket_spec meta
-    must be written AFTER the consolidating rewrite commits. If the
-    rewrite dies, the old spec must still be stored so resume
-    re-detects the mismatch instead of pruning old-spec dirs with the
-    new expr (silently refetching seen URLs)."""
+    """Crash-window regression (review finding): the bucket spec
+    changes only with the consolidating rewrite's commit. If the
+    rewrite dies, the HEAD snapshot still carries the old spec, so
+    resume re-detects the mismatch instead of pruning old-spec dirs
+    with the new expr (silently refetching seen URLs)."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -348,7 +350,6 @@ def test_bucket_spec_meta_survives_crashed_consolidation(spark, tmp_path):
     expr_a = F.abs(F.hash("url")) % 4
     # force the bucketed layout from birth
     cat.append_bucketed("seen", df, expr_a, spec_a)
-    assert cat.get_meta("seen").get("bucket_spec") == spec_a
     assert cat.prunable_buckets("seen", spec_a)
 
     # reopen under a CHANGED spec and crash the consolidating rewrite
@@ -365,19 +366,19 @@ def test_bucket_spec_meta_survives_crashed_consolidation(spark, tmp_path):
     with _pytest.raises(RuntimeError, match="simulated crash"):
         cat.append_bucketed("seen", df2, expr_b, spec_b)
     cat.overwrite_partitions = real
-    # the meta still claims the OLD spec — pruning under the new spec
+    # HEAD still carries the OLD spec — pruning under the new spec
     # stays disabled, so nothing reads wrong buckets
-    assert cat.get_meta("seen").get("bucket_spec") == spec_a
+    assert cat.prunable_buckets("seen", spec_a)
     assert not cat.prunable_buckets("seen", spec_b)
-    # retry converges: consolidation under spec_b, meta follows
+    # retry converges: consolidation under spec_b, spec follows
     cat.append_bucketed("seen", df2, expr_b, spec_b)
-    assert cat.get_meta("seen").get("bucket_spec") == spec_b
     assert cat.prunable_buckets("seen", spec_b)
+    assert not cat.prunable_buckets("seen", spec_a)
     assert cat.read("seen", df.schema).count() == 60
 
 
 def test_merge_insert_spec_meta_survives_crashed_consolidation(spark, tmp_path):
-    """Same crash-window contract for the MERGE path: spec meta
+    """Same crash-window contract for the MERGE path: the spec
     follows the consolidating rewrite, never precedes it."""
     import pytest as _pytest
     from pyspark.sql import functions as F
@@ -391,7 +392,7 @@ def test_merge_insert_spec_meta_survives_crashed_consolidation(spark, tmp_path):
     spec_b, expr_b = {"n": 8}, F.abs(F.hash("url")) % 8
     cat.merge_insert("items", df, ["url"], df.schema,
                      bucket_expr=expr_a, bucket_spec=spec_a)
-    assert cat.get_meta("items").get("bucket_spec") == spec_a
+    assert cat.prunable_buckets("items", spec_a)
 
     real = cat.overwrite_partitions
     cat.overwrite_partitions = lambda *a, **k: (_ for _ in ()).throw(
@@ -402,10 +403,11 @@ def test_merge_insert_spec_meta_survives_crashed_consolidation(spark, tmp_path):
         cat.merge_insert("items", df2, ["url"], df.schema,
                          bucket_expr=expr_b, bucket_spec=spec_b)
     cat.overwrite_partitions = real
-    assert cat.get_meta("items").get("bucket_spec") == spec_a
+    assert cat.prunable_buckets("items", spec_a)
+    assert not cat.prunable_buckets("items", spec_b)
     cat.merge_insert("items", df2, ["url"], df.schema,
                      bucket_expr=expr_b, bucket_spec=spec_b)
-    assert cat.get_meta("items").get("bucket_spec") == spec_b
+    assert cat.prunable_buckets("items", spec_b)
     # MERGE semantics intact across the crash + retry: 60 distinct keys
     assert cat.read("items", df.schema).count() == 60
 

@@ -17,7 +17,6 @@ from scrapetition_spark.functions.urls import host_bucket, url_domain
 from scrapetition_spark.schemas import (
     COMMENTS,
     CRAWL_METRICS,
-    CRAWL_METRICS_BUCKETS,
     UNIQUE_KEYS,
     URL_EDGES,
     URLS,
@@ -45,7 +44,7 @@ def _assert_bucketed(cat: Catalog, cfg: CrawlConfig, tables) -> None:
         has_plain, parts = cat.partition_state(t)
         assert cat.exists(t) and parts and not has_plain, t
         want = {"n_host_buckets": cfg.n_host_buckets} if t == "urls_seen" else commit
-        assert cat.get_meta(t)["bucket_spec"] == want, t
+        assert cat.prunable_buckets(t, want), t
 
 
 def _buckets(df, host_col, n: int) -> set[int]:
@@ -55,11 +54,23 @@ def _buckets(df, host_col, n: int) -> set[int]:
 def test_epoch_reads_only_touched_buckets(spark, monkeypatch):
     """Multi-host crawl seeded on every host, following links on one.
     After seeding and after each epoch no crawl-state table holds plain
-    files. Each epoch reads the item sinks, urls and urls_seen only
-    through ``read_buckets``, and only from the dirs of the buckets it
+    files. Each epoch reads the item sinks and urls only through
+    ``read_buckets``, and only from the dirs of the buckets it
     touches: the due pages' commit buckets (plus the literal fallback
-    domains' for comments), the due and discovered URLs' commit buckets
-    for urls, and the frontier's host buckets for urls_seen."""
+    domains' for comments) and the due and discovered URLs' commit
+    buckets for urls. The default seen path plans the due set from
+    urls alone: the epoch never reads urls_seen."""
+    _check_touched_reads(spark, monkeypatch, None)
+
+
+def test_bloom_epoch_reads_only_touched_buckets(spark, monkeypatch):
+    """The same crawl under the partitioned bloom, whose exact check
+    of bloom positives reads urls_seen: only the frontier's host
+    buckets of it, through ``read_buckets``."""
+    _check_touched_reads(spark, monkeypatch, "partitioned")
+
+
+def _check_touched_reads(spark, monkeypatch, bloom_mode) -> None:
     docs = fixtures.synthetic_web(spark, n_docs=300, n_hosts=8, fanout=4,
                                   seed=11).localCheckpoint()
     seeds = [r["seed"] for r in docs.groupBy(F.regexp_extract("doc_id", "//([^/]+)/", 1))
@@ -89,7 +100,7 @@ def test_epoch_reads_only_touched_buckets(spark, monkeypatch):
     monkeypatch.setattr(Catalog, "read", rec_read)
 
     cat = Catalog(spark, tempfile.mkdtemp(prefix="onelayout-"))
-    eng = CrawlEngine(spark, cat, cfg, docs)
+    eng = CrawlEngine(spark, cat, cfg, docs, bloom_mode=bloom_mode)
     eng.seed(seeds)
     _assert_bucketed(cat, cfg, ["urls"])
     fallback = {r[0] % ncb for r in spark.range(1).select(
@@ -117,8 +128,11 @@ def test_epoch_reads_only_touched_buckets(spark, monkeypatch):
             "comments": due_cb | fallback,
             "url_edges": due_cb,
             "urls": due_cb | disc_cb,
-            "urls_seen": frontier,
         }
+        if bloom_mode:
+            allowed["urls_seen"] = frontier
+        else:
+            assert "urls_seen" not in {t for t, _, _ in reads}
         assert not set(whole) & {"comments", "url_edges", "urls_seen"}, whole
         by_table = {}
         for table, buckets, files in reads:
@@ -132,7 +146,8 @@ def test_epoch_reads_only_touched_buckets(spark, monkeypatch):
                 narrowed.add(table)
         if epoch > 0:
             assert set(by_table) == set(allowed), (epoch, set(by_table))
-    assert narrowed >= {"comments", "url_edges", "urls_seen"}, narrowed
+    pruned = {"comments", "url_edges"} | ({"urls_seen"} if bloom_mode else set())
+    assert narrowed >= pruned, narrowed
 
     comments = cat.read("comments", COMMENTS)
     assert comments.count() == comments.select("id", "domain").distinct().count() > 0
@@ -202,14 +217,13 @@ def test_older_layout_resumes_to_clean_crawl(spark):
     old = Catalog(spark, tempfile.mkdtemp(prefix="onelayout-old-"))
     old.merge_insert("urls", mid.read("urls", URLS), UNIQUE_KEYS["urls"], URLS)
     for table, schema in (("urls_seen", URLS_SEEN), ("url_edges", URL_EDGES),
-                          ("crawl_metrics", CRAWL_METRICS),
-                          ("crawl_metrics_buckets", CRAWL_METRICS_BUCKETS)):
+                          ("crawl_metrics", CRAWL_METRICS)):
         old.append(table, mid.read(table, schema))
     keys = UNIQUE_KEYS["comments"]
     old.overwrite_partitions(
         "comments", mid.read("comments", COMMENTS),
-        F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(8)).cast("int"))
-    old.set_meta("comments", {"bucket_spec": {"n_item_buckets": 8}})
+        F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(8)).cast("int"),
+        bucket_spec={"n_item_buckets": 8})
     assert all(old.partition_state(t)[0] for t in ("urls", "urls_seen", "url_edges"))
 
     CrawlEngine(spark, old, cfg, docs).run()
