@@ -158,6 +158,20 @@ def test_wide_epochs_same_final_state(spark, site, docs):
     assert _commentids(cat) == {c["id"] for c in sim.comments}
 
 
+def test_resume_idempotent(spark, site, docs):
+    """Kill-and-restart (≙ -d resume, Main.hs:247-250): a new engine
+    on the same catalog finishes the crawl to the identical state."""
+    sim = simulate(site, [SEED], SEQ_FIFO)
+    eng, cat = _engine(spark, docs, SEQ_FIFO)
+    eng.seed([SEED])
+    eng.run(max_epochs=3)
+    # fresh engine = fresh driver process; state only from the catalog
+    eng2 = CrawlEngine(spark, cat, SEQ_FIFO, docs)
+    eng2.run()
+    assert _trace(cat) == sim.trace
+    assert _urlset(cat) == set(sim.inserted_urls)
+
+
 def test_failure_at_every_write_resumes_to_clean_state(
     spark, site, docs, fifo_catalog, monkeypatch
 ):
