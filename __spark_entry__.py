@@ -694,7 +694,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def crawl_epoch_wide(spark, sf):
         """Wide-epoch (scale-path) crawl of the same fixture site:
-        per-host-budgeted batches, exact seen anti-join, every broadcast
+        per-host-budgeted batches, due sets planned from
+        ``urls.first_seen`` (the exact seen truth), every broadcast
         hint active. Fetch order is engine-defined, so the oracle
         checks the reference-equal final seen SET (url, status) — the
         north rule's seen-set gate."""
@@ -717,11 +718,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return cat.read("urls_seen", URLS_SEEN).select("url", "status")
 
     def crawl_epoch_scoped(spark, sf):
-        """Wide-epoch crawl through the partitioned bloom sidecar
-        (scoped per-epoch commits) in front of the pruned seen reads
-        of the bucketed urls_seen. The final seen SET must equal the
-        default-path crawl's — the driver-verified witness that the
-        bloom prefilter changes plans, never results."""
+        """The wide crawl with one commit bucket per host bucket
+        (``n_commit_buckets = n_host_buckets``, the production
+        layout): every sink reads and rewrites only the buckets of the
+        hosts its epoch touches and carries every other bucket's files
+        forward. The final seen SET must equal the wide crawl's (the
+        same oracle) — the oracle-verified witness that the commit
+        layout changes plans, never results."""
         import tempfile
 
         from scrapetition_spark.config import CrawlConfig
@@ -733,10 +736,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = documents_df(spark, fixture_site())
         cfg = CrawlConfig(FIXTURE_START_DOMAIN, follow_links=True,
                           sequential=False, per_host_budget=4,
-                          politeness_sec=0)
+                          politeness_sec=0, n_commit_buckets=256)
         cat = Catalog(spark, tempfile.mkdtemp(prefix="entryscoped-"))
-        eng = CrawlEngine(spark, cat, cfg, docs, expected_urls=4096,
-                          bloom_mode="partitioned")
+        eng = CrawlEngine(spark, cat, cfg, docs)
         eng.seed([FIXTURE_SEED])
         eng.run()
         return cat.read("urls_seen", URLS_SEEN).select("url", "status")

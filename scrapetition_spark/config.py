@@ -95,7 +95,9 @@ class CrawlConfig:
     # -a (Main.hs:89-91; seen=[] wiring Main.hs:246): ignore the
     # PERSISTED seen set — every scheduled URL is due again with a
     # fresh fetch_seq. Within-run dedup still applies (the reference's
-    # loop accumulates seen' from [] regardless, App.hs:63).
+    # loop accumulates seen' from [] regardless, App.hs:63): an
+    # anti-join against this run's urls_seen rows, the crawl's only
+    # seen check besides urls.first_seen.
     visit_again: bool = False
     scraper_name: str = "scrapetition-spark"  # ≙ getProgName (App.hs:130-131)
     politeness_sec: float = 2.0  # threadDelay 2000000 (App.hs:68)
@@ -113,9 +115,10 @@ class CrawlConfig:
     # few buckets.
     n_commit_buckets: int = 16
     n_frontier_salts: int = 8  # hot-host two-phase top-K (1 = off)
-    # Accepted only as 0 (urls_seen is always bucketed); kept because
-    # the benchmark's crawl workload still passes it. The next change
-    # to the benchmark removes it.
+    # Accepted only as 0 (urls_seen is always bucketed) and has no
+    # effect, like CrawlEngine's bloom_mode; both are kept because the
+    # benchmark's crawl workload still passes them. The next change to
+    # the benchmark removes them.
     seen_bucket_min_bytes: int = 0
     # Epoch frames derived from the due set (due, fetched, followed)
     # get an explicit F.broadcast hint only while their known row

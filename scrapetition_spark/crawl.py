@@ -12,8 +12,7 @@ driver loop over set-oriented Spark jobs. One epoch =
     → dispatcher gating + metadata enrichment (C8, C11)
     → MERGE sinks for items/urls/edges (S6-S8)
     → frontier merge with FIFO/LIFO union semantics (C3/C4)
-    → seen-set append (C2), plus the bloom sidecar OR-merge when the
-      partitioned prefilter is on
+    → seen-set append (C2)
     → metrics row, then the epoch's commit record (exact resume)
 
 ``cfg.sequential=True`` fetches exactly one URL per epoch, which
@@ -26,14 +25,16 @@ in one commit point, a record of every ``ENGINE_TABLES`` HEAD
 (``Catalog.record_heads``), and every entry point that writes first
 rolls back to it (``Catalog.restore_heads``). An epoch that fails at
 any write resumes to the clean crawl's state (tests/test_crawl.py,
-tests/test_partitioned_bloom.py), and ``urls.first_seen`` is exact,
-so the default due set needs no seen-set anti-join.
+tests/test_partitioned_bloom.py), and ``urls.first_seen`` is exact.
+So ``urls`` is the crawl's one seen truth: every due set is planned
+from it with the frontier's candidate predicate, and the only seen
+check left is ``-a``'s run-local anti-join against ``urls_seen``.
 
 Every crawl-state table is bucketed from its first write, and each
 table's bucket is a function of its key that equals the fetched
 page's host bucket (urls, the item sinks: the commit bucket
-``pmod(host_bucket, n_commit_buckets)``; urls_seen and the bloom
-sidecar: the host bucket). The epoch therefore knows on the driver,
+``pmod(host_bucket, n_commit_buckets)``; urls_seen: the host
+bucket). The epoch therefore knows on the driver,
 from its due set and its discovered links, which buckets each sink
 touches, and every sink reads and writes only those.
 """
@@ -58,11 +59,6 @@ from scrapetition_spark.plans.frontier import (
     gate_discovered,
     plan_due,
 )
-from scrapetition_spark.plans.seen import (
-    BLOOM_SIDECAR,
-    PartitionedBloom,
-    PartitionedBloomView,
-)
 from scrapetition_spark.session import local_df
 from scrapetition_spark.schemas import (
     ARTICLES,
@@ -81,8 +77,8 @@ _URL_ORDER = ["source_fetch_seq", "dispatcher_idx", "pos"]
 # every table the engine writes, by logical name: the epoch's commit
 # record holds the HEAD of each
 ENGINE_TABLES = (
-    "urls", "urls_seen", "bloom_sidecar", "comments", "users", "votes",
-    "articles", "url_edges", "crawl_metrics",
+    "urls", "urls_seen", "comments", "users", "votes", "articles",
+    "url_edges", "crawl_metrics",
 )
 log = logging.getLogger(__name__)
 
@@ -113,7 +109,6 @@ class CrawlEngine:
         cfg: CrawlConfig,
         documents: DataFrame,
         robots: DataFrame | None = None,
-        expected_urls: int = 1 << 16,
         bloom_mode: str | None = None,
     ):
         self.spark = spark
@@ -123,71 +118,17 @@ class CrawlEngine:
         self.cfg = cfg
         self.documents = documents
         self.robots = robots
-        # Seen filter. Default (None): the exact, bucket-pruned
-        # anti-join against urls_seen. "partitioned": the same
-        # anti-join behind a per-host-bucket bloom sidecar stored as a
-        # catalog table, OR-merged per epoch and probed bucket-local
-        # (north rule; the 10^10-key path — see plans/seen.py).
+        # Accepted for callers that still pass it; it has no effect:
+        # urls.first_seen is the crawl's one seen truth, and the bloom
+        # (plans/seen.py) serves the c5/c5b operators only.
         if bloom_mode not in (None, "partitioned"):
             raise ValueError(f"unknown bloom_mode {bloom_mode!r}")
-        self.pbloom: PartitionedBloom | None = (
-            PartitionedBloom(expected_urls, n_buckets=cfg.n_host_buckets)
-            if bloom_mode == "partitioned"
-            else None
-        )
         self.fetch_seq_base = 0
-        self._sidecar_checked = False
         self._fallback_buckets: dict[str, int] | None = None
         # first epoch of THIS run: visit_again (-a) ignores seen rows
         # from epochs before it (≙ runScrapers urls [] — Main.hs:246
         # starts the run's seen set empty; within-run dedup stays)
         self.run_start_epoch = 0
-
-    def _recover_sidecar(self) -> None:
-        """Once per engine: make the stored sidecar agree with the
-        exact urls_seen truth before anything probes or merges it (the
-        two commit in one epoch record, so no crash splits them). A
-        sidecar absent while urls_seen has rows (dropped, or the crawl
-        began without ``bloom_mode``), stored under other (m_bits, k,
-        n_buckets) (probing it would yield silent false negatives), or
-        held in plain files (rows of unknown buckets, which a scoped
-        commit would drop) is rebuilt from urls_seen, partitioned."""
-        if self.cat.exists("bloom_sidecar"):
-            has_plain, _ = self.cat.partition_state("bloom_sidecar")
-            stale = has_plain or not self.pbloom.matches(
-                self.cat.read("bloom_sidecar", BLOOM_SIDECAR)
-            )
-        else:
-            stale = self.cat.exists("urls_seen")
-        if stale:
-            seen_b = self.cat.read("urls_seen", URLS_SEEN).select(
-                "url", self._seen_bucket_expr().alias("host_bucket")
-            )
-            self.cat.overwrite_partitions(
-                "bloom_sidecar", self.pbloom.build(seen_b), "bucket", None
-            )
-
-    def _restore(self) -> None:
-        """Roll the engine tables back to the last epoch record. A
-        rollback can restore a sidecar this engine already checked, so
-        the next probe checks it again."""
-        if self.cat.restore_heads():
-            self._sidecar_checked = False
-
-    def _seen_filter(self, active: list[int]) -> PartitionedBloomView | None:
-        """The bloom view over the ``active`` buckets' sidecar rows
-        only: a candidate probes its own bucket's row, so the epoch
-        reads O(active buckets) of the sidecar, never all of it."""
-        if self.pbloom is None:
-            return None
-        if not self._sidecar_checked:
-            self._recover_sidecar()
-            self._sidecar_checked = True
-        if not self.cat.exists("bloom_sidecar"):
-            return None
-        return PartitionedBloomView(
-            self.pbloom, self.cat.read_buckets("bloom_sidecar", BLOOM_SIDECAR, active)
-        )
 
     # ------------------------------------------------------------------ util
 
@@ -249,15 +190,14 @@ class CrawlEngine:
             touched, self._commit_spec(),
         )
 
-    def _read_seen(self, urls: DataFrame) -> tuple[DataFrame, list[int]]:
-        """The seen frame for the due-set anti-join of the bloom and
-        ``-a`` paths, and the frontier's active host buckets. A bucketed
-        urls_seen (always, but for a catalog written under another
-        spec) is read ONLY in those buckets: the anti-join matches on
-        url equality and equal urls share a host bucket, so seen rows
-        of other buckets match no candidate. The bloom probe reads the
-        same buckets of its sidecar. At 10^10 seen URLs this makes the
-        read O(active buckets); a domain-restricted crawl (the
+    def _read_seen(self, urls: DataFrame) -> DataFrame:
+        """``-a``'s seen set (Main.hs:89-91, seen=[] at :246): the
+        urls_seen rows of this run's epochs, read ONLY in the
+        frontier's active host buckets (but for a catalog written under
+        another spec). The due-set anti-join matches on url equality
+        and equal urls share a host bucket, so seen rows of other
+        buckets match no candidate: at 10^10 seen URLs the read is
+        O(active buckets), and a domain-restricted crawl (the
         reference default, gate C7) reads exactly one bucket."""
         # MUST be plan_due's own predicate (shared helper): the bucket
         # cover is only sound for exactly the candidate set it joins
@@ -267,8 +207,10 @@ class CrawlEngine:
             for r in active.select("host_bucket").distinct().collect()
         )
         if self.cat.prunable_buckets("urls_seen", self._seen_bucket_spec()):
-            return self.cat.read_buckets("urls_seen", URLS_SEEN, buckets), buckets
-        return self.cat.read("urls_seen", URLS_SEEN), buckets
+            seen = self.cat.read_buckets("urls_seen", URLS_SEEN, buckets)
+        else:
+            seen = self.cat.read("urls_seen", URLS_SEEN)
+        return seen.filter(F.col("epoch") >= F.lit(self.run_start_epoch))
 
     def _url_row(self, df: DataFrame, scheduled: bool) -> DataFrame:
         """Project a (target/lineage) frame onto the urls schema."""
@@ -319,7 +261,7 @@ class CrawlEngine:
         wins) into urls as scheduled rows. Seeding rewrites the whole
         table, so a catalog in another layout leaves it in the live
         one."""
-        self._restore()
+        self.cat.restore_heads()
         first = targets.groupBy("target").agg(F.min("pos").alias("pos")).select(
             "target",
             F.lit(-1).alias("discovery_epoch"),
@@ -337,7 +279,7 @@ class CrawlEngine:
     def resume_not_seen(self) -> None:
         """≙ ``crawl (NotSeenFromDB ...)`` (Main.hs:247-250; S11):
         schedule every known URL with first_seen IS NULL."""
-        self._restore()
+        self.cat.restore_heads()
         urls, _ = self._read_urls()
         rescheduled = urls.withColumn(
             "in_frontier",
@@ -379,22 +321,12 @@ class CrawlEngine:
 
         cfg = self.cfg
         urls, urls_live = self._read_urls()
-        if self.pbloom is None and not cfg.visit_again:
-            # urls.first_seen commits with urls_seen in one epoch record:
-            # the candidate predicate alone excludes every fetched URL
-            seen, active = None, None
-        else:
-            seen, active = self._read_seen(urls)
-        if cfg.visit_again:
-            # -a (Main.hs:89-91, seen=[] at :246): drop persisted seen
-            # rows from before this run; bloom positives for them fall
-            # through to this (filtered) exact anti-join and survive.
-            seen = seen.filter(F.col("epoch") >= F.lit(self.run_start_epoch))
-
-        due = plan_due(
-            urls, seen, self._seen_filter(active), cfg, self.fetch_seq_base,
-            self.robots,
-        )
+        # urls.first_seen commits with urls_seen in one epoch record:
+        # the candidate predicate alone excludes every fetched URL.
+        # Under -a fetched URLs are candidates again, and only this
+        # run's seen rows dedup them.
+        seen = self._read_seen(urls) if cfg.visit_again else None
+        due = plan_due(urls, seen, cfg, self.fetch_seq_base, self.robots)
         # due_counts: due URLs per host bucket, known on the driver
         # without another job — every sink's touched buckets and the
         # per-bucket metrics derive from it
@@ -682,30 +614,9 @@ class CrawlEngine:
         # ---- execute the independent writes concurrently (each hits
         # its own table; Spark schedules the jobs in parallel). The
         # urls-table rewrite (S6 inserts + S9 seen-update + C3 merge —
-        # one MERGE INTO with two WHEN clauses on Iceberg), the
-        # seen-set append (C2) and the bloom sidecar fold-in join the pool.
+        # one MERGE INTO with two WHEN clauses on Iceberg) and the
+        # seen-set append (C2) join the pool.
         from concurrent.futures import ThreadPoolExecutor
-
-        def _bloom_task():
-            # epoch delta folded map-side, OR-merged bucket-local; the
-            # driver never materializes any bitset. The commit is
-            # PARTITION-SCOPED (≙ Iceberg dynamic partition overwrite):
-            # only buckets with due URLs this epoch are OR-merged and
-            # rewritten; every other bucket's bitset file is carried
-            # forward verbatim — per-epoch sidecar cost is O(touched
-            # buckets), never O(sidecar). At 10^10 keys the sidecar is
-            # ~20 GB; a whole-table read+rewrite per epoch would dwarf
-            # sparse epochs on its own. _recover_sidecar already left
-            # any existing sidecar partitioned under this engine's
-            # parameters.
-            delta = self.pbloom.build(due.select("url", "host_bucket"))
-            if not self.cat.exists("bloom_sidecar"):
-                self.cat.overwrite_partitions("bloom_sidecar", delta, "bucket", None)
-                return
-            touched = sorted(due_counts)
-            old = self.cat.read_buckets("bloom_sidecar", BLOOM_SIDECAR, touched)
-            merged = self.pbloom.or_merge(old.unionByName(delta))
-            self.cat.overwrite_partitions("bloom_sidecar", merged, "bucket", touched)
 
         spec = self._commit_spec()
         # a urls table in another layout is rewritten whole (None)
@@ -732,8 +643,6 @@ class CrawlEngine:
                     self._seen_bucket_expr(), self._seen_bucket_spec(),
                 )
             )
-            if self.pbloom is not None:
-                futs.append(pool.submit(_bloom_task))
             for f in futs:
                 f.result()  # propagate failures
         mark("sinks")
@@ -820,6 +729,8 @@ class CrawlEngine:
         merged = t.join(hint(f, n_due), F.col("t.url") == F.col("f_url"), "left_outer")
 
         if followed is not None:
+            # the followed rows' lineage, joined by both the merge of
+            # existing rows and the scheduling of new ones
             fo = followed.select(
                 F.col("target").alias("m_url"),
                 F.col("discovery_epoch").alias("m_epoch"),
@@ -874,15 +785,8 @@ class CrawlEngine:
             # brand-new rows (not in table): scheduled iff followed
             ins = inserts.join(urls.select(F.col("url")), ["url"], "left_anti")
             if followed is not None:
-                fo_keys = followed.select(
-                    F.col("target").alias("m_url"),
-                    F.col("discovery_epoch").alias("m_epoch"),
-                    F.col("source_fetch_seq").alias("m_seq"),
-                    F.col("dispatcher_idx").alias("m_didx"),
-                    F.col("pos").alias("m_pos"),
-                )
                 ins = ins.join(
-                    hint(fo_keys, n_followed), ins["url"] == fo_keys["m_url"], "left_outer"
+                    hint(fo, n_followed), ins["url"] == fo["m_url"], "left_outer"
                 ).select(
                     "url", "status", "encoding", "first_seen", "last_seen",
                     "first_scraped", "last_scraped", "scraper", "host",
@@ -905,7 +809,7 @@ class CrawlEngine:
         App.hs:45-47) or max_epochs is hit. ``sleep=True`` enforces the
         politeness budget in wall-clock (threadDelay ≙ App.hs:68)."""
         stats: list[EpochStats] = []
-        self._restore()  # crawl_metrics and urls_seen are exact after it
+        self.cat.restore_heads()  # crawl_metrics and urls_seen are exact after it
         last = self.cat.read("crawl_metrics", CRAWL_METRICS).agg(F.max("epoch")).first()[0]
         epoch = 0 if last is None else last + 1
         self.fetch_seq_base = self.cat.read("urls_seen", URLS_SEEN).count() if epoch else 0

@@ -8,8 +8,10 @@ set-oriented plans over the ``urls`` table:
 - C3 FIFO/LIFO merge with ``Data.List.union`` dedup semantics
 - C4 deterministic discovery order via the total lineage key
   ``(discovery_epoch, source_fetch_seq, dispatcher_idx, pos)``
-- C5 ``\\\\ seen`` → exact anti-join against ``urls_seen``, optionally
-  behind the partitioned bloom prefilter (plans/seen.py)
+- C5 ``\\\\ seen`` → the candidate predicate's ``first_seen IS NULL``
+  (``urls.first_seen`` commits with ``urls_seen`` in one epoch
+  record, so it is exact); under ``-a`` an anti-join against this
+  run's ``urls_seen`` rows
 - C7 cross-domain gate, C6 follow gate
 - C9 politeness: per-host fetch budget per epoch via a window over
   host-partitioned rows (the reference sleeps 2 s globally,
@@ -37,7 +39,6 @@ from pyspark.sql import functions as F
 
 from scrapetition_spark.config import CrawlConfig
 from scrapetition_spark.functions.urls import url_domain
-from scrapetition_spark.plans.seen import PartitionedBloomView, unseen
 
 LINEAGE_COLS = ["discovery_epoch", "source_fetch_seq", "dispatcher_idx", "pos"]
 
@@ -76,7 +77,6 @@ def candidate_predicate(cfg: CrawlConfig) -> F.Column:
 def plan_due(
     urls: DataFrame,
     seen: DataFrame | None,
-    bloom: PartitionedBloomView | None,
     cfg: CrawlConfig,
     fetch_seq_base: int,
     robots: DataFrame | None = None,
@@ -84,9 +84,12 @@ def plan_due(
     """The epoch due set: unseen frontier rows, robots-filtered,
     politeness-budgeted per host, globally capped, with assigned
     ``fetch_seq`` continuing the global fetch counter. ``seen=None``:
-    the candidate predicate alone decides (``first_seen`` is exact)."""
-    active = urls.filter(candidate_predicate(cfg))
-    cand = active if seen is None else unseen(active, seen, bloom)
+    the candidate predicate alone decides (``first_seen`` is exact);
+    otherwise candidates in ``seen`` are dropped (``-a``'s run-local
+    seen set)."""
+    cand = urls.filter(candidate_predicate(cfg))
+    if seen is not None:
+        cand = cand.join(seen.select("url"), ["url"], "left_anti")
 
     if robots is not None and cfg.respect_robots:
         deny = robots.filter(F.col("allow") == 0).select(

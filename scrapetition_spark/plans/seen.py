@@ -1,31 +1,35 @@
-"""Bloom seen-filters (north rule; SURVEY.md §4.1).
+"""Bloom seen-filters: the exact unseen-set operator behind ``c5`` and
+``c5b`` (north rule; SURVEY.md §4.1).
 
 The reference keeps the seen set as an in-memory Haskell list probed
-with ``elem`` (O(n) per probe, O(n²) per crawl —
-/root/reference/src/Network/Scrapetition/App.hs:69,107). At 10^10
-URLs that is impossible; the scalable design is:
+with ``elem`` (O(n) per probe, O(n²) per crawl — the reference's
+src/Network/Scrapetition/App.hs:69,107). ``unseen`` answers the same
+question over a seen table:
 
-1. an append-only ``urls_seen`` table (exact truth, bucketed by
-   host bucket);
-2. a bloom sidecar of one ``(bucket, bits, n_keys)`` row per host
+1. a partitioned bloom of one ``(bucket, bits, n_keys)`` row per
    bucket (``PartitionedBloom``), built and OR-merged by Spark's own
    bitmap aggregates: every key's k bit positions are native
    ``xxhash64``/bit expressions, ``bitmap_construct_agg`` folds them
    into 32,768-bit chunks per (bucket, chunk), ``bitmap_or_agg``
    OR-merges chunks, and the chunks are trimmed or concatenated into
-   the stored ``m_bits/8``-byte bitset;
-3. probes join each candidate to its bucket's sidecar row, carried as
-   an array of 64-bit words so a candidate reads its k words in place
+   the ``m_bits/8``-byte bitset;
+2. probes join each candidate to its bucket's row, carried as an
+   array of 64-bit words so a candidate reads its k words in place
    (O(k) per candidate, whatever the bitset size; AQE picks broadcast
    or shuffle); bloom *negatives* are definitely unseen and skip the
-   ``urls_seen`` join (the common case for a growing crawl), bloom
-   *positives* are verified exactly with a ``left_anti`` join against
-   ``urls_seen`` so false positives can never drop a URL (SURVEY.md
-   §7.3 exactness requirement).
+   seen-table join, bloom *positives* are verified exactly with a
+   ``left_anti`` join so false positives can never drop a URL
+   (SURVEY.md §7.3 exactness requirement).
 
 ``BloomFilter`` is the one-bucket case of the same expressions (bucket
 0 through a constant column), with its bitset collected to the driver:
 a standalone filter for small key sets (``unseen`` accepts either).
+
+The crawl does not call this module: ``urls.first_seen`` commits in
+the same epoch record as ``urls_seen``, so the due-set predicate is
+already the exact seen check (plans/frontier.py). A bloom pays where
+the exact answer costs a base read, as in front of an append-only
+``urls`` delta (ROADMAP item 6).
 
 Every step is a JVM expression or aggregate: no Python worker starts.
 K hash functions derive from the one 64-bit hash by double hashing
@@ -90,32 +94,24 @@ def _bit_set(words: Column, pos: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Partitioned bloom sidecar (north rule / SURVEY §4.1: per-host-bucket
-# bitsets, built map-side, OR-merged per bucket, probed bucket-local).
-# The driver NEVER holds the full filter: the sidecar is a DataFrame /
-# catalog table of (bucket, bits, n_keys) rows; at 10^10 keys × 16
-# bits/key the total is ~20 GB — un-broadcastable as one bitset (the
-# r01 global-bitset design), but fine as 256+ bucket rows living on
-# executors.
+# Partitioned bloom (north rule / SURVEY §4.1: per-bucket bitsets,
+# built map-side, OR-merged per bucket, probed bucket-local). The
+# driver NEVER holds the full filter: it is a DataFrame of
+# (bucket, bits, n_keys) rows; at 10^10 keys × 16 bits/key the total
+# is ~20 GB — un-broadcastable as one bitset (the r01 global-bitset
+# design), but fine as 256+ bucket rows living on executors.
 
 BLOOM_SIDECAR = StructType(
     [
         StructField("bucket", IntegerType(), False),
         StructField("bits", BinaryType(), False),
         StructField("n_keys", LongType(), False),
-        # sizing parameters persisted WITH the bitsets: probing a
-        # stored sidecar with different (m_bits, k, n_buckets) yields
-        # silent false negatives ("definitely new" for seen URLs), so
-        # a resumed engine must validate these and rebuild on mismatch
-        StructField("m_bits", IntegerType(), False),
-        StructField("k", IntegerType(), False),
-        StructField("n_buckets", IntegerType(), False),
     ]
 )
 
 
 class PartitionedBloom:
-    """Parameter holder for the bucket-partitioned bloom sidecar.
+    """Parameter holder for the bucket-partitioned bloom.
     Per-bucket bitsets share (m_bits, k) so OR-merge is closed; sizing
     divides the corpus-level budget by bucket count, keeping every
     bucket's bitset (and so every task's working set) bounded at
@@ -124,7 +120,6 @@ class PartitionedBloom:
     def __init__(self, expected_keys: int, bits_per_key: int = 16, n_buckets: int = 256):
         per_bucket = max(1, expected_keys // max(1, n_buckets))
         self.m_bits, self.k = _plan_params(per_bucket, bits_per_key)
-        self.n_buckets = n_buckets
 
     # ---- build and OR-merge: (bucket, chunk) bitmap aggregates ------
 
@@ -149,10 +144,11 @@ class PartitionedBloom:
         return self._assemble(chunks)
 
     def or_merge(self, sidecar_rows: DataFrame) -> DataFrame:
-        """OR-merge possibly-duplicate bucket rows (build output, or
-        old sidecar ∪ epoch delta) into one row per bucket: each row is
-        cut into its 4096-byte chunks, ``bitmap_or_agg`` merges them per
-        (bucket, chunk), and ``n_keys`` sums per bucket."""
+        """OR-merge possibly-duplicate bucket rows (build outputs, or
+        a stored filter ∪ a delta's build) into one row per bucket:
+        each row is cut into its 4096-byte chunks, ``bitmap_or_agg``
+        merges them per (bucket, chunk), and ``n_keys`` sums per
+        bucket."""
         n_chunks = max(1, self.m_bits // _CHUNK_BITS)
         chunk_bytes = _CHUNK_BITS // 8
         cut = sidecar_rows.select(
@@ -208,25 +204,6 @@ class PartitionedBloom:
             F.col("bucket").cast("int").alias("bucket"),
             "bits",
             F.col("n_keys").cast("long").alias("n_keys"),
-            F.lit(self.m_bits).alias("m_bits"),
-            F.lit(self.k).alias("k"),
-            F.lit(self.n_buckets).alias("n_buckets"),
-        )
-
-    def matches(self, sidecar: DataFrame) -> bool:
-        """True iff the stored sidecar's persisted sizing parameters
-        equal this instance's (probing with mismatched params would
-        silently yield false negatives). An empty sidecar matches; one
-        without the parameter columns (pre-upgrade layout) does not."""
-        if not set(["m_bits", "k", "n_buckets"]) <= set(sidecar.columns):
-            return False
-        row = sidecar.select("m_bits", "k", "n_buckets").first()
-        if row is None:
-            return True
-        return (
-            row["m_bits"] == self.m_bits
-            and row["k"] == self.k
-            and row["n_buckets"] == self.n_buckets
         )
 
     # ---- bucket-local probe (join to the bucket's row; bit tests) ---
@@ -260,7 +237,7 @@ class PartitionedBloom:
 @dataclass
 class PartitionedBloomView:
     """A probe-ready handle: sidecar DataFrame + its parameters, as
-    plan_due/unseen take it."""
+    ``unseen`` takes it."""
 
     pb: PartitionedBloom
     sidecar: DataFrame
@@ -307,7 +284,7 @@ class BloomFilter:
         probes this filter as a one-row sidecar."""
         from scrapetition_spark.session import local_df
 
-        row = (0, self.bits, self.n_keys, self.m_bits, self.k, 1)
+        row = (0, self.bits, self.n_keys)
         sidecar = local_df(df.sparkSession, [row], BLOOM_SIDECAR)
         probed = self._partitioned().probe(
             df.withColumn("__b0", F.lit(0)), sidecar, url_col, "__b0"

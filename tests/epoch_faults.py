@@ -19,9 +19,8 @@ from scrapetition_spark.schemas import CRAWL_METRICS, TABLE_SCHEMAS, URLS_SEEN
 from scrapetition_spark.sources.catalog import Catalog
 
 ITEM_TABLES = ("comments", "users", "votes", "articles")
-# the epoch's pool writes in default mode (the bloom mode adds
-# "bloom_sidecar"), url_edges first: it is the one write an epoch
-# skips (when it discovers nothing)
+# the epoch's pool writes, url_edges first: it is the one write an
+# epoch skips (when it discovers nothing)
 SINK_POINTS = (
     "url_edges", "comments", "users", "votes", "articles", "urls", "urls_seen",
 )

@@ -273,7 +273,7 @@ def test_robots_deny_scheme_independent(spark):
                       politeness_sec=0, respect_robots=True,
                       per_host_budget=10)
     seen = spark.createDataFrame([], URLS_SEEN)
-    due = plan_due(urls, seen, None, cfg, 0, robots)
+    due = plan_due(urls, seen, cfg, 0, robots)
     got = {r["url"] for r in due.select("url").collect()}
     assert got == {"https://bad.test/politik/z", "https://ok.test/kultur/w"}
 
@@ -294,7 +294,7 @@ def test_salted_due_plan_equivalence(spark, site, docs):
 
     def due_with(n_salts):
         c = replace(cfg, n_frontier_salts=n_salts)
-        raw = plan_due(urls, seen, None, c, 0).select(
+        raw = plan_due(urls, seen, c, 0).select(
             "url", "host", "host_bucket",
             "discovery_epoch", "source_fetch_seq", "dispatcher_idx", "pos",
         ).localCheckpoint()

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from dataclasses import replace
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
@@ -58,19 +59,22 @@ def test_epoch_reads_only_touched_buckets(spark, monkeypatch):
     ``read_buckets``, and only from the dirs of the buckets it
     touches: the due pages' commit buckets (plus the literal fallback
     domains' for comments) and the due and discovered URLs' commit
-    buckets for urls. The default seen path plans the due set from
-    urls alone: the epoch never reads urls_seen."""
-    _check_touched_reads(spark, monkeypatch, None)
+    buckets for urls. The due set is planned from urls alone: the
+    epoch never reads urls_seen."""
+    _check_touched_reads(spark, monkeypatch, visit_again=False)
 
 
-def test_bloom_epoch_reads_only_touched_buckets(spark, monkeypatch):
-    """The same crawl under the partitioned bloom, whose exact check
-    of bloom positives reads urls_seen: only the frontier's host
-    buckets of it, through ``read_buckets``."""
-    _check_touched_reads(spark, monkeypatch, "partitioned")
+def test_visit_again_epoch_reads_only_touched_buckets(spark, monkeypatch):
+    """The same crawl run under ``-a`` on a catalog that already holds
+    two epochs of fetched history. Its run-local seen check reads
+    urls_seen only through ``read_buckets``, over the host buckets of
+    the frontier (``in_frontier == 1``, fetched rows included). No URL
+    is fetched twice within the run, and the seeds, fetched before it,
+    are fetched again."""
+    _check_touched_reads(spark, monkeypatch, visit_again=True)
 
 
-def _check_touched_reads(spark, monkeypatch, bloom_mode) -> None:
+def _check_touched_reads(spark, monkeypatch, visit_again: bool) -> None:
     docs = fixtures.synthetic_web(spark, n_docs=300, n_hosts=8, fanout=4,
                                   seed=11).localCheckpoint()
     seeds = [r["seed"] for r in docs.groupBy(F.regexp_extract("doc_id", "//([^/]+)/", 1))
@@ -80,10 +84,25 @@ def _check_touched_reads(spark, monkeypatch, bloom_mode) -> None:
                       n_host_buckets=64, dispatchers=SYNTH_DISPATCHERS)
     ncb, nhb = cfg.n_commit_buckets, cfg.n_host_buckets
 
+    cat = Catalog(spark, tempfile.mkdtemp(prefix="onelayout-"))
+    CrawlEngine(spark, cat, cfg, docs).seed(seeds)
+    _assert_bucketed(cat, cfg, ["urls"])
+    frontier_rows = F.col("in_frontier") == 1
+    if visit_again:
+        CrawlEngine(spark, cat, cfg, docs).run(max_epochs=2)  # the history
+        history = cat.read("urls_seen", URLS_SEEN).count()
+        cfg = replace(cfg, visit_again=True)
+    else:
+        frontier_rows &= F.col("first_seen").isNull()
+    fallback = {r[0] % ncb for r in spark.range(1).select(
+        host_bucket(F.lit("UNKOWN"), nhb)).collect()}
+
     reads: list[tuple[str, list[int], list[str]]] = []
     whole: list[str] = []
     recording = [False]
     read_buckets, read = Catalog.read_buckets, Catalog.read
+    run_epoch = CrawlEngine.run_epoch
+    narrowed, epochs = set(), []
 
     def rec_read_buckets(self, table, schema, buckets):
         df = read_buckets(self, table, schema, buckets)
@@ -96,27 +115,19 @@ def _check_touched_reads(spark, monkeypatch, bloom_mode) -> None:
             whole.append(table)
         return read(self, table, schema, snapshot)
 
-    monkeypatch.setattr(Catalog, "read_buckets", rec_read_buckets)
-    monkeypatch.setattr(Catalog, "read", rec_read)
-
-    cat = Catalog(spark, tempfile.mkdtemp(prefix="onelayout-"))
-    eng = CrawlEngine(spark, cat, cfg, docs, bloom_mode=bloom_mode)
-    eng.seed(seeds)
-    _assert_bucketed(cat, cfg, ["urls"])
-    fallback = {r[0] % ncb for r in spark.range(1).select(
-        host_bucket(F.lit("UNKOWN"), nhb)).collect()}
-
-    narrowed = set()
-    for epoch in range(4):
-        urls = cat.read("urls", URLS)
-        frontier = _buckets(
-            urls.filter((F.col("in_frontier") == 1) & F.col("first_seen").isNull()),
-            F.col("host"), nhb)
+    def checked_run_epoch(eng, epoch):
+        frontier = _buckets(cat.read("urls", URLS).filter(frontier_rows),
+                            F.col("host"), nhb)
         reads.clear()
         whole.clear()
         recording[0] = True
-        assert eng.run_epoch(epoch).urls_due > 0
-        recording[0] = False
+        try:
+            stats = run_epoch(eng, epoch)
+        finally:
+            recording[0] = False
+        if stats.urls_due == 0:
+            return stats
+        epochs.append(epoch)
         _assert_bucketed(cat, cfg, CRAWL_STATE)
 
         due = cat.read("urls_seen", URLS_SEEN).filter(F.col("epoch") == epoch)
@@ -129,7 +140,7 @@ def _check_touched_reads(spark, monkeypatch, bloom_mode) -> None:
             "url_edges": due_cb,
             "urls": due_cb | disc_cb,
         }
-        if bloom_mode:
+        if visit_again:
             allowed["urls_seen"] = frontier
         else:
             assert "urls_seen" not in {t for t, _, _ in reads}
@@ -146,11 +157,23 @@ def _check_touched_reads(spark, monkeypatch, bloom_mode) -> None:
                 narrowed.add(table)
         if epoch > 0:
             assert set(by_table) == set(allowed), (epoch, set(by_table))
-    pruned = {"comments", "url_edges"} | ({"urls_seen"} if bloom_mode else set())
-    assert narrowed >= pruned, narrowed
+        return stats
+
+    monkeypatch.setattr(Catalog, "read_buckets", rec_read_buckets)
+    monkeypatch.setattr(Catalog, "read", rec_read)
+    monkeypatch.setattr(CrawlEngine, "run_epoch", checked_run_epoch)
+    CrawlEngine(spark, cat, cfg, docs).run(max_epochs=4)
+    assert len(epochs) == 4, epochs
+    assert narrowed >= {"comments", "url_edges"}, narrowed
 
     comments = cat.read("comments", COMMENTS)
     assert comments.count() == comments.select("id", "domain").distinct().count() > 0
+    if visit_again:
+        seen = cat.read("urls_seen", URLS_SEEN)
+        run = [r["url"] for r in seen.filter(F.col("epoch") >= 2).collect()]
+        assert len(run) == len(set(run)), "a URL fetched twice within the -a run"
+        assert seen.count() == history + len(run)
+        assert set(seeds) <= set(run)
 
 
 def _schema() -> StructType:

@@ -1,7 +1,8 @@
-"""Partitioned bloom sidecar (plans/seen.py): exactness, bounded
-per-bucket sizing at 10^7 keys, crawl-state equivalence with the
-default exact anti-join path (VERDICT r01 next-6), and sidecar
-recovery on resume, and resume after a failure at any write of an
+"""Partitioned bloom (plans/seen.py): exactness and bounded
+per-bucket sizing at 10^7 keys. The crawl plans its due sets from
+``urls.first_seen`` in every mode: ``bloom_mode="partitioned"`` leaves
+the default crawl's state and writes no sidecar. A wide crawl resumes
+to the clean crawl's state after a failure at any write of an
 epoch."""
 
 from __future__ import annotations
@@ -13,14 +14,12 @@ from pyspark.sql import functions as F
 
 from epoch_faults import COMMIT_POINTS, SINK_POINTS, crawl_state, crawl_through_faults
 from scrapetition_spark.config import CrawlConfig
-from scrapetition_spark.crawl import ENGINE_TABLES, CrawlEngine
+from scrapetition_spark.crawl import CrawlEngine
 from scrapetition_spark.plans.seen import (
-    BLOOM_SIDECAR,
     PartitionedBloom,
     PartitionedBloomView,
     unseen,
 )
-from scrapetition_spark.schemas import URLS, URLS_SEEN
 from scrapetition_spark.sources.catalog import Catalog
 from scrapetition_spark.sources.fixtures import documents_df, fixture_site
 
@@ -34,23 +33,21 @@ def docs(spark):
     return documents_df(spark, fixture_site()).localCheckpoint()
 
 
-def _engine(spark, cat, docs, mode="partitioned", expected_urls=1 << 12):
-    return CrawlEngine(spark, cat, WIDE, docs, bloom_mode=mode,
-                       expected_urls=expected_urls)
+def _engine(spark, cat, docs, mode=None):
+    return CrawlEngine(spark, cat, WIDE, docs, bloom_mode=mode)
 
 
-def _crawl(spark, docs, mode="partitioned", max_epochs=None):
+def _crawl(spark, docs, mode=None):
     cat = Catalog(spark, tempfile.mkdtemp(prefix=f"bloom-{mode}-"))
     eng = _engine(spark, cat, docs, mode)
     eng.seed([SEED])
-    eng.run(max_epochs=max_epochs)
+    eng.run()
     return cat
 
 
 @pytest.fixture(scope="module")
-def bloom_catalog(spark, docs):
-    """The clean wide crawl of the fixture site under the partitioned
-    bloom."""
+def clean_catalog(spark, docs):
+    """The clean wide crawl of the fixture site."""
     return _crawl(spark, docs)
 
 
@@ -116,113 +113,32 @@ def test_partitioned_sizing_at_1e7(spark):
     assert sum(r["n_keys"] for r in sidecar) == n
 
 
-def test_crawl_partitioned_bloom_same_state(spark, docs, bloom_catalog):
-    """A full fixture crawl under bloom_mode='partitioned' reproduces
-    the default (exact anti-join) crawl's trace and url set exactly.
-    Any other bloom_mode is rejected."""
+def test_crawl_partitioned_bloom_same_state(spark, docs, clean_catalog):
+    """``bloom_mode="partitioned"`` has no effect on the crawl: it
+    writes no bloom sidecar and leaves the default crawl's state —
+    trace, urls, edges, items and metrics epochs. Any other
+    bloom_mode is rejected."""
     with pytest.raises(ValueError):
         _engine(spark, Catalog(spark, tempfile.mkdtemp(prefix="bloom-bad-")),
                 docs, mode="global")
-
-    def state(cat):
-        trace = [r["url"] for r in cat.read("urls_seen", URLS_SEEN)
-                 .orderBy("fetch_seq").collect()]
-        urlset = {r["url"] for r in cat.read("urls", URLS).select("url").collect()}
-        return trace, urlset
-
-    cat_d, cat_p = _crawl(spark, docs, mode=None), bloom_catalog
-    assert state(cat_d) == state(cat_p)
-    assert not cat_d.exists("bloom_sidecar")
-    assert cat_p.exists("bloom_sidecar")
-    assert cat_p.read("bloom_sidecar", BLOOM_SIDECAR).count() > 0
-
-
-def test_crawl_partitioned_bloom_resume(spark, docs, bloom_catalog):
-    """Interrupt after 2 epochs, damage the sidecar, resume with a
-    FRESH engine: final state equals an uninterrupted run. Each damage
-    is one input of the engine's single sidecar-recovery check — a
-    dropped sidecar and one rewritten into plain files (and committed
-    in the epoch record) are both rebuilt from urls_seen in the
-    partitioned layout, so later epochs commit scoped."""
-    want = {(r["url"], r["fetch_seq"]) for r in
-            bloom_catalog.read("urls_seen", URLS_SEEN).collect()}
-
-    def drop(cat):
-        cat.drop("bloom_sidecar")
-
-    def plain(cat):
-        cat.overwrite("bloom_sidecar", cat.read("bloom_sidecar", BLOOM_SIDECAR))
-        cat.record_heads(ENGINE_TABLES)
-        assert cat.partition_state("bloom_sidecar")[0]
-
-    for damage in (drop, plain):
-        cat2 = _crawl(spark, docs, max_epochs=2)  # interrupted
-        damage(cat2)
-        _engine(spark, cat2, docs).run()  # fresh engine, same catalog
-        got = {(r["url"], r["fetch_seq"]) for r in
-               cat2.read("urls_seen", URLS_SEEN).collect()}
-        assert got == want, damage.__name__
-        has_plain, parts = cat2.partition_state("bloom_sidecar")
-        assert parts and not has_plain, damage.__name__
-
-
-def test_crawl_partitioned_bloom_resume_changed_params(spark, docs):
-    """ADVICE r02: a resumed engine with DIFFERENT bloom sizing
-    (expected_urls 1<<12 → 1<<16 moves (m_bits, k) from (1024, 16) to
-    (4096, 11)) must not probe
-    the stored sidecar with mismatched (m_bits, k, n_buckets) — it
-    detects the mismatch via the persisted parameters, rebuilds the
-    sidecar from urls_seen, and fetches no duplicates."""
-    cat = Catalog(spark, tempfile.mkdtemp(prefix="bloomparam-"))
-    eng = _engine(spark, cat, docs)
-    eng.seed([SEED])
-    eng.run(max_epochs=2)  # interrupted mid-crawl, sidecar persisted
-    seen_mid = cat.read("urls_seen", URLS_SEEN).count()
-    assert seen_mid > 0
-
-    # a catalog whose urls lost first_seen updates that urls_seen
-    # holds (a crash mid-epoch before epochs had one commit point),
-    # committed in the record so the resume keeps it: these URLs are
-    # frontier candidates again and ONLY the seen filter (bloom +
-    # exact anti-join) stops a duplicate fetch
-    urls_tbl = cat.read("urls", URLS)
-    cat.overwrite(
-        "urls",
-        urls_tbl.withColumn("first_seen", F.lit(None).cast("timestamp"))
-        .withColumn("in_frontier", F.lit(1)),
-    )
-    cat.record_heads(ENGINE_TABLES)
-
-    # resume with different sizing → different (m_bits, k): probing
-    # the stored sidecar would yield false negatives ("definitely
-    # new") for exactly those seen URLs; the engine must detect the
-    # persisted-parameter mismatch and rebuild instead
-    eng2 = _engine(spark, cat, docs, expected_urls=1 << 16)
-    assert (eng.pbloom.m_bits, eng.pbloom.k) == (1024, 16)
-    assert (eng2.pbloom.m_bits, eng2.pbloom.k) == (4096, 11)
-    assert not eng2.pbloom.matches(
-        cat.read("bloom_sidecar", BLOOM_SIDECAR))
-    eng2.run()
-    rows = cat.read("urls_seen", URLS_SEEN).select("url").collect()
-    urls = [r["url"] for r in rows]
-    assert len(urls) == len(set(urls)), "duplicate fetches after resume"
-    # sidecar now persisted under the NEW parameters
-    assert eng2.pbloom.matches(cat.read("bloom_sidecar", BLOOM_SIDECAR))
+    cat = _crawl(spark, docs, mode="partitioned")
+    assert crawl_state(cat) == crawl_state(clean_catalog)
+    assert not cat.exists("bloom_sidecar")
+    assert not clean_catalog.exists("bloom_sidecar")
 
 
 def test_failure_at_every_write_resumes_to_clean_state(
-    spark, docs, bloom_catalog, monkeypatch
+    spark, docs, clean_catalog, monkeypatch
 ):
-    """The wide crawl under the partitioned bloom: its epochs fail, in
-    turn, at each of their writes — every item sink, url_edges, the
-    urls commit, the urls_seen append, the bloom sidecar commit, the
-    metrics append and the epoch record — and a fresh engine resumes
-    after each. The first resume takes the CLI's ``-d`` path
-    (``resume_not_seen`` before ``run``), which rolls the failed
-    epoch 0 back before it reschedules anything. The catalog ends
-    equal to the clean crawl's: trace, urls, edges, items and each
-    epoch's metrics row once."""
-    clean = crawl_state(bloom_catalog)
+    """The wide crawl: its epochs fail, in turn, at each of their
+    writes — every item sink, url_edges, the urls commit, the
+    urls_seen append, the metrics append and the epoch record — and a
+    fresh engine resumes after each. The first resume takes the CLI's
+    ``-d`` path (``resume_not_seen`` before ``run``), which rolls the
+    failed epoch 0 back before it reschedules anything. The catalog
+    ends equal to the clean crawl's: trace, urls, edges, items and
+    each epoch's metrics row once."""
+    clean = crawl_state(clean_catalog)
 
     def before_run(i, eng):
         if i == 1:
@@ -231,7 +147,6 @@ def test_failure_at_every_write_resumes_to_clean_state(
 
     cat = crawl_through_faults(
         spark, monkeypatch, lambda c: _engine(spark, c, docs), SEED,
-        SINK_POINTS + ("bloom_sidecar",) + COMMIT_POINTS, len(clean[2]),
-        before_run,
+        SINK_POINTS + COMMIT_POINTS, len(clean[2]), before_run,
     )
     assert crawl_state(cat) == clean

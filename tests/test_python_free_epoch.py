@@ -1,7 +1,6 @@
 """The crawl epoch runs as JVM work: no Python worker starts or runs
-during a crawl, the native bloom sidecar holds the same bytes as a
-numpy fold of the double-hashing positions, and the bloom probe reads
-only the frontier's buckets of the sidecar."""
+during a crawl, and the native partitioned bloom holds the same bytes
+as a numpy fold of the double-hashing positions."""
 
 from __future__ import annotations
 
@@ -15,8 +14,7 @@ from pyspark.sql import functions as F
 
 from scrapetition_spark.config import CrawlConfig, Dispatcher
 from scrapetition_spark.crawl import CrawlEngine
-from scrapetition_spark.plans.seen import BLOOM_SIDECAR, PartitionedBloom
-from scrapetition_spark.schemas import URLS, URLS_SEEN
+from scrapetition_spark.plans.seen import PartitionedBloom
 from scrapetition_spark.sources import fixtures
 from scrapetition_spark.sources.catalog import Catalog
 
@@ -92,9 +90,9 @@ def _assert_no_python_work(spark, run) -> None:
 
 
 def test_crawl_epochs_start_no_python_worker(spark):
-    """Two epochs of a wide partitioned-bloom crawl and of a
-    sequential crawl, seeding included: no Python worker process
-    appears under the JVM and none gains CPU time."""
+    """Two epochs of a wide crawl and of a sequential crawl, seeding
+    included: no Python worker process appears under the JVM and none
+    gains CPU time."""
     site = fixtures.documents_df(spark, fixtures.fixture_site()).localCheckpoint()
     synth = fixtures.synthetic_web(spark, n_docs=300, n_hosts=4, fanout=4,
                                    seed=5).localCheckpoint()
@@ -105,10 +103,9 @@ def test_crawl_epochs_start_no_python_worker(spark):
                           per_host_budget=8, max_urls_per_epoch=None,
                           dispatchers=SYNTH_DISPATCHERS)
         cat = Catalog(spark, tempfile.mkdtemp(prefix="pyfree-wide-"))
-        eng = CrawlEngine(spark, cat, cfg, synth, bloom_mode="partitioned")
+        eng = CrawlEngine(spark, cat, cfg, synth)
         eng.seed(seeds)
         assert len(eng.run(max_epochs=2)) == 2
-        assert cat.read("bloom_sidecar", BLOOM_SIDECAR).count() > 0
 
     def sequential():
         cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=True,
@@ -174,53 +171,3 @@ def test_sidecar_bytes_equal_numpy_fold(spark, expected_keys, n_buckets):
     )
     assert stored(merged) == want
     assert sum(n for _, n in want.values()) == 10_000
-
-
-def test_probe_reads_only_active_buckets(spark, monkeypatch):
-    """Multi-host partitioned crawl seeded on every host, following
-    links on one: after epoch 0 the frontier lives in fewer buckets
-    than the sidecar holds, and the probe's sidecar frame reads only
-    the frontier's bucket directories. The crawl state equals the
-    default path's."""
-    docs = fixtures.synthetic_web(spark, n_docs=300, n_hosts=8, fanout=4,
-                                  seed=11).localCheckpoint()
-    seeds = [r["seed"] for r in docs.groupBy(F.regexp_extract("doc_id", "//([^/]+)/", 1))
-             .agg(F.min("doc_id").alias("seed")).collect()]
-    cfg = CrawlConfig("h0.test", follow_links=True, politeness_sec=0,
-                      per_host_budget=16, max_urls_per_epoch=None,
-                      n_host_buckets=64, dispatchers=SYNTH_DISPATCHERS)
-    probes: list[tuple[list[int], list[str]]] = []
-    orig = CrawlEngine._seen_filter
-
-    def recording(self, active):
-        view = orig(self, active)
-        if view is not None:
-            probes.append((active, view.sidecar.inputFiles()))
-        return view
-
-    monkeypatch.setattr(CrawlEngine, "_seen_filter", recording)
-
-    def run(mode):
-        cat = Catalog(spark, tempfile.mkdtemp(prefix=f"active-{mode}-"))
-        eng = CrawlEngine(spark, cat, cfg, docs, bloom_mode=mode,
-                          expected_urls=1 << 12)
-        eng.seed(seeds)
-        eng.run(max_epochs=4)
-        seen = {(r["url"], r["fetch_seq"]) for r in cat.read("urls_seen", URLS_SEEN).collect()}
-        urls = {(r["url"], r["in_frontier"], r["first_seen"] is None)
-                for r in cat.read("urls", URLS).collect()}
-        return seen, urls, cat
-
-    seen_d, urls_d, _ = run(None)
-    seen_p, urls_p, cat_p = run("partitioned")
-    assert seen_d == seen_p
-    assert urls_d == urls_p
-    assert len(seeds) > 1 and probes
-    sidecar_buckets = {r["bucket"] for r in cat_p.read("bloom_sidecar", BLOOM_SIDECAR)
-                       .select("bucket").collect()}
-    narrowed = False
-    for active, files in probes:
-        read = {int(f.split("__part=", 1)[1].split("/", 1)[0]) for f in files}
-        assert read <= set(active), (files, active)
-        narrowed |= 0 < len(read) < len(sidecar_buckets)
-    assert narrowed, (probes, sidecar_buckets)

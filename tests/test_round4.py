@@ -299,84 +299,6 @@ def test_expiry_with_colliding_table_names(spark):
 
 
 # --------------------------------------------------------------------------
-# partition-scoped bloom-sidecar commits (round-4 follow-up: per-epoch
-# sidecar cost must be O(touched buckets), never O(sidecar) — at 10^10
-# keys the sidecar is ~20 GB and a whole-table rewrite per epoch would
-# dwarf sparse epochs)
-
-
-def test_bloom_sidecar_scoped_commit_carries_untouched_buckets(spark):
-    """A crawl epoch whose due set touches a strict subset of host
-    buckets rewrites ONLY those buckets' sidecar bitsets; every other
-    bucket's member dirs carry forward verbatim, and the incremental
-    sidecar equals a one-shot rebuild from urls_seen bit-for-bit."""
-    from scrapetition_spark.config import ALL_LINKS_DISPATCHERS
-    from scrapetition_spark.functions.urls import host_bucket
-    from scrapetition_spark.plans.seen import BLOOM_SIDECAR
-    from scrapetition_spark.spans import ROLE_ANCHOR, media_span
-
-    # two hosts in different buckets; b.test is due only in epoch 1
-    site = {
-        "http://a.test/p0": [
-            media_span(ROLE_ANCHOR, "l", "http://a.test/p1", 0),
-            media_span(ROLE_ANCHOR, "l", "http://b.test/only", 1),
-        ],
-        "http://b.test/only": [],
-        "http://a.test/p1": [media_span(ROLE_ANCHOR, "l", "http://a.test/p2", 0)],
-        "http://a.test/p2": [],
-    }
-    docs = documents_df(spark, site)
-    cfg = CrawlConfig(
-        "a.test", follow_links=True, cross_domain=True, politeness_sec=0,
-        per_host_budget=4, dispatchers=ALL_LINKS_DISPATCHERS,
-    )
-    row = (
-        spark.range(1)
-        .select(
-            host_bucket(F.lit("a.test"), cfg.n_host_buckets).alias("a"),
-            host_bucket(F.lit("b.test"), cfg.n_host_buckets).alias("b"),
-        )
-        .first()
-    )
-    bucket_a, bucket_b = row["a"], row["b"]
-    assert bucket_a != bucket_b  # deterministic xxhash64 precondition
-
-    eng, cat = _engine(spark, docs, cfg, bloom_mode="partitioned",
-                       expected_urls=4096)
-    eng.seed(["http://a.test/p0"])
-    stats = eng.run()
-    assert [s.urls_due for s in stats] == [1, 2, 1]
-
-    # the crawl itself stayed exact under the scoped sidecar
-    seen = {r["url"] for r in cat.read("urls_seen", URLS_SEEN).collect()}
-    assert seen == set(site)
-
-    # snapshot 1 = epoch 1 (touched {a,b}), snapshot 2 = epoch 2
-    # (touched {a} only): b.test's bucket entry must be THE SAME dirs
-    head = cat.head("bloom_sidecar")
-    assert head == 2
-    parts_1 = cat._snapshot("bloom_sidecar", 1).parts
-    parts_2 = cat._snapshot("bloom_sidecar", 2).parts
-    assert set(parts_2) == {str(bucket_a), str(bucket_b)}
-    assert parts_2[str(bucket_b)] == parts_1[str(bucket_b)]  # carried
-    assert parts_2[str(bucket_a)] != parts_1[str(bucket_a)]  # rewritten
-
-    # incremental OR-merge ≡ one-shot rebuild from the exact seen set
-    seen_b = cat.read("urls_seen", URLS_SEEN).select(
-        "url", host_bucket(F.col("host"), cfg.n_host_buckets).alias("host_bucket")
-    )
-    want = {
-        r["bucket"]: (bytes(r["bits"]), r["n_keys"])
-        for r in eng.pbloom.build(seen_b).collect()
-    }
-    got = {
-        r["bucket"]: (bytes(r["bits"]), r["n_keys"])
-        for r in cat.read("bloom_sidecar", BLOOM_SIDECAR).collect()
-    }
-    assert got == want
-
-
-# --------------------------------------------------------------------------
 # bucketed urls_seen (the per-epoch seen scan reads only the buckets
 # the active frontier touches)
 
