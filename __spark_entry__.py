@@ -639,13 +639,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "offset_in_seq", "n_seqs_spanned", "shuffle_pos",
         )
 
-    def crawl_epoch(spark, sf):
-        """Sequential reference-order crawl of the deterministic
-        fixture site: the engine's (url, fetch_seq, epoch, status)
-        seen table must hash-match the pure-Python simulator of
-        App.hs:38-69 (the oracle is simulator-derived literal rows —
-        the north rule's crawl-ordering gate as a driver-verified
-        query, VERDICT r03 missing#1)."""
+    def _fixture_crawl(spark, cols, **knobs):
+        """Crawl the fixture site from its seed into a fresh catalog
+        under ``knobs`` and return those columns of urls_seen."""
         import tempfile
 
         from scrapetition_spark.config import CrawlConfig
@@ -656,14 +652,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         docs = documents_df(spark, fixture_site())
         cfg = CrawlConfig(FIXTURE_START_DOMAIN, follow_links=True,
-                          sequential=True, politeness_sec=0)
-        cat = Catalog(spark, tempfile.mkdtemp(prefix="entryepoch-"))
+                          politeness_sec=0, **knobs)
+        cat = Catalog(spark, tempfile.mkdtemp(prefix="entrycrawl-"))
         eng = CrawlEngine(spark, cat, cfg, docs)
         eng.seed([FIXTURE_SEED])
         eng.run()
-        return cat.read("urls_seen", URLS_SEEN).select(
-            "url", "fetch_seq", "epoch", "status"
-        )
+        return cat.read("urls_seen", URLS_SEEN).select(*cols)
+
+    trace_cols = ["url", "fetch_seq", "epoch", "status"]
+
+    def crawl_epoch(spark, sf):
+        """Sequential reference-order crawl of the deterministic
+        fixture site: the engine's (url, fetch_seq, epoch, status)
+        seen table must hash-match the pure-Python simulator of
+        App.hs:38-69 (the oracle is simulator-derived literal rows —
+        the north rule's crawl-ordering gate as a driver-verified
+        query, VERDICT r03 missing#1)."""
+        return _fixture_crawl(spark, trace_cols, sequential=True)
 
     def c3b_lifo(spark, sf):
         """Sequential LIFO (-l, depth-major — Main.hs:92-94,
@@ -673,24 +678,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         last pytest-only order-fidelity gap (VERDICT r04 next#5):
         FIFO order is c12/crawl_epoch; this key pins the OTHER merge
         policy's exact order as a driver-verified oracle row."""
-        import tempfile
-
-        from scrapetition_spark.config import CrawlConfig
-        from scrapetition_spark.crawl import CrawlEngine
-        from scrapetition_spark.schemas import URLS_SEEN
-        from scrapetition_spark.sources.catalog import Catalog
-        from scrapetition_spark.sources.fixtures import documents_df, fixture_site
-
-        docs = documents_df(spark, fixture_site())
-        cfg = CrawlConfig(FIXTURE_START_DOMAIN, follow_links=True,
-                          sequential=True, politeness_sec=0, lifo=True)
-        cat = Catalog(spark, tempfile.mkdtemp(prefix="entrylifo-"))
-        eng = CrawlEngine(spark, cat, cfg, docs)
-        eng.seed([FIXTURE_SEED])
-        eng.run()
-        return cat.read("urls_seen", URLS_SEEN).select(
-            "url", "fetch_seq", "epoch", "status"
-        )
+        return _fixture_crawl(spark, trace_cols, sequential=True, lifo=True)
 
     def crawl_epoch_wide(spark, sf):
         """Wide-epoch (scale-path) crawl of the same fixture site:
@@ -699,23 +687,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         hint active. Fetch order is engine-defined, so the oracle
         checks the reference-equal final seen SET (url, status) — the
         north rule's seen-set gate."""
-        import tempfile
-
-        from scrapetition_spark.config import CrawlConfig
-        from scrapetition_spark.crawl import CrawlEngine
-        from scrapetition_spark.schemas import URLS_SEEN
-        from scrapetition_spark.sources.catalog import Catalog
-        from scrapetition_spark.sources.fixtures import documents_df, fixture_site
-
-        docs = documents_df(spark, fixture_site())
-        cfg = CrawlConfig(FIXTURE_START_DOMAIN, follow_links=True,
-                          sequential=False, per_host_budget=4,
-                          politeness_sec=0)
-        cat = Catalog(spark, tempfile.mkdtemp(prefix="entrywide-"))
-        eng = CrawlEngine(spark, cat, cfg, docs)
-        eng.seed([FIXTURE_SEED])
-        eng.run()
-        return cat.read("urls_seen", URLS_SEEN).select("url", "status")
+        return _fixture_crawl(spark, ["url", "status"], sequential=False,
+                              per_host_budget=4)
 
     def crawl_epoch_scoped(spark, sf):
         """The wide crawl with one commit bucket per host bucket
@@ -725,23 +698,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         forward. The final seen SET must equal the wide crawl's (the
         same oracle) — the oracle-verified witness that the commit
         layout changes plans, never results."""
-        import tempfile
-
-        from scrapetition_spark.config import CrawlConfig
-        from scrapetition_spark.crawl import CrawlEngine
-        from scrapetition_spark.schemas import URLS_SEEN
-        from scrapetition_spark.sources.catalog import Catalog
-        from scrapetition_spark.sources.fixtures import documents_df, fixture_site
-
-        docs = documents_df(spark, fixture_site())
-        cfg = CrawlConfig(FIXTURE_START_DOMAIN, follow_links=True,
-                          sequential=False, per_host_budget=4,
-                          politeness_sec=0, n_commit_buckets=256)
-        cat = Catalog(spark, tempfile.mkdtemp(prefix="entryscoped-"))
-        eng = CrawlEngine(spark, cat, cfg, docs)
-        eng.seed([FIXTURE_SEED])
-        eng.run()
-        return cat.read("urls_seen", URLS_SEEN).select("url", "status")
+        return _fixture_crawl(spark, ["url", "status"], sequential=False,
+                              per_host_budget=4, n_commit_buckets=256)
 
     def st_parity(spark, sf):
         """ST1/ST2/ST4 stream ⊖ batch parity as a DRIVER-verified key

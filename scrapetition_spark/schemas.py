@@ -69,8 +69,9 @@ URLS = StructType(
     ]
 )
 
-# urls_seen — append-only fetch log (C2); exact truth behind the bloom
-# sidecar. One row per fetch, fetch_seq is the global crawl order.
+# urls_seen — append-only fetch log (C2), committed in the same epoch
+# record as urls.first_seen. One row per fetch, fetch_seq is the
+# global crawl order.
 URLS_SEEN = StructType(
     [
         StructField("url", StringType(), False),
