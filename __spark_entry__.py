@@ -151,10 +151,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return A.a3_graph_bfs(_t(spark, sf, "orders"), _t(spark, sf, "lineitem"))
 
     def c12(spark, sf):
-        # the delta-frontier iterative loop. An earlier A/B read it at
-        # 1.92 vs 2.99 s against a recursive-CTE form, but that session's
-        # generated-code cache thrashed and the script is gone; ROADMAP
-        # item 5 re-measures the two forms.
+        # the delta-frontier iterative loop. Against WITH RECURSIVE
+        # (sf0.01, local[4], warm): the view form (c12b) runs 24 jobs; a
+        # general form with the key collapse, pre-assigned threads and
+        # the domain key runs 32 jobs and 2.57 CPU s vs this loop's 2.43
+        # s, so the loop stays (threads.propagate_threads).
         comments = comments_from_events(_t(spark, sf, "events"))
         out = propagate_threads(comments, domain_col=None, with_depth=True)
         return out.select("id", "thread", "depth")

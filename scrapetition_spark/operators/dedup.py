@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from scrapetition_spark.operators.corpus import shingles
+from scrapetition_spark.operators.threads import checkpoint_observed
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -471,10 +472,11 @@ def neardup_clusters(pairs: DataFrame, max_iterations: int = 50) -> DataFrame:
     DataFrame-native form of alternating large-star/small-star CC,
     Kiveris et al., MapReduce connected components) — each round is
     two hash shuffles (neighbor-min aggregate + label self-join), no
-    all-pairs work, labels monotonically decrease. One count() action
-    per round is the progress guard; ``localCheckpoint`` cuts lineage
-    so plans stay O(1) deep (same discipline as
-    operators/threads.py:propagate_threads)."""
+    all-pairs work, labels monotonically decrease. Each round's
+    ``localCheckpoint`` cuts lineage so plans stay O(1) deep, and its
+    job also counts the labels that changed, the progress guard
+    (``threads.checkpoint_observed``, the same discipline as
+    ``threads.propagate_threads``)."""
     if max_iterations < 1:
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
     edges = (
@@ -512,9 +514,10 @@ def neardup_clusters(pairs: DataFrame, max_iterations: int = 50) -> DataFrame:
                     F.coalesce("jump_min", "label"),
                 ).alias("label"),
             )
-            .localCheckpoint()
         )
-        changed = new.filter(F.col("label") != F.col("old_label")).count()
+        new, changed = checkpoint_observed(
+            new, F.count_if(F.col("label") != F.col("old_label"))
+        )
         labels = new.select("node", "label")
         if changed == 0:
             break

@@ -7,17 +7,20 @@ link-authority signal to order the frontier (the classic
 Page/Brin/Motwani/Winograd 1998 formulation). ``pagerank`` is that
 operator, expressed Spark-first as a fixed-iteration power method:
 
-- **One shuffle per iteration.** ``edges ⋈ ranks`` co-partitions on
-  ``src`` (the edge frame is hash-repartitioned once, up front), the
-  contribution sum is a map-side-combining hash aggregate on ``dst``,
-  and the node re-attach is a left join back to the (same-keyed)
-  node frame. Nothing driver-side touches row data; the only actions
-  are the node count (one scalar, bounded metadata) and the per-
-  iteration ``localCheckpoint`` that truncates lineage so the plan
-  stays O(1) deep instead of growing by three joins per round (same
-  discipline as ``threads.propagate_threads``). On a real cluster
-  the checkpoint becomes ``persist(DISK_ONLY)`` + unpersist of the
-  previous iteration; the loop shape is unchanged.
+- **One join and one aggregate per iteration.** The weighted edge
+  frame is built once: out-degree weights over every edge, then only
+  edges into ``nodes``, plus one zero-weight self-edge per node, so
+  every node has a row in each round's ``groupBy("dst")`` and no join
+  back to the node frame is needed. ``edges ⋈ ranks`` co-partitions
+  on ``src`` (the edge frame is materialized once, up front) and the
+  contribution sum is a map-side-combining hash aggregate on ``dst``
+  that also applies the damping. Nothing driver-side touches row
+  data; the only actions are the node count (one scalar, bounded
+  metadata) and a ``localCheckpoint`` every ``CHECKPOINT_EVERY``
+  rounds that truncates lineage, so the plan stays at most that many
+  rounds deep (same discipline as ``threads.propagate_threads``). On
+  a real cluster the checkpoint becomes ``persist(DISK_ONLY)`` +
+  unpersist of the previous one; the loop shape is unchanged.
 - **Deterministic across engines.** Iterations are a fixed count (no
   convergence epsilon — an epsilon gate on floating sums is not
   reproducible across engines), intermediate math is plain double,
@@ -27,7 +30,9 @@ operator, expressed Spark-first as a fixed-iteration power method:
   iterations as a CTE chain.
 - **Leaky-mass formulation.** ``rank' = (1-d)/n + d · Σ rank/outdeg``
   with no dangling-node redistribution; nodes without out-edges leak
-  their damped mass (documented, mirrored exactly in the oracle).
+  their damped mass, and so does an edge into a node outside
+  ``nodes`` (it counts in its source's out-degree, but its share
+  lands nowhere); documented, mirrored exactly in the oracle.
   The crawl-native graph (`corpus.link_graph_from_documents`) has
   out-degree >= 1 — the (d+1)%n edge always exists — so no node
   leaks damped mass there.
@@ -45,6 +50,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# PageRank rounds between lineage cuts: the plan grows by one join and
+# one aggregate per round, and each cut costs a job.
+CHECKPOINT_EVERY = 5
 
 
 def pagerank(
@@ -83,8 +92,18 @@ def pagerank(
         return nodes.select("node", F.lit(0.0).alias("nrank"))
 
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("__outdeg"))
-    ew = edges.join(deg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("__outdeg")).alias("w")
+    # out-degree counts every edge; an edge into a node outside
+    # ``nodes`` then only leaks its share. One zero-weight self-edge
+    # per node puts every node in each round's ``groupBy("dst")``.
+    ew = (
+        edges.join(deg, "src")
+        .join(nodes.select(F.col("node").alias("dst")), "dst", "left_semi")
+        .select("src", "dst", (F.lit(1.0) / F.col("__outdeg")).alias("w"))
+        .unionByName(
+            nodes.select(
+                F.col("node").alias("src"), F.col("node").alias("dst"), F.lit(0.0).alias("w")
+            )
+        )
     )
     if partitions:
         ew = ew.repartition(partitions, "src")
@@ -94,22 +113,16 @@ def pagerank(
 
     base = (1.0 - damping) / n
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for _ in range(n_iter):
-        contrib = (
-            ew.join(ranks, ew["src"] == ranks["node"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("__c"))
-        )
+    for rnd in range(1, n_iter + 1):
         ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select(
-                "node",
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("__c"), F.lit(0.0))).alias(
-                    "rank"
-                ),
+            ew.join(ranks, F.col("src") == F.col("node"))
+            .groupBy(F.col("dst").alias("node"))
+            .agg(
+                (F.lit(base) + F.lit(damping) * F.sum(F.col("rank") * F.col("w"))).alias("rank")
             )
-            .localCheckpoint()  # truncate lineage: O(1)-deep plan per round
         )
+        if rnd % CHECKPOINT_EVERY == 0:
+            ranks = ranks.localCheckpoint()  # truncate lineage
     return ranks.select(
         "node", F.round(F.col("rank") * F.lit(float(n)), round_to).alias("nrank")
     )

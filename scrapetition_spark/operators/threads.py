@@ -27,8 +27,21 @@ emitted for the threadview ``height`` column.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+
+def checkpoint_observed(
+    df: DataFrame, metric: Column | None = None
+) -> tuple[DataFrame, int]:
+    """``df.localCheckpoint()`` and one aggregate over its rows
+    (default: the row count), computed by the checkpoint's own job
+    through an ``Observation``: a fixpoint round's progress guard
+    costs no second job over the round's output."""
+    obs = Observation("round")
+    metric = F.count(F.lit(1)) if metric is None else metric
+    cp = df.observe(obs, metric.alias("v")).localCheckpoint()
+    return cp, obs.get["v"]
 
 
 def collapse_duplicates(
@@ -65,15 +78,19 @@ def propagate_threads(
     unresolved remainder against ONLY the rows resolved in the
     previous round — never rewrites the full table (the O(n·depth)
     shape VERDICT r01 flagged). Resolved rows accumulate as appended
-    deltas, unioned once at the end; one count() action per round
-    (the progress guard, Utils.hs:99-105). An earlier A/B at
-    sf0.1/local[32] read this loop at median 1.92 s vs 2.99 s for
-    Spark 4's recursive-CTE plan of the same semantics, but it ran in
-    a session whose 100-entry generated-code cache thrashed (every
-    pass recompiled every class; see ``session.get_spark``), and its
-    script is gone, so the figures do not choose between the two
-    forms; ROADMAP item 5 re-measures them. The view form (no
-    duplicate collapse) is ``propagate_threads_recursive``."""
+    deltas, unioned once at the end. The progress guard
+    (Utils.hs:99-105) is the row count of each round's delta, taken by
+    the round's own ``localCheckpoint`` job (``checkpoint_observed``),
+    not by a job of its own.
+
+    Measured against Spark 4's ``WITH RECURSIVE`` (c12's input,
+    sf0.01, local[4], warm): the view form runs 24 jobs; a general
+    recursive form with the duplicate-key collapse, pre-assigned
+    threads and the domain key runs 32 jobs and 2.57 CPU s against
+    2.43 s for this loop, then at 27 jobs (17 since the count rides
+    on the checkpoint job). So the delta loop stays the engine's form;
+    the view form (no duplicate collapse) is
+    ``propagate_threads_recursive``."""
     keys = ([domain_col] if domain_col else []) + [id_col]
     cur = collapse_duplicates(df, keys, order_col)
     out_cols = df.columns
@@ -116,9 +133,9 @@ def propagate_threads(
                 (parents["__p_depth"] + F.lit(1)).cast("int").alias("__depth"),
             )
             .select(*frontier.columns)
-            .localCheckpoint()
         )
-        if step.count() == 0:  # fixpoint: orphans stay NULL
+        step, n_step = checkpoint_observed(step)
+        if n_step == 0:  # fixpoint: orphans stay NULL
             break
         parts.append(step)
         pending_steps.append(step)
@@ -173,9 +190,9 @@ def subthread(
             )
             .select(F.col(f"c.{id_col}").alias(id_col))
             .join(result, [id_col], "left_anti")
-            .localCheckpoint()
         )
-        if children.count() == 0:
+        children, n_children = checkpoint_observed(children)
+        if n_children == 0:
             break
         result = result.unionByName(children).localCheckpoint()
     return threads_df.join(result, [id_col], "left_semi")

@@ -21,6 +21,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+# HotSpot compile policy of the driver JVM (see ``get_spark``): C2
+# compiles a method only once it is about 10x hotter than HotSpot's
+# default asks; C1's tiers are left as they are.
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=6000",
+    "-XX:Tier4CompileThreshold=60000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+)
+
+
+def driver_java_options(extra: str | None = None) -> str:
+    """``spark.driver.extraJavaOptions``: ``JIT_POLICY``, then
+    ``extra``. The JVM takes the last value of a repeated ``-XX``
+    flag, so flags in ``extra`` override the policy."""
+    return " ".join(JIT_POLICY + ((extra,) if extra else ()))
+
+
 def get_spark(
     app_name: str = "scrapetition-spark",
     master: str | None = None,
@@ -55,6 +73,45 @@ def get_spark(
     loop, so the cache is not sized to hold it. The cap also bounds
     memory: an evicted class's source leaves the heap and its class
     can unload from metaspace.
+
+    Compile policy: ``JIT_POLICY``, ahead of
+    ``SPARK_GRAFT_DRIVER_JAVA_OPTS`` in ``spark.driver.extraJavaOptions``
+    (``driver_java_options``), so a flag from the env var comes later
+    and wins. HotSpot's C2 compiles a method after 5000 invocations or
+    40000 loop back-edges by default; the policy asks 50000 and
+    400000. A loop over many rows crosses that quickly, so row-level
+    code still reaches C2. What stays in C1 is driver code (Catalyst
+    rules, the planner, the DAG scheduler) that runs a few thousand
+    times per epoch or pass, where the C2 compile costs more CPU than
+    it saves. Per-thread CPU of the JVM (``/proc/<jvm>/task/*/stat``,
+    with ``-XX:-UseDynamicNumberOfCompilerThreads`` so compiler threads
+    keep their counts; perfbench shapes in process, local[4], 2 GiB
+    heap, 4-core VM), HotSpot's defaults → the policy:
+
+    - crawl (``crawl_polite``, three set-ups, then epochs 0-4): epoch 0
+      29.3 → 22.9 CPU s, of which C2 16.0 → 9.0; epochs 1-4 11.2-17.2
+      → 9.5-11.6 CPU s, C2 4.8-8.9 → 2.0-3.1; wall 9.7 → 9.8 s on
+      epoch 0, 5.1-6.2 → 5.3-5.7 s warm;
+    - queries (``corpus_queries``, passes 0-7, two runs each): pass 0
+      45.9/46.3 → 37.4/30.7 CPU s, C2 25.1/24.8 → 12.1/10.2; passes
+      4-7 7.9-8.8 → 5.5-7.4 CPU s. Warm wall 3.9-5.4 → 4.6-4.8 s in
+      the undisturbed run. Even at pass 7, HotSpot's defaults still
+      spend about 3 CPU s of C2 per pass.
+
+    perfbench, alternating pairs against HotSpot's defaults: the cold
+    crawl epoch 31.9 → 26.3 CPU s and 10.1 → 10.8 s wall (medians of
+    10); at ``--seconds 60`` a warm epoch 4.3 → 4.5 s wall (median of
+    6, inside the defaults' spread of 3.6-5.2 s); a warm query pass
+    4.5/5.1 → 4.4/4.5 s, measured together with the fixpoint rounds'
+    job cuts in ``threads`` and ``graph``. The policy buys CPU with a
+    little crawl latency.
+
+    Measured and not chosen: half the policy's thresholds (25000 /
+    3000 / 30000 / 200000) saved less on the cold pass (40.3/37.7 CPU
+    s, C2 16.7/16.2) at the same warm wall time. ``-XX:TieredStopAtLevel=1``
+    (C1 only) halves the cold CPU, but a warm query pass gets about 25%
+    slower (6.0 → 7.5 s wall). ``-XX:CompileThresholdScaling=4`` saves
+    less and is slower on the first pass.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -101,9 +158,10 @@ def get_spark(
     # region commit/uncommit serializes 32 allocation-heavy threads
     # on memory-management syscalls — a single-JVM artifact a real
     # per-executor deployment never sees).
-    java_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS")
-    if java_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
+    builder = builder.config(
+        "spark.driver.extraJavaOptions",
+        driver_java_options(os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS")),
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -13,18 +13,24 @@ from scrapetition_spark.operators.graph import pagerank
 
 def _numpy_pagerank(n, edges, damping=0.85, n_iter=10):
     """Independent row-at-a-time replica of the leaky-mass fixed-
-    iteration formulation (NOT the Spark code): rank' = (1-d)/n +
-    d * sum(rank/outdeg over in-edges)."""
-    outdeg = np.zeros(n)
+    iteration formulation (NOT the Spark code) over the nodes
+    0..n-1: rank' = (1-d)/n + d * sum(rank/outdeg over in-edges).
+    Out-degree counts every edge; an endpoint >= n is not a node, so
+    it holds no rank and a contribution to it is dropped."""
+    m = max([n, *(max(e) + 1 for e in edges)])
+    outdeg = np.zeros(m)
     for s, _ in edges:
         outdeg[s] += 1
-    r = np.full(n, 1.0 / n)
+    r = np.zeros(m)
+    r[:n] = 1.0 / n
     for _ in range(n_iter):
-        nxt = np.full(n, (1.0 - damping) / n)
+        nxt = np.zeros(m)
+        nxt[:n] = (1.0 - damping) / n
         for s, d in edges:
-            nxt[d] += damping * r[s] / outdeg[s]
+            if d < n:
+                nxt[d] += damping * r[s] / outdeg[s]
         r = nxt
-    return r
+    return r[:n]
 
 
 def _run(spark, n, edges, **kw):
@@ -74,6 +80,19 @@ def test_parallel_edges_and_self_loops(spark):
     got = _run(spark, 2, edges)
     for i in range(2):
         assert got[i] == pytest.approx(round(exp[i] * 2, 6), abs=1e-6)
+
+
+def test_edges_outside_nodes_match_numpy_replica(spark):
+    # nodes are 0..4; 5 and 6 are not. 1→5 counts in 1's out-degree,
+    # but its share lands nowhere; 6→0 has no rank to pass; 4's only
+    # in-edge comes from 5, so 4 keeps just the damped base.
+    edges = [(0, 1), (1, 2), (1, 5), (2, 0), (3, 0), (6, 0), (5, 4), (4, 3)]
+    exp = _numpy_pagerank(5, edges)
+    got = _run(spark, 5, edges)
+    assert set(got) == set(range(5))
+    for i in range(5):
+        assert got[i] == pytest.approx(round(exp[i] * 5, 6), abs=1e-6)
+    assert got[4] == pytest.approx(0.15, abs=1e-6)
 
 
 def test_nodes_derived_and_repartition_invariant(spark):

@@ -110,3 +110,30 @@ def test_recursive_cte_matches_iterative(spark):
     }
     assert it == rec
     assert rec["d"] == ("a", 3) and rec["x"] == (None, None)
+
+
+def _last_job(spark) -> int:
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def test_propagation_jobs_bounded_by_depth(spark):
+    """Each round's progress guard, the row count of its delta, rides
+    on the round's checkpoint job instead of a count() of its own. A
+    forest of depth 6 (7 rounds, the last one empty) with an orphan
+    chain stays inside a bound that a second job per round breaks."""
+    rows = [(f"a{i}", f"a{i - 1}" if i else None) for i in range(7)]
+    rows += [("b0", None), ("b1", "b0"), ("b2", "b0")]
+    rows += [("x", "missing"), ("y", "x")]
+    df = spark.createDataFrame(rows, "id string, parent string").withColumn(
+        "thread", F.lit(None).cast("string")
+    ).localCheckpoint()
+    mark = _last_job(spark)
+    out = propagate_threads(df, domain_col=None, with_depth=True)
+    jobs = _last_job(spark) - mark
+    got = {r["id"]: (r["thread"], r["depth"]) for r in out.collect()}
+    assert got["a6"] == ("a0", 6) and got["b2"] == ("b0", 1)
+    assert got["y"] == (None, None)
+    # 30 jobs here: the seed checkpoint, then per round the checkpoint
+    # and its AQE stage and broadcast jobs; a count() per round made 44
+    rounds = 7
+    assert jobs <= 4 * rounds + 4, jobs
