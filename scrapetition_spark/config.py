@@ -120,9 +120,10 @@ class CrawlConfig:
     # benchmark's crawl workload still passes them. The next change to
     # the benchmark removes them.
     seen_bucket_min_bytes: int = 0
-    # Epoch frames derived from the due set (due, fetched, followed)
-    # get an explicit F.broadcast hint only while their known row
-    # count is at or below this; above it the join is left to the
+    # The epoch's joins against due-set-derived frames (the due set,
+    # the fetched pages' urls, the item rows' fetch_seq lookup) get an
+    # explicit F.broadcast hint only while the due set's row count is
+    # at or below this; above it the join is left to the
     # shuffle planner (AQE still broadcasts when the build side turns
     # out cheap). The due set is per-host-budgeted but UNBOUNDED in
     # host count, so an unconditional hint would force multi-GB

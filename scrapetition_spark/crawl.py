@@ -48,6 +48,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from scrapetition_spark.config import CrawlConfig
 from scrapetition_spark.functions.urls import host_bucket, url_domain
@@ -56,7 +57,7 @@ from scrapetition_spark.plans.frontier import (
     LINEAGE_COLS,
     assign_fetch_seq,
     candidate_predicate,
-    gate_discovered,
+    follow_order,
     plan_due,
 )
 from scrapetition_spark.session import local_df
@@ -71,9 +72,17 @@ from scrapetition_spark.schemas import (
     USERS,
     VOTES,
 )
-from scrapetition_spark.sources.catalog import Catalog
+from scrapetition_spark.sources.catalog import PART, Catalog, grouped_resolve
 
 _URL_ORDER = ["source_fetch_seq", "dispatcher_idx", "pos"]
+# the tagged parts of the urls resolve (``CrawlEngine._merge_urls``):
+# a row carries one of them, the others are null
+_URL_TAGS = {
+    "base": StructType(URLS.fields[1:]),
+    "fetch": "struct<status:int,encoding:string>",
+    "disc": "struct<source_fetch_seq:bigint,dispatcher_idx:int,pos:int>",
+    "follow": "struct<s:bigint,d:int,p:int>",
+}
 # every table the engine writes, by logical name: the epoch's commit
 # record holds the HEAD of each
 ENGINE_TABLES = (
@@ -184,11 +193,9 @@ class CrawlEngine:
     def _commit_urls(self, out: DataFrame, touched: list[int] | None) -> None:
         """The one write of ``urls``: a partition-scoped overwrite of the
         ``touched`` commit buckets with ``out``'s rows (the whole table
-        when None), bucket spec recorded after the commit."""
-        self.cat.overwrite_partitions(
-            "urls", out, F.pmod(F.col("host_bucket"), F.lit(self.cfg.n_commit_buckets)),
-            touched, self._commit_spec(),
-        )
+        when None), bucketed by ``out``'s ``PART`` column, bucket spec
+        recorded after the commit."""
+        self.cat.overwrite_partitions("urls", out, PART, touched, self._commit_spec())
 
     def _read_seen(self, urls: DataFrame) -> DataFrame:
         """``-a``'s seen set (Main.hs:89-91, seen=[] at :246): the
@@ -212,26 +219,31 @@ class CrawlEngine:
             seen = self.cat.read("urls_seen", URLS_SEEN)
         return seen.filter(F.col("epoch") >= F.lit(self.run_start_epoch))
 
+    def _new_url(
+        self, url: F.Column, scheduled: bool, lineage: dict[str, F.Column]
+    ) -> list[F.Column]:
+        """The columns after ``url`` of a newly inserted urls row:
+        unfetched, scheduled or not, with ``lineage`` (one column per
+        ``LINEAGE_COLS`` name)."""
+        host = url_domain(url)
+        given = {
+            "scraper": F.lit(self.cfg.scraper_name),
+            "host": host,
+            "host_bucket": host_bucket(host, self.cfg.n_host_buckets),
+            "in_frontier": F.lit(int(scheduled)),
+            **lineage,
+        }
+        return [
+            given.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+            for f in URLS.fields[1:]
+        ]
+
     def _url_row(self, df: DataFrame, scheduled: bool) -> DataFrame:
         """Project a (target/lineage) frame onto the urls schema."""
-        t = F.col("target")
         return df.select(
-            t.alias("url"),
-            F.lit(None).cast("int").alias("status"),
-            F.lit(None).cast("string").alias("encoding"),
-            F.lit(None).cast("timestamp").alias("first_seen"),
-            F.lit(None).cast("timestamp").alias("last_seen"),
-            F.lit(None).cast("timestamp").alias("first_scraped"),
-            F.lit(None).cast("timestamp").alias("last_scraped"),
-            F.lit(self.cfg.scraper_name).alias("scraper"),
-            url_domain(t).alias("host"),
-            host_bucket(url_domain(t), self.cfg.n_host_buckets).alias("host_bucket"),
-            F.lit(None).cast("int").alias("depth"),
-            F.lit(1 if scheduled else 0).alias("in_frontier"),
-            F.col("discovery_epoch"),
-            F.col("source_fetch_seq"),
-            F.col("dispatcher_idx").cast("int"),
-            F.col("pos").cast("int"),
+            F.col("target").alias("url"),
+            *self._new_url(F.col("target"), scheduled,
+                           {c: F.col(c) for c in LINEAGE_COLS}),
         )
 
     # ------------------------------------------------------------------ seed
@@ -262,18 +274,13 @@ class CrawlEngine:
         table, so a catalog in another layout leaves it in the live
         one."""
         self.cat.restore_heads()
-        first = targets.groupBy("target").agg(F.min("pos").alias("pos")).select(
+        seeds = targets.select(
             "target",
-            F.lit(-1).alias("discovery_epoch"),
             F.lit(-1).cast("long").alias("source_fetch_seq"),
             F.lit(-1).alias("dispatcher_idx"),
             "pos",
         )
-        urls, _ = self._read_urls()
-        new = self._url_row(first, scheduled=True).join(
-            urls.select("url"), ["url"], "left_anti"
-        )
-        self._commit_urls(urls.unionByName(new), None)
+        self._merge_urls(None, seeds, -1, scheduled=True)
         self.cat.record_heads(ENGINE_TABLES)
 
     def resume_not_seen(self) -> None:
@@ -286,7 +293,7 @@ class CrawlEngine:
             F.when(F.col("first_seen").isNull(), F.lit(1)).otherwise(
                 F.col("in_frontier")
             ),
-        )
+        ).withColumn(PART, F.pmod(F.col("host_bucket"), F.lit(self.cfg.n_commit_buckets)))
         self._commit_urls(rescheduled, None)
         self.cat.record_heads(ENGINE_TABLES)
 
@@ -295,10 +302,10 @@ class CrawlEngine:
         the governing KNOWN row count is at or below
         ``cfg.broadcast_max_rows``; above it the join goes through the
         shuffle planner (AQE still broadcasts when cheap). One
-        definition so the epoch joins and the urls-rewrite joins can
-        never diverge in broadcast policy. ``broadcast_max_rows=0``
-        disables EVERY hint (the A/B knob) — including on empty
-        frames, which ``<=`` alone would still hint."""
+        definition, so the epoch's joins never diverge in broadcast
+        policy. ``broadcast_max_rows=0`` disables EVERY hint (the A/B
+        knob) — including on empty frames, which ``<=`` alone would
+        still hint."""
         if self.cfg.broadcast_max_rows <= 0:
             return df
         return F.broadcast(df) if n_rows <= self.cfg.broadcast_max_rows else df
@@ -400,7 +407,9 @@ class CrawlEngine:
         due_seq = due.select("url", "fetch_seq")
 
         # S2: sniffed charset (meta content-type span) wins over the
-        # transport hint (Encoding.hs:16-41; stored by S9, URL.hs:18-25)
+        # transport hint (Encoding.hs:16-41; stored by S9, URL.hs:18-25).
+        # Materialized once: the urls_seen append and the urls resolve
+        # both read it, and neither re-runs its joins.
         fetched = (
             pages.select("url", "fetch_seq", "status", "encoding")
             .join(
@@ -416,6 +425,7 @@ class CrawlEngine:
                 "status",
                 F.coalesce("sniffed", "encoding").alias("encoding"),
             )
+            .localCheckpoint()
         )
 
         def with_seq(df: DataFrame) -> DataFrame:
@@ -450,8 +460,9 @@ class CrawlEngine:
 
         n_discovered = 0
         disc_counts: dict[int, int] = {}
-        # (table, batch, keys, schema, order, bucket expr, touched
-        # buckets), executed concurrently below
+        # merge_insert arguments (table, batch, keys, schema, order,
+        # bucket expr, touched buckets), one grouped resolve each,
+        # executed concurrently below
         sink_tasks: list[tuple] = []
         # ---- item sinks (S8) — insertion order (fetch_seq,
         # dispatcher_idx, pos) ≙ the reference's sequential executeMany.
@@ -588,19 +599,8 @@ class CrawlEngine:
                 ("url_edges", edges, UNIQUE_KEYS["url_edges"], URL_EDGES, _URL_ORDER,
                  self._commit_bucket(url_domain(F.col("source"))), sorted(due_commit))
             )
-
-            # follow gates + within-epoch union dedup → frontier rows.
-            # Lazily checkpointed: the urls-rewrite sink counts it (to
-            # size-gate its broadcast hints on the DEDUPED row count,
-            # not the n_discovered overestimate — fanout× larger) and
-            # that first action materializes it INSIDE the sink pool,
-            # concurrent with the other sinks; both rewrite joins then
-            # reuse the checkpoint instead of re-running the dedup.
-            followed = gate_discovered(
-                disc.withColumn("discovery_epoch", F.lit(epoch)), cfg
-            ).localCheckpoint(eager=False)
         else:
-            followed = None
+            disc = None
 
         seen_batch = fetched.select(
             "url",
@@ -613,7 +613,7 @@ class CrawlEngine:
 
         # ---- execute the independent writes concurrently (each hits
         # its own table; Spark schedules the jobs in parallel). The
-        # urls-table rewrite (S6 inserts + S9 seen-update + C3 merge —
+        # urls resolve (S6 inserts + S9 seen-update + C3 adoption —
         # one MERGE INTO with two WHEN clauses on Iceberg) and the
         # seen-set append (C2) join the pool.
         from concurrent.futures import ThreadPoolExecutor
@@ -633,8 +633,7 @@ class CrawlEngine:
             ]
             futs.append(
                 pool.submit(
-                    self._rewrite_urls, fetched, disc, followed, epoch, n_due,
-                    urls_touched,
+                    self._merge_urls, urls_touched, disc, epoch, False, fetched
                 )
             )
             futs.append(
@@ -671,136 +670,105 @@ class CrawlEngine:
         log.debug("epoch %d: due=%d stage seconds %s", epoch, n_due, stages)
         return EpochStats(epoch, n_due, n_discovered, dur, stages)
 
-    def _rewrite_urls(
+    def _merge_urls(
         self,
-        fetched: DataFrame,
-        disc: DataFrame | None,
-        followed: DataFrame | None,
-        epoch: int,
-        n_due: int,
         touched: list[int] | None,
+        found: DataFrame | None,
+        epoch: int,
+        scheduled: bool,
+        fetched: DataFrame | None = None,
     ) -> None:
-        """S6 inserts + S9 seen-update + C3 frontier merge as one
-        partition-scoped commit of the ``touched`` commit buckets —
-        every bucket a fetched or discovered URL lands in; None
-        rewrites the whole table into the live layout."""
-        now = F.current_timestamp()
+        """S6 inserts + S9 seen-update + C3 adoption as one grouped
+        resolve per (commit bucket, url) (``grouped_resolve``),
+        committed partition-scoped over the ``touched`` commit buckets
+        — every bucket a fetched or found URL lands in; None rewrites
+        the whole table into the live layout. The union's rows are
+        tagged (``_URL_TAGS``) and folded per url into:
+
+        - ``base``: the stored row (``max``: at most one);
+        - ``fetch``: the fetch update of a ``fetched`` row (S9);
+        - ``disc``: the first occurrence among ``found`` rows (target
+          plus ``_URL_ORDER`` lineage) — S6 inserts every discovered
+          URL (App.hs:89-90), followed or not;
+        - ``adopt``: the lineage the frontier adopts (C3,
+          ``follow_order``); ``scheduled`` found rows are seeds, which
+          are not adopted.
+
+        The row is ``t = coalesce(base, first discovery)``, a new URL
+        entering with lineage epoch ``epoch`` and ``in_frontier =
+        scheduled``; existing and new rows then pass the same update
+        rules."""
         cfg = self.cfg
-
-        # same size-gated hint as the epoch joins: fetched is bounded
-        # by n_due; the followed side is gated on its OWN deduped row
-        # count — n_discovered counts raw (source × position) edges,
-        # a fanout× overestimate of the per-target frontier rows that
-        # actually join here (measured: the proxy flipped these joins
-        # to shuffle on the 2.1M-URL scaling epoch and cost ~23 s of
-        # sink time at local[8]). followed is lazily checkpointed, so
-        # this count materializes it once, inside this pool task.
-        hint = self._hint
-
-        n_followed = followed.count() if followed is not None else 0
-
         if touched is None:
-            urls, _ = self._read_urls()
+            base, _ = self._read_urls()
         else:
-            urls = self.cat.read_buckets("urls", URLS, touched)
+            base = self.cat.read_buckets("urls", URLS, touched)
 
-        # S6: discovered URLs always inserted (App.hs:89-90), even when
-        # not followed (C6) or cross-domain (C7). First occurrence wins.
-        if disc is not None:
-            # first occurrence per target (hash agg, not sort window)
-            key = F.struct(*[F.col(c).alias(c) for c in _URL_ORDER])
-            row = F.struct(*[F.col(c) for c in disc.columns if c != "target"])
-            first_disc = (
-                disc.groupBy("target")
-                .agg(F.min_by(row, key).alias("__r"))
-                .select("target", "__r.*")
-                .withColumn("discovery_epoch", F.lit(epoch))
-            )
-            inserts = self._url_row(first_disc, scheduled=False)
-        else:
-            inserts = None
+        def tagged(df: DataFrame, url: str, bucket: F.Column, **tags) -> DataFrame:
+            return df.select(F.col(url).alias("url"), bucket.alias(PART), *[
+                tags.get(c, F.lit(None)).cast(t).alias(c) for c, t in _URL_TAGS.items()
+            ])
 
-        f = fetched.select(
-            F.col("url").alias("f_url"),
-            F.coalesce(F.col("status"), F.lit(404)).alias("f_status"),
-            F.col("encoding").alias("f_encoding"),
+        def commit_bucket(url: str) -> F.Column:
+            return self._commit_bucket(url_domain(F.col(url)))
+
+        names = URLS.fieldNames()
+        rows = tagged(
+            base, "url", F.pmod(F.col("host_bucket"), F.lit(cfg.n_commit_buckets)),
+            base=F.struct(*names[1:]),
         )
-        t = urls.alias("t")
-        merged = t.join(hint(f, n_due), F.col("t.url") == F.col("f_url"), "left_outer")
+        if fetched is not None:
+            rows = rows.unionByName(tagged(
+                fetched, "url", commit_bucket("url"),
+                fetch=F.struct(F.coalesce("status", F.lit(404)), "encoding"),
+            ))
+        if found is not None:
+            follow = {} if scheduled else {"follow": follow_order(cfg)}
+            rows = rows.unionByName(tagged(
+                found, "target", commit_bucket("target"),
+                disc=F.struct(*_URL_ORDER), **follow,
+            ))
+        g = grouped_resolve(
+            rows, ["url"],
+            F.max("base").alias("base"),
+            F.max("fetch").alias("fetch"),
+            F.min("disc").alias("disc"),
+            F.min_by("disc", "follow").alias("adopt"),
+        ).filter(F.col("base").isNotNull() | F.col("disc").isNotNull())
 
-        if followed is not None:
-            # the followed rows' lineage, joined by both the merge of
-            # existing rows and the scheduling of new ones
-            fo = followed.select(
-                F.col("target").alias("m_url"),
-                F.col("discovery_epoch").alias("m_epoch"),
-                F.col("source_fetch_seq").alias("m_seq"),
-                F.col("dispatcher_idx").alias("m_didx"),
-                F.col("pos").alias("m_pos"),
-            )
-            merged = merged.join(
-                hint(fo, n_followed), F.col("t.url") == F.col("m_url"), "left_outer"
-            )
-        else:
-            for c in ("m_url", "m_epoch", "m_seq", "m_didx", "m_pos"):
-                merged = merged.withColumn(
-                    c, F.lit(None).cast("long" if c in ("m_seq",) else "int")
-                    if c != "m_url"
-                    else F.lit(None).cast("string")
-                )
+        new = F.struct(*self._new_url(F.col("url"), scheduled, {
+            "discovery_epoch": F.lit(epoch),
+            **{c: F.col(f"disc.{c}") for c in _URL_ORDER},
+        }))
+        g = g.select(PART, "url", "fetch", "adopt", F.coalesce("base", new).alias("t"))
 
-        was_fetched = F.col("f_url").isNotNull()
+        def t(c: str) -> F.Column:
+            return F.col(f"t.{c}")
+
+        now = F.current_timestamp()
+        was_fetched = F.col("fetch").isNotNull()
         # C3 merge policy: FIFO keeps the existing lineage; LIFO lets a
-        # re-discovery of a still-unfetched URL jump the queue.
-        mergeable = (
-            F.col("m_url").isNotNull()
-            & F.col("t.first_seen").isNull()
+        # re-discovery of a still-unfetched URL jump the queue. A newly
+        # discovered URL is off the frontier until adopted.
+        adopt = (
+            F.col("adopt").isNotNull()
+            & t("first_seen").isNull()
             & ~was_fetched
+            & (F.lit(cfg.lifo) | (t("in_frontier") == 0))
         )
-        adopt = mergeable & (
-            F.lit(cfg.lifo) | (F.col("t.in_frontier") == 0)
-        )
-        out = merged.select(
-            F.col("t.url").alias("url"),
-            F.when(was_fetched, F.col("f_status")).otherwise(F.col("t.status")).alias("status"),
-            F.when(was_fetched, F.col("f_encoding")).otherwise(F.col("t.encoding")).alias("encoding"),
+        updated = {
+            "status": F.when(was_fetched, F.col("fetch.status")).otherwise(t("status")),
+            "encoding": F.when(was_fetched, F.col("fetch.encoding")).otherwise(t("encoding")),
             # S9 (URL.hs:18-25): first_seen = coalesce(first_seen, now)
-            F.when(was_fetched, F.coalesce(F.col("t.first_seen"), now))
-            .otherwise(F.col("t.first_seen")).alias("first_seen"),
-            F.when(was_fetched, now).otherwise(F.col("t.last_seen")).alias("last_seen"),
-            F.col("t.first_scraped").alias("first_scraped"),
-            F.col("t.last_scraped").alias("last_scraped"),
-            F.col("t.scraper").alias("scraper"),
-            F.col("t.host").alias("host"),
-            F.col("t.host_bucket").alias("host_bucket"),
-            F.col("t.depth").alias("depth"),
-            F.when(adopt, F.lit(1)).otherwise(F.col("t.in_frontier")).alias("in_frontier"),
-            F.when(adopt, F.col("m_epoch")).otherwise(F.col("t.discovery_epoch")).alias("discovery_epoch"),
-            F.when(adopt, F.col("m_seq")).otherwise(F.col("t.source_fetch_seq")).alias("source_fetch_seq"),
-            F.when(adopt, F.col("m_didx")).otherwise(F.col("t.dispatcher_idx")).alias("dispatcher_idx"),
-            F.when(adopt, F.col("m_pos")).otherwise(F.col("t.pos")).alias("pos"),
-        )
-
-        if inserts is not None:
-            # brand-new rows (not in table): scheduled iff followed
-            ins = inserts.join(urls.select(F.col("url")), ["url"], "left_anti")
-            if followed is not None:
-                ins = ins.join(
-                    hint(fo, n_followed), ins["url"] == fo["m_url"], "left_outer"
-                ).select(
-                    "url", "status", "encoding", "first_seen", "last_seen",
-                    "first_scraped", "last_scraped", "scraper", "host",
-                    "host_bucket", "depth",
-                    F.when(F.col("m_url").isNotNull(), F.lit(1))
-                    .otherwise(F.lit(0)).alias("in_frontier"),
-                    F.coalesce("m_epoch", "discovery_epoch").alias("discovery_epoch"),
-                    F.coalesce("m_seq", "source_fetch_seq").alias("source_fetch_seq"),
-                    F.coalesce("m_didx", "dispatcher_idx").alias("dispatcher_idx"),
-                    F.coalesce("m_pos", "pos").alias("pos"),
-                )
-            out = out.unionByName(ins.select(*[fld.name for fld in URLS.fields]))
-
-        self._commit_urls(out.select(*[fld.name for fld in URLS.fields]), touched)
+            "first_seen": F.when(was_fetched, F.coalesce(t("first_seen"), now))
+            .otherwise(t("first_seen")),
+            "last_seen": F.when(was_fetched, now).otherwise(t("last_seen")),
+            "in_frontier": F.when(adopt, F.lit(1)).otherwise(t("in_frontier")),
+            "discovery_epoch": F.when(adopt, F.lit(epoch)).otherwise(t("discovery_epoch")),
+            **{c: F.when(adopt, F.col(f"adopt.{c}")).otherwise(t(c)) for c in _URL_ORDER},
+        }
+        out = g.select(PART, "url", *[updated.get(c, t(c)).alias(c) for c in names[1:]])
+        self._commit_urls(out, touched)
 
     # ------------------------------------------------------------------ run
 
@@ -809,10 +777,15 @@ class CrawlEngine:
         App.hs:45-47) or max_epochs is hit. ``sleep=True`` enforces the
         politeness budget in wall-clock (threadDelay ≙ App.hs:68)."""
         stats: list[EpochStats] = []
-        self.cat.restore_heads()  # crawl_metrics and urls_seen are exact after it
-        last = self.cat.read("crawl_metrics", CRAWL_METRICS).agg(F.max("epoch")).first()[0]
+        # crawl_metrics is exact after restore_heads, and each of its
+        # rows commits with that epoch's urls_seen rows: its
+        # urls_fetched sum is the fetch counter, with no urls_seen scan
+        self.cat.restore_heads()
+        last, n_fetched = self.cat.read("crawl_metrics", CRAWL_METRICS).agg(
+            F.max("epoch"), F.sum("urls_fetched")
+        ).first()
         epoch = 0 if last is None else last + 1
-        self.fetch_seq_base = self.cat.read("urls_seen", URLS_SEEN).count() if epoch else 0
+        self.fetch_seq_base = n_fetched or 0
         self.run_start_epoch = epoch
         while True:
             t0 = time.time()

@@ -219,34 +219,23 @@ def select_urls_where(
         spark.catalog.dropTempView(view)
 
 
-def gate_discovered(discovered: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """Follow/cross-domain gates (C6/C7, App.hs:57-62) + within-epoch
-    first/last-occurrence dedup (the sequential union semantics above).
-
-    ``discovered``: one row per (source page × dispatcher × position)
-    with columns (target, source_fetch_seq, dispatcher_idx, pos).
-    Returns frontier-ready rows keyed by target with final lineage.
-    """
-    if not cfg.follow_links:
-        return discovered.limit(0)
-    d = discovered
-    if not cfg.cross_domain:
-        d = d.filter(url_domain(F.col("target")) == F.lit(cfg.start_domain))
-    # first/last-occurrence per target as a hash aggregate (min_by):
-    # partial agg map-side, one shuffle — no sort-window over the
-    # (high-cardinality) target key. LIFO negates the numeric seq so
-    # a single min_by expresses (seq DESC, dispatcher ASC, pos ASC).
+def follow_order(cfg: CrawlConfig) -> Column:
+    """Follow/cross-domain gates (C6/C7, App.hs:57-62) and the
+    within-epoch union dedup (the sequential union semantics above) as
+    one order key over discovered rows (columns target,
+    source_fetch_seq, dispatcher_idx, pos): null for a row the gates
+    drop, else the row's place in the union — FIFO's first
+    occurrence, or LIFO's latest page first (the negated seq) with
+    page order kept. ``min_by(lineage, follow_order(cfg))`` per
+    target is the lineage the frontier adopts, null when no
+    occurrence is followed: the urls resolve's C3 aggregate."""
     seq = F.col("source_fetch_seq")
     key = F.struct(
         (-seq if cfg.lifo else seq).alias("s"),
         F.col("dispatcher_idx").alias("d"),
         F.col("pos").alias("p"),
     )
-    others = [c for c in d.columns if c != "target"]
-    row = F.struct(*[F.col(c) for c in others])
-    return (
-        d.groupBy("target")
-        .agg(F.min_by(row, key).alias("__r"))
-        .select("target", "__r.*")
-        .select(*d.columns)
-    )
+    gate = F.lit(cfg.follow_links)
+    if not cfg.cross_domain:
+        gate = gate & (url_domain(F.col("target")) == F.lit(cfg.start_domain))
+    return F.when(gate, key)

@@ -19,14 +19,18 @@ parquet + JSON manifests:
 - ``record_heads`` stores the HEADs of many tables as one commit
   record (the epoch checkpoint), ``restore_heads`` rolls them back
   to it;
-- ``merge_insert`` = MERGE WHEN NOT MATCHED INSERT: batch-internal
-  first-occurrence dedup + ``left_anti`` against the live table.
-  With a ``bucket_expr`` the table is stored in buckets derived from
-  its key (≙ an Iceberg bucket-partitioned table) and the anti-join
-  reads ONLY the buckets the batch touches — per-epoch MERGE cost is
-  O(touched buckets), not O(table).
-  (The seen-date upsert S9 needs no separate merge_update: it is
-  folded into the crawl engine's single urls rewrite.)
+- ``merge_insert`` = MERGE WHEN NOT MATCHED INSERT, written as one
+  grouped resolve (``grouped_resolve``): the live table's keys,
+  tagged existing, union the batch rows; one group per key keeps the
+  existing row or else the batch's first occurrence. With a
+  ``bucket_expr`` the table is stored in buckets derived from its
+  key (≙ an Iceberg bucket-partitioned table), the resolve reads ONLY
+  the buckets the batch touches and groups by (bucket, key) after one
+  hash partitioning by bucket, which the partitioned write reuses —
+  per-epoch MERGE cost is O(touched buckets), not O(table), in one
+  shuffle. The crawl engine's ``urls`` commit (S6 inserts, S9
+  seen-date upsert, C3 adoption) is the same resolve with its own
+  aggregates.
 
 Every call site is written against this interface so swapping in a
 real Iceberg catalog is a one-class change.
@@ -40,7 +44,7 @@ import shutil
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -54,6 +58,27 @@ from scrapetition_spark.session import local_df
 # (measured: a 64-file parquet write is 2.7× slower than 8-file at 32
 # local threads).
 WRITE_PARTITIONS = 8
+# Bucket column of a partitioned write, stored as the ``__part=<k>``
+# directory names, not in the data files.
+PART = "__part"
+
+
+def grouped_resolve(rows: DataFrame, keys: list[str], *aggs: Column) -> DataFrame:
+    """The MERGE rule's one shape: ``rows`` — a table's existing rows
+    (or keys) and a batch's rows, each tagged — grouped by key, each
+    group folded by ``aggs`` (existing wins as ``max`` over an
+    existing tag, first occurrence as ``min_by(row, order)``). Rows
+    carrying the bucket column ``PART`` are hash-partitioned by it
+    once, at the partitioned writer's partition count, and grouped by
+    (bucket, key): that partitioning meets the aggregate's clustering
+    and the write's, so a MERGE and its write run one shuffle, with
+    no join and no broadcast. The write must be handed ``PART``
+    itself: a recomputed bucket is a new attribute and is shuffled
+    again."""
+    if PART in rows.columns:
+        rows = rows.repartition(2 * WRITE_PARTITIONS, F.col(PART))
+        keys = [PART, *keys]
+    return rows.groupBy(*keys).agg(*aggs)
 
 
 def _dir_bytes(path: str) -> int:
@@ -270,16 +295,21 @@ class Catalog:
         those buckets. A write without rows leaves no dir behind."""
         part = f"part-{uuid.uuid4().hex[:12]}"
         out = os.path.join(self._tdir(table), "data", part)
-        expr = F.col(part_col) if isinstance(part_col, str) else part_col
+        # a frame that already carries PART (a grouped resolve's
+        # output) keeps that attribute, so the planner drops the
+        # repartition below as already satisfied
+        if not (isinstance(part_col, str) and part_col == PART):
+            df = df.withColumn(
+                PART, F.col(part_col) if isinstance(part_col, str) else part_col
+            )
         # repartition BY the bucket → exactly one file per bucket
-        # (partitionBy alone would emit one per (task, bucket)); __part
+        # (partitionBy alone would emit one per (task, bucket)); PART
         # is hoisted into directory names and stripped from the data
         # files, so a derived bucket expression never pollutes the
         # table schema
         (
-            df.withColumn("__part", expr)
-            .repartition(2 * WRITE_PARTITIONS, F.col("__part"))
-            .write.partitionBy("__part")
+            df.repartition(2 * WRITE_PARTITIONS, F.col(PART))
+            .write.partitionBy(PART)
             .mode("overwrite")
             .parquet(out)
         )
@@ -395,74 +425,75 @@ class Catalog:
         touched: list[int] | None = None,
     ) -> int:
         """MERGE ... WHEN NOT MATCHED THEN INSERT (≙ INSERT OR IGNORE,
-        Sql.hs:19-105). Batch-internal duplicates collapse to the
-        first occurrence in ``order_cols`` order (the reference's
-        insertion order ≙ executeMany sequencing); existing rows win.
+        Sql.hs:19-105) as one ``grouped_resolve``: the existing keys,
+        tagged, union the batch; a key's group keeps nothing when it
+        holds an existing key (existing wins, ``max(__ex)``), else the
+        batch's first occurrence in ``order_cols`` order (the
+        reference's insertion order ≙ executeMany sequencing;
+        ``min_by``). Without ``order_cols`` the least row wins.
 
         Without ``bucket_expr`` the table is a plain file list and the
-        anti-join reads all of it (the generic insert of the streaming
-        sink).
+        resolve reads all of its keys (the generic insert of the
+        streaming sink).
 
         With ``bucket_expr`` (a deterministic int expression over the
         key columns, so a key always lands in the same bucket) the
         table is bucketed from its first write and the MERGE is
-        bucket-pruned: the anti-join reads only the ``touched``
-        buckets and the insert appends per-bucket files, so one MERGE
-        costs O(touched buckets), never O(table). ``touched`` must
-        cover every bucket the batch has rows in. A caller that knows
-        them (the crawl epoch, from its due set) passes them; else
-        they are collected from the batch, for one batch checkpoint
-        and one distinct-bucket job. A table stored in another layout
-        — plain files, or buckets under another ``bucket_spec`` — is
-        first rewritten once into this one."""
-        cols = [f.name for f in schema.fields]
-        if order_cols:
-            # first-occurrence-in-order dedup as a hash aggregate
-            # (min_by): map-side partial aggregation, one shuffle —
-            # a row_number window over these high-cardinality keys
-            # would sort every partition instead.
-            row = F.struct(*[F.col(c) for c in cols])
-            key = F.struct(*[F.col(c) for c in order_cols])
-            batch = (
-                batch.groupBy(*[F.col(k) for k in keys])
-                .agg(F.min_by(row, key).alias("__r"))
-                .select("__r.*")
-            )
-        else:
-            batch = batch.select(*cols).dropDuplicates(keys)
-
-        if bucket_expr is None:
+        bucket-pruned: the resolve reads only the ``touched`` buckets,
+        groups by (bucket, key) and appends per-bucket files, so one
+        MERGE costs O(touched buckets), never O(table), in one
+        shuffle. ``touched`` must cover every bucket the batch has rows
+        in. A caller that knows them (the crawl epoch, from its due
+        set) passes them; else they are collected from the batch, for
+        one batch checkpoint and one distinct-bucket job. A table
+        stored in another layout — plain files, or buckets under
+        another ``bucket_spec`` — is first rewritten once into this
+        one."""
+        row = F.struct(*[F.col(f.name) for f in schema.fields])
+        order = F.struct(*[F.col(c) for c in order_cols]) if order_cols else row
+        bucketed = bucket_expr is not None
+        if not bucketed:
             existing = self.read(table, schema)
-            # null-safe key comparison (eqNullSafe) — UNIQUE treats
-            # NULLs as distinct in SQLite, but our keys are never null
-            # in practice.
-            cond = [batch[k].eqNullSafe(existing[k]) for k in keys]
+        elif not self.exists(table):
+            existing = None
+        else:
+            if not self.prunable_buckets(table, bucket_spec):
+                self.overwrite_partitions(
+                    table, self.read(table, schema), bucket_expr, None, bucket_spec
+                )
+            if touched is None:
+                # materialize the batch once: the bucket collect and
+                # the resolve both read the checkpoint
+                batch = batch.localCheckpoint()
+                touched = sorted(
+                    r["b"]
+                    for r in batch.select(bucket_expr.alias("b")).distinct().collect()
+                )
+            existing = self.read_buckets(table, schema, touched)
+        rows = batch.select(
+            *keys, F.lit(0).alias("__ex"), row.alias("__r"), order.alias("__o")
+        )
+        if existing is not None:
+            rows = rows.unionByName(
+                existing.select(*keys, F.lit(1).alias("__ex")),
+                allowMissingColumns=True,
+            )
+        if bucketed:
+            rows = rows.withColumn(PART, bucket_expr)
+        fresh = (
+            grouped_resolve(
+                rows, keys, F.max("__ex").alias("__ex"),
+                F.min_by("__r", "__o").alias("__r"),
+            )
+            .filter(F.col("__ex") == 0)
+            .select(*([PART] if bucketed else []), "__r.*")
+        )
+        if not bucketed:
             # a MERGE whose every key already exists commits NO new
             # data dir; append_skip_empty reads emptiness from the
-            # written footers, so the anti-join executes exactly once.
-            return self.append_skip_empty(
-                table, batch.join(existing, cond, "left_anti")
-            )
-
-        if not self.exists(table):
-            return self.append_partitions(table, batch, bucket_expr, bucket_spec)
-        if not self.prunable_buckets(table, bucket_spec):
-            self.overwrite_partitions(
-                table, self.read(table, schema), bucket_expr, None, bucket_spec
-            )
-        if touched is None:
-            # materialize the deduped batch once: the touched-bucket
-            # scan and the anti-join both read the checkpoint instead
-            # of re-running the batch plan
-            batch = batch.localCheckpoint()
-            touched = sorted(
-                r["b"]
-                for r in batch.select(bucket_expr.alias("b")).distinct().collect()
-            )
-        existing = self.read_buckets(table, schema, touched).select(*keys)
-        cond = [batch[k].eqNullSafe(existing[k]) for k in keys]
-        fresh = batch.join(existing, cond, "left_anti")
-        sid = self.append_partitions(table, fresh, bucket_expr, bucket_spec)
+            # written footers, so the resolve executes exactly once.
+            return self.append_skip_empty(table, fresh)
+        sid = self.append_partitions(table, fresh, PART, bucket_spec)
         return self.compact_buckets(table) or sid
 
     def append_bucketed(

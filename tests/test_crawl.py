@@ -200,6 +200,53 @@ def test_failure_at_every_write_resumes_to_clean_state(
         assert len(snaps) <= 2, t
 
 
+A_TEST = "https://a.test/"
+_FOUND = "source string, source_fetch_seq long, dispatcher_idx int, pos int, target string"
+
+
+@pytest.mark.parametrize("lifo", [False, True], ids=["fifo", "lifo"])
+@pytest.mark.parametrize(
+    "case", ["fetched_and_discovered", "rediscovered_unfetched", "discovered_not_followed"]
+)
+def test_urls_resolve_edge_cases(spark, case, lifo):
+    """The urls resolve's S6/S9/C3 rules over one epoch's parts, on
+    seeds x and y (lineage epoch -1, pos 0 and 1):
+
+    - a URL fetched and discovered in the same epoch is not adopted;
+    - an unfetched URL that is rediscovered takes the new lineage
+      under LIFO and keeps its lineage under FIFO;
+    - a URL discovered but not followed is inserted with
+      ``in_frontier = 0`` and its first occurrence's lineage, and a
+      known URL rediscovered unfollowed keeps its lineage."""
+    x, y, z = (A_TEST + p for p in "xyz")
+    cfg = CrawlConfig("a.test", follow_links=case != "discovered_not_followed",
+                      lifo=lifo, politeness_sec=0)
+    eng, cat = _engine(spark, None, cfg)
+    eng.seed([x, y])
+    fetched = None
+    if case == "fetched_and_discovered":
+        found = [(y, 0, 0, 0, x)]
+        fetched = spark.createDataFrame(
+            [(x, 0, 200, "utf-8")], "url string, fetch_seq long, status int, encoding string")
+        want = {x: (200, True, 1, (-1, -1, -1, 0))}
+    elif case == "rediscovered_unfetched":
+        found = [(x, 4, 0, 2, y)]
+        want = {y: (None, False, 1, (1, 4, 0, 2) if lifo else (-1, -1, -1, 1))}
+    else:
+        found = [(x, 3, 0, 2, z), (x, 1, 0, 7, z), (x, 2, 0, 1, y)]
+        want = {z: (None, False, 0, (1, 1, 0, 7)), y: (None, False, 1, (-1, -1, -1, 1))}
+    eng._merge_urls(None, spark.createDataFrame(found, _FOUND), 1, False, fetched)
+    rows = {r["url"]: r for r in cat.read("urls", URLS).collect()}
+    got = {
+        u: (rows[u]["status"], rows[u]["first_seen"] is not None, rows[u]["in_frontier"],
+            tuple(rows[u][c] for c in
+                  ("discovery_epoch", "source_fetch_seq", "dispatcher_idx", "pos")))
+        for u in want
+    }
+    assert got == want
+    assert len(rows) == len({x, y} | set(want)) and rows[z if z in rows else x]["host"] == "a.test"
+
+
 def test_bloom_exactness(spark):
     """Bloom positives are verified exactly; negatives never drop a
     URL (unseen() returns exactly frontier ∖ seen)."""

@@ -252,3 +252,46 @@ def test_older_layout_resumes_to_clean_crawl(spark):
     CrawlEngine(spark, old, cfg, docs).run()
     assert state(old) == state(clean)
     _assert_bucketed(old, cfg, CRAWL_STATE)
+
+
+def test_resumed_run_reads_no_urls_seen_before_its_first_epoch(spark, monkeypatch):
+    """``run()`` takes the fetch counter from crawl_metrics (the sum of
+    ``urls_fetched``, in the aggregate that finds the last epoch), not
+    from a count of urls_seen: a resumed run reads no urls_seen before
+    its first epoch, and its ``fetch_seq`` continues densely."""
+    docs = fixtures.documents_df(spark, fixtures.fixture_site()).localCheckpoint()
+    cfg = CrawlConfig("www.zeit.de", follow_links=True, politeness_sec=0,
+                      per_host_budget=2)
+    cat = Catalog(spark, tempfile.mkdtemp(prefix="onelayout-resume-"))
+    eng = CrawlEngine(spark, cat, cfg, docs)
+    eng.seed([SEED])
+    eng.run(max_epochs=2)
+    n_before = cat.read("urls_seen", URLS_SEEN).count()
+
+    before_epoch: list[str] = []
+    epochs: list[int] = []
+    read, read_buckets = Catalog.read, Catalog.read_buckets
+    run_epoch = CrawlEngine.run_epoch
+
+    def rec_read(self, table, schema=None, snapshot=None):
+        if not epochs:
+            before_epoch.append(table)
+        return read(self, table, schema, snapshot)
+
+    def rec_read_buckets(self, table, schema, buckets):
+        if not epochs:
+            before_epoch.append(table)
+        return read_buckets(self, table, schema, buckets)
+
+    def rec_run_epoch(eng, epoch):
+        epochs.append(epoch)
+        return run_epoch(eng, epoch)
+
+    monkeypatch.setattr(Catalog, "read", rec_read)
+    monkeypatch.setattr(Catalog, "read_buckets", rec_read_buckets)
+    monkeypatch.setattr(CrawlEngine, "run_epoch", rec_run_epoch)
+    CrawlEngine(spark, cat, cfg, docs).run(max_epochs=2)
+    assert epochs[0] == 2 and "crawl_metrics" in before_epoch
+    assert "urls_seen" not in before_epoch, before_epoch
+    seqs = sorted(r["fetch_seq"] for r in read(cat, "urls_seen", URLS_SEEN).collect())
+    assert len(seqs) > n_before and seqs == list(range(len(seqs)))
