@@ -95,9 +95,9 @@ class CrawlConfig:
     # -a (Main.hs:89-91; seen=[] wiring Main.hs:246): ignore the
     # PERSISTED seen set — every scheduled URL is due again with a
     # fresh fetch_seq. Within-run dedup still applies (the reference's
-    # loop accumulates seen' from [] regardless, App.hs:63): an
-    # anti-join against this run's urls_seen rows, the crawl's only
-    # seen check besides urls.first_seen.
+    # loop accumulates seen' from [] regardless, App.hs:63): a URL is
+    # due only while urls.last_epoch, the epoch of its latest fetch,
+    # is null or before the run's first epoch.
     visit_again: bool = False
     scraper_name: str = "scrapetition-spark"  # ≙ getProgName (App.hs:130-131)
     politeness_sec: float = 2.0  # threadDelay 2000000 (App.hs:68)

@@ -25,10 +25,11 @@ in one commit point, a record of every ``ENGINE_TABLES`` HEAD
 (``Catalog.record_heads``), and every entry point that writes first
 rolls back to it (``Catalog.restore_heads``). An epoch that fails at
 any write resumes to the clean crawl's state (tests/test_crawl.py,
-tests/test_partitioned_bloom.py), and ``urls.first_seen`` is exact.
-So ``urls`` is the crawl's one seen truth: every due set is planned
-from it with the frontier's candidate predicate, and the only seen
-check left is ``-a``'s run-local anti-join against ``urls_seen``.
+tests/test_partitioned_bloom.py), and ``urls.first_seen`` and
+``urls.last_epoch`` (the epoch of the latest fetch) are exact. So
+``urls`` is the crawl's one seen truth: every due set, default and
+``-a``, is a predicate on the ``urls`` scan (``plan_due``), and the
+crawl reads ``urls_seen`` nowhere.
 
 Every crawl-state table is bucketed from its first write, and each
 table's bucket is a function of its key that equals the fetched
@@ -52,11 +53,10 @@ from pyspark.sql.types import StructType
 
 from scrapetition_spark.config import CrawlConfig
 from scrapetition_spark.functions.urls import host_bucket, url_domain
-from scrapetition_spark.parse import discover_urls, parse_pages
+from scrapetition_spark.parse import discover_urls, parse_pages, sniffed_charset
 from scrapetition_spark.plans.frontier import (
     LINEAGE_COLS,
     assign_fetch_seq,
-    candidate_predicate,
     follow_order,
     plan_due,
 )
@@ -134,17 +134,19 @@ class CrawlEngine:
             raise ValueError(f"unknown bloom_mode {bloom_mode!r}")
         self.fetch_seq_base = 0
         self._fallback_buckets: dict[str, int] | None = None
-        # first epoch of THIS run: visit_again (-a) ignores seen rows
-        # from epochs before it (≙ runScrapers urls [] — Main.hs:246
+        # first epoch of THIS run: visit_again (-a) treats URLs last
+        # fetched before it as unseen (≙ runScrapers urls [] — Main.hs:246
         # starts the run's seen set empty; within-run dedup stays)
         self.run_start_epoch = 0
 
     # ------------------------------------------------------------------ util
 
     def _seen_bucket_expr(self) -> F.Column:
-        """urls_seen commit bucket: the row's host bucket — equal urls
-        have equal hosts, so a candidate URL can only match seen rows
-        in its own bucket (what makes the pruned read exact)."""
+        """urls_seen commit bucket: the row's host bucket, so a reader
+        that knows a URL's host reads one bucket. The crawl itself
+        never reads urls_seen (``-a`` is a predicate on
+        ``urls.last_epoch``); the fetch log's readers are the CLI, the
+        oracle trace and the tests."""
         return host_bucket(F.col("host"), self.cfg.n_host_buckets)
 
     def _seen_bucket_spec(self) -> dict:
@@ -196,28 +198,6 @@ class CrawlEngine:
         when None), bucketed by ``out``'s ``PART`` column, bucket spec
         recorded after the commit."""
         self.cat.overwrite_partitions("urls", out, PART, touched, self._commit_spec())
-
-    def _read_seen(self, urls: DataFrame) -> DataFrame:
-        """``-a``'s seen set (Main.hs:89-91, seen=[] at :246): the
-        urls_seen rows of this run's epochs, read ONLY in the
-        frontier's active host buckets (but for a catalog written under
-        another spec). The due-set anti-join matches on url equality
-        and equal urls share a host bucket, so seen rows of other
-        buckets match no candidate: at 10^10 seen URLs the read is
-        O(active buckets), and a domain-restricted crawl (the
-        reference default, gate C7) reads exactly one bucket."""
-        # MUST be plan_due's own predicate (shared helper): the bucket
-        # cover is only sound for exactly the candidate set it joins
-        active = urls.filter(candidate_predicate(self.cfg))
-        buckets = sorted(
-            r["host_bucket"]
-            for r in active.select("host_bucket").distinct().collect()
-        )
-        if self.cat.prunable_buckets("urls_seen", self._seen_bucket_spec()):
-            seen = self.cat.read_buckets("urls_seen", URLS_SEEN, buckets)
-        else:
-            seen = self.cat.read("urls_seen", URLS_SEEN)
-        return seen.filter(F.col("epoch") >= F.lit(self.run_start_epoch))
 
     def _new_url(
         self, url: F.Column, scheduled: bool, lineage: dict[str, F.Column]
@@ -328,12 +308,7 @@ class CrawlEngine:
 
         cfg = self.cfg
         urls, urls_live = self._read_urls()
-        # urls.first_seen commits with urls_seen in one epoch record:
-        # the candidate predicate alone excludes every fetched URL.
-        # Under -a fetched URLs are candidates again, and only this
-        # run's seen rows dedup them.
-        seen = self._read_seen(urls) if cfg.visit_again else None
-        due = plan_due(urls, seen, cfg, self.fetch_seq_base, self.robots)
+        due = plan_due(urls, cfg, self.fetch_seq_base, self.robots, self.run_start_epoch)
         # due_counts: due URLs per host bucket, known on the driver
         # without another job — every sink's touched buckets and the
         # per-bucket metrics derive from it
@@ -409,24 +384,11 @@ class CrawlEngine:
         # S2: sniffed charset (meta content-type span) wins over the
         # transport hint (Encoding.hs:16-41; stored by S9, URL.hs:18-25).
         # Materialized once: the urls_seen append and the urls resolve
-        # both read it, and neither re-runs its joins.
-        fetched = (
-            pages.select("url", "fetch_seq", "status", "encoding")
-            .join(
-                parsed.pages_meta.select(
-                    "url", F.col("encoding").alias("sniffed")
-                ),
-                ["url"],
-                "left",
-            )
-            .select(
-                "url",
-                "fetch_seq",
-                "status",
-                F.coalesce("sniffed", "encoding").alias("encoding"),
-            )
-            .localCheckpoint()
-        )
+        # both read it, and neither re-runs the fetch's anti-join.
+        fetched = pages.select(
+            "url", "fetch_seq", "status",
+            F.coalesce(sniffed_charset(), "encoding").alias("encoding"),
+        ).localCheckpoint()
 
         def with_seq(df: DataFrame) -> DataFrame:
             return df.join(hint(due_seq, n_due), ["url"], "inner")
@@ -763,6 +725,7 @@ class CrawlEngine:
             "first_seen": F.when(was_fetched, F.coalesce(t("first_seen"), now))
             .otherwise(t("first_seen")),
             "last_seen": F.when(was_fetched, now).otherwise(t("last_seen")),
+            "last_epoch": F.when(was_fetched, F.lit(epoch)).otherwise(t("last_epoch")),
             "in_frontier": F.when(adopt, F.lit(1)).otherwise(t("in_frontier")),
             "discovery_epoch": F.when(adopt, F.lit(epoch)).otherwise(t("discovery_epoch")),
             **{c: F.when(adopt, F.col(f"adopt.{c}")).otherwise(t(c)) for c in _URL_ORDER},

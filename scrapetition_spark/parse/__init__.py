@@ -5,4 +5,5 @@ from scrapetition_spark.parse.kernel import (  # noqa: F401
     discover_urls,
     explode_spans,
     parse_pages,
+    sniffed_charset,
 )

@@ -147,7 +147,26 @@ class ParseResult:
     articles_searched: DataFrame  # search teasers (P5)
     articles_from_comments: DataFrame  # canonical-only articles (P6)
     urls: DataFrame  # (url, role, target, offset) per collector (P1, P10)
-    pages_meta: DataFrame  # (url, encoding) — S2 sniff (Encoding.hs:16-41)
+
+
+def sniffed_charset() -> F.Column:
+    """S2 encoding sniff (Encoding.hs:16-41) over a page row (columns
+    ``spans`` and ``status``): the lower-cased charset of the first
+    meta content-type span, null when there is none or the page has no
+    body (status >= 400; the decoder then defaults to utf-8). Picked
+    inside the span array, so it is a row-wise projection of the
+    pages, with no shuffle and no join."""
+
+    def is_ct(x):
+        return F.substring_index(x["text"], SP.SEP, 1) == SP.ROLE_CONTENT_TYPE
+
+    s0 = F.get(F.filter("spans", is_ct), 0)
+    payload = s0["text"].substr(
+        F.length(F.substring_index(s0["text"], SP.SEP, 1)) + 2, F.lit(1 << 30)
+    )
+    enc = F.lower(F.regexp_extract(payload, r"charset=([A-Za-z0-9_\-]+)", 1))
+    body_ok = F.col("status").isNull() | (F.col("status") < 400)
+    return F.when(body_ok & (enc != ""), enc)
 
 
 def _comment_groups_map_side(pages: DataFrame) -> DataFrame:
@@ -319,34 +338,6 @@ def parse_pages(pages: DataFrame, reuse: bool = False) -> ParseResult:
         _grp(SP.ROLE_DESCRIPTION).alias("description"),
         _grp(SP.ROLE_BYLINE).alias("author"),
         _grp(SP.ROLE_META_DATE).alias("date_raw"),
-        _grp(SP.ROLE_CONTENT_TYPE).alias("content_type"),
-    )
-    # S2 encoding sniff (Encoding.hs:16-41): charset from the meta
-    # content-type; null when absent (decoder then defaults to utf-8).
-    # Map-side (first content-type span picked inside the array) so
-    # the per-epoch encoding join never shuffles the span frame.
-    body_ok = F.col("status").isNull() | (F.col("status") < 400)
-    meta_pages = pages.filter(body_ok) if "status" in pages.columns else pages
-
-    def _first_payload(role: str) -> F.Column:
-        def is_role(s):
-            return F.substring_index(s["text"], SP.SEP, 1) == role
-
-        s0 = F.get(F.filter("spans", is_role), 0)
-        return s0["text"].substr(
-            F.length(F.substring_index(s0["text"], SP.SEP, 1)) + 2, F.lit(1 << 30)
-        )
-
-    pages_meta = meta_pages.select(
-        F.col("doc_id").alias("url"),
-        F.lower(
-            F.regexp_extract(
-                _first_payload(SP.ROLE_CONTENT_TYPE), r"charset=([A-Za-z0-9_\-]+)", 1
-            )
-        ).alias("enc_raw"),
-    ).select(
-        "url",
-        F.when(F.col("enc_raw") != "", F.col("enc_raw")).alias("encoding"),
     )
     articles = (
         # canonical, <title> and meta date are required selectors
@@ -442,7 +433,6 @@ def parse_pages(pages: DataFrame, reuse: bool = False) -> ParseResult:
         articles_searched=articles_searched,
         articles_from_comments=articles_from_comments,
         urls=urls,
-        pages_meta=pages_meta,
     )
 
 

@@ -8,10 +8,10 @@ set-oriented plans over the ``urls`` table:
 - C3 FIFO/LIFO merge with ``Data.List.union`` dedup semantics
 - C4 deterministic discovery order via the total lineage key
   ``(discovery_epoch, source_fetch_seq, dispatcher_idx, pos)``
-- C5 ``\\\\ seen`` → the candidate predicate's ``first_seen IS NULL``
-  (``urls.first_seen`` commits with ``urls_seen`` in one epoch
-  record, so it is exact); under ``-a`` an anti-join against this
-  run's ``urls_seen`` rows
+- C5 ``\\\\ seen`` → a predicate on the ``urls`` scan:
+  ``first_seen IS NULL``, or under ``-a`` ``last_epoch`` before the
+  run's first epoch (both columns commit with ``urls_seen`` in one
+  epoch record, so either is exact)
 - C7 cross-domain gate, C6 follow gate
 - C9 politeness: per-host fetch budget per epoch via a window over
   host-partitioned rows (the reference sleeps 2 s globally,
@@ -58,38 +58,27 @@ def order_key(cfg: CrawlConfig) -> list[Column]:
     return [F.col(c).asc() for c in LINEAGE_COLS] + [F.col("url").asc()]
 
 
-def candidate_predicate(cfg: CrawlConfig) -> F.Column:
-    """The frontier-candidate predicate — the SINGLE definition shared
-    by ``plan_due`` and the bucket-pruned seen read
-    (``CrawlEngine._read_seen``). The pruning soundness proof
-    requires the pruned bucket set to cover every URL this predicate
-    admits; keeping two copies would let a one-line edit here silently
-    under-cover the anti-join and refetch seen URLs.
-
-    visit_again (-a, Main.hs:89-91): previously-fetched rows
-    (first_seen set) are due again — only the run-local seen set
-    (the caller filters ``seen`` to this run's epochs) dedups."""
-    return (F.col("in_frontier") == 1) & (
-        F.lit(cfg.visit_again) | F.col("first_seen").isNull()
-    )
-
-
 def plan_due(
     urls: DataFrame,
-    seen: DataFrame | None,
     cfg: CrawlConfig,
     fetch_seq_base: int,
     robots: DataFrame | None = None,
+    run_start_epoch: int = 0,
 ) -> DataFrame:
     """The epoch due set: unseen frontier rows, robots-filtered,
     politeness-budgeted per host, globally capped, with assigned
-    ``fetch_seq`` continuing the global fetch counter. ``seen=None``:
-    the candidate predicate alone decides (``first_seen`` is exact);
-    otherwise candidates in ``seen`` are dropped (``-a``'s run-local
-    seen set)."""
-    cand = urls.filter(candidate_predicate(cfg))
-    if seen is not None:
-        cand = cand.join(seen.select("url"), ["url"], "left_anti")
+    ``fetch_seq`` continuing the global fetch counter.
+
+    Unseen: never fetched (``first_seen IS NULL``). Under visit_again
+    (-a, Main.hs:89-91) the run starts with an empty seen set
+    (Main.hs:246) and still dedups within itself (App.hs:63): a row is
+    unseen unless fetched at or after ``run_start_epoch``, the run's
+    first epoch (``last_epoch``, null when never fetched)."""
+    if cfg.visit_again:
+        unseen = F.coalesce(F.col("last_epoch") < F.lit(run_start_epoch), F.lit(True))
+    else:
+        unseen = F.col("first_seen").isNull()
+    cand = urls.filter((F.col("in_frontier") == 1) & unseen)
 
     if robots is not None and cfg.respect_robots:
         deny = robots.filter(F.col("allow") == 0).select(

@@ -43,10 +43,12 @@ DOCUMENTS = StructType(
 # --------------------------------------------------------------------------
 # urls — from createUrlTableSqlite (/root/reference/src/Network/
 # Scrapetition/URL.hs:68-82): frontier + seen set + fetch metadata.
-# Engine additions (SURVEY.md §2.2 C4/C9): lineage key columns
-# (discovery_epoch, source_fetch_seq, dispatcher_idx, pos), host_bucket
-# for salted partitioning, depth for LIFO/priority, next_fetch_time for
-# the politeness queue.
+# Engine additions (SURVEY.md §2.2 C4/C9): host and host_bucket for
+# salted partitioning, last_epoch (the epoch of the latest fetch, set
+# with last_seen; ``-a``'s due predicate), in_frontier, and the lineage
+# key columns (discovery_epoch, source_fetch_seq, dispatcher_idx, pos).
+# last_epoch holds the position of an older catalog's never-written
+# ``depth``; reads under this schema see it null there.
 URLS = StructType(
     [
         StructField("url", StringType(), False),  # UNIQUE (URL.hs:82)
@@ -60,7 +62,7 @@ URLS = StructType(
         # engine lineage/scheduling additions
         StructField("host", StringType(), True),
         StructField("host_bucket", IntegerType(), True),
-        StructField("depth", IntegerType(), True),
+        StructField("last_epoch", IntegerType(), True),
         StructField("in_frontier", IntegerType(), True),  # 1 = scheduled
         StructField("discovery_epoch", IntegerType(), True),
         StructField("source_fetch_seq", LongType(), True),

@@ -14,6 +14,10 @@ parquet + JSON manifests:
   O(table) per epoch);
 - ``_HEAD`` points at the current snapshot; reads at HEAD or at any
   snapshot id (resume/time travel);
+- a read given the table's schema projects the files onto it (≙
+  Iceberg's reads under the table schema): a column the files lack
+  reads as null, so a table written under an older schema still
+  reads, and the scan plans without a footer-inference job;
 - a manifest also records the bucket spec of its files (≙ an Iceberg
   partition spec id per snapshot): layout and files move together;
 - ``record_heads`` stores the HEADs of many tables as one commit
@@ -234,7 +238,9 @@ class Catalog:
             if schema is None:
                 raise ValueError(f"table {table} does not exist and no schema given")
             return local_df(self.spark, [], schema)
-        return self.spark.read.parquet(*paths)
+        # without a schema, Spark infers one from the footers (a job)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(*paths)
 
     def overwrite(self, table: str, df: DataFrame) -> int:
         return self._commit(table, self._write_files(table, df), parts={})
@@ -367,7 +373,7 @@ class Catalog:
             paths += snap.parts.get(str(b), [])
         if not paths:
             return local_df(self.spark, [], schema)
-        return self.spark.read.parquet(*paths)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def append_partitions(
         self,

@@ -319,8 +319,7 @@ def test_robots_deny_scheme_independent(spark):
     cfg = CrawlConfig("", follow_links=True, cross_domain=True,
                       politeness_sec=0, respect_robots=True,
                       per_host_budget=10)
-    seen = spark.createDataFrame([], URLS_SEEN)
-    due = plan_due(urls, seen, cfg, 0, robots)
+    due = plan_due(urls, cfg, 0, robots)
     got = {r["url"] for r in due.select("url").collect()}
     assert got == {"https://bad.test/politik/z", "https://ok.test/kultur/w"}
 
@@ -337,11 +336,10 @@ def test_salted_due_plan_equivalence(spark, site, docs):
     eng.run(max_epochs=2)  # populate a non-trivial frontier
 
     urls = cat.read("urls", URLS)
-    seen = cat.read("urls_seen", URLS_SEEN)
 
     def due_with(n_salts):
         c = replace(cfg, n_frontier_salts=n_salts)
-        raw = plan_due(urls, seen, c, 0).select(
+        raw = plan_due(urls, c, 0).select(
             "url", "host", "host_bucket",
             "discovery_epoch", "source_fetch_seq", "dispatcher_idx", "pos",
         ).localCheckpoint()

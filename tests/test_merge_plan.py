@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from dataclasses import replace
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
@@ -118,9 +119,13 @@ class _PlanEngine(CrawlEngine):
 def test_warm_epoch_sinks_are_one_shuffle_each(spark):
     """A warm epoch of a multi-host crawl: the urls commit and each
     bucketed item MERGE run one shuffle Exchange and broadcast no
-    existing rows, and the epoch runs at most the 32 Spark jobs
-    measured with the grouped resolve (45 when the MERGEs were
-    anti-joins and the urls commit a two-join rewrite)."""
+    existing rows, and the epoch runs at most the 26 Spark jobs
+    measured with ``fetched`` a projection of the pages and catalog
+    reads under the declared schema (32 before; 45 when the MERGEs
+    were anti-joins and the urls commit a two-join rewrite). The same
+    epoch under ``-a``, on the same catalog state (rolled back to the
+    commit record before the default epoch), runs no more jobs: its
+    seen check is a predicate on the urls scan."""
     docs = fixtures.synthetic_web(spark, n_docs=600, n_hosts=8, fanout=6,
                                   seed=7).localCheckpoint()
     cfg = CrawlConfig(
@@ -133,12 +138,25 @@ def test_warm_epoch_sinks_are_one_shuffle_each(spark):
     eng = _PlanEngine(spark, cat, cfg, docs)
     eng.seed_frame(docs.select(F.col("doc_id").alias("target"))
                    .filter(F.xxhash64("doc_id") % 2 == 0))
-    stats = eng.run(max_epochs=3)
-    assert len(stats) == 3 and all(st.urls_due > 0 for st in stats)
+    assert len(eng.run(max_epochs=2)) == 2
+    record = os.path.join(cat.root, "_RECORD.json")
+    with open(record) as f:
+        before = f.read()
+    stats = eng.run(max_epochs=1)
+    assert len(stats) == 1 and stats[0].urls_due > 0
     jobs, executions = eng.epochs[-1]
     writes = {e["table"]: e for e in executions if e["table"]}
     assert {"urls", "comments", "url_edges"} <= set(writes), writes
     for table in ("urls", "comments", "url_edges"):
         assert writes[table]["exchanges"] == 1, (table, writes[table])
         assert writes[table]["broadcast_parquet"] == 0, (table, writes[table])
-    assert jobs <= 32, (jobs, executions)
+    assert jobs <= 26, (jobs, executions)
+
+    with open(record, "w") as f:
+        f.write(before)
+    # the same engine, so the once-per-engine fallback-bucket job is
+    # not counted again
+    eng.cfg = replace(cfg, visit_again=True)
+    stats = eng.run(max_epochs=1)
+    assert len(stats) == 1 and stats[0].epoch == 2 and stats[0].urls_due > 0
+    assert eng.epochs[-1][0] <= jobs, (eng.epochs[-1], jobs)

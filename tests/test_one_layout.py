@@ -9,11 +9,12 @@ import os
 import tempfile
 from dataclasses import replace
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from scrapetition_spark.config import CrawlConfig, Dispatcher
-from scrapetition_spark.crawl import CrawlEngine
+from scrapetition_spark.crawl import ENGINE_TABLES, CrawlEngine
 from scrapetition_spark.functions.urls import host_bucket, url_domain
 from scrapetition_spark.schemas import (
     COMMENTS,
@@ -24,7 +25,7 @@ from scrapetition_spark.schemas import (
     URLS_SEEN,
 )
 from scrapetition_spark.sources import fixtures
-from scrapetition_spark.sources.catalog import Catalog
+from scrapetition_spark.sources.catalog import PART, Catalog
 
 SEED = "https://www.zeit.de/politik/2020-01/art-a"
 SYNTH_DISPATCHERS = (
@@ -64,13 +65,13 @@ def test_epoch_reads_only_touched_buckets(spark, monkeypatch):
     _check_touched_reads(spark, monkeypatch, visit_again=False)
 
 
-def test_visit_again_epoch_reads_only_touched_buckets(spark, monkeypatch):
+def test_visit_again_reads_no_urls_seen_and_fetches_once_per_run(spark, monkeypatch):
     """The same crawl run under ``-a`` on a catalog that already holds
-    two epochs of fetched history. Its run-local seen check reads
-    urls_seen only through ``read_buckets``, over the host buckets of
-    the frontier (``in_frontier == 1``, fetched rows included). No URL
-    is fetched twice within the run, and the seeds, fetched before it,
-    are fetched again."""
+    two epochs of fetched history. Its run-local seen check is a
+    predicate on ``urls.last_epoch``: like the default twin, each
+    epoch reads only its touched buckets and never reads urls_seen.
+    No URL is fetched twice within the run, and the seeds, fetched
+    before it, are fetched again."""
     _check_touched_reads(spark, monkeypatch, visit_again=True)
 
 
@@ -87,13 +88,10 @@ def _check_touched_reads(spark, monkeypatch, visit_again: bool) -> None:
     cat = Catalog(spark, tempfile.mkdtemp(prefix="onelayout-"))
     CrawlEngine(spark, cat, cfg, docs).seed(seeds)
     _assert_bucketed(cat, cfg, ["urls"])
-    frontier_rows = F.col("in_frontier") == 1
     if visit_again:
         CrawlEngine(spark, cat, cfg, docs).run(max_epochs=2)  # the history
         history = cat.read("urls_seen", URLS_SEEN).count()
         cfg = replace(cfg, visit_again=True)
-    else:
-        frontier_rows &= F.col("first_seen").isNull()
     fallback = {r[0] % ncb for r in spark.range(1).select(
         host_bucket(F.lit("UNKOWN"), nhb)).collect()}
 
@@ -116,8 +114,6 @@ def _check_touched_reads(spark, monkeypatch, visit_again: bool) -> None:
         return read(self, table, schema, snapshot)
 
     def checked_run_epoch(eng, epoch):
-        frontier = _buckets(cat.read("urls", URLS).filter(frontier_rows),
-                            F.col("host"), nhb)
         reads.clear()
         whole.clear()
         recording[0] = True
@@ -140,10 +136,7 @@ def _check_touched_reads(spark, monkeypatch, visit_again: bool) -> None:
             "url_edges": due_cb,
             "urls": due_cb | disc_cb,
         }
-        if visit_again:
-            allowed["urls_seen"] = frontier
-        else:
-            assert "urls_seen" not in {t for t, _, _ in reads}
+        assert "urls_seen" not in {t for t, _, _ in reads}
         assert not set(whole) & {"comments", "url_edges", "urls_seen"}, whole
         by_table = {}
         for table, buckets, files in reads:
@@ -252,6 +245,66 @@ def test_older_layout_resumes_to_clean_crawl(spark):
     CrawlEngine(spark, old, cfg, docs).run()
     assert state(old) == state(clean)
     _assert_bucketed(old, cfg, CRAWL_STATE)
+
+
+@pytest.mark.parametrize("visit_again", [False, True], ids=["default", "visit_again"])
+def test_urls_without_last_epoch_resume(spark, visit_again):
+    """A mid-crawl catalog whose urls files hold the columns urls had
+    before ``last_epoch`` (a never-written ``depth`` in its place)
+    reads ``last_epoch`` as null under the declared schema. A default
+    run resumes to the clean crawl's urls_seen and urls; an ``-a`` run
+    takes every fetched URL as unfetched in this run, so it fetches
+    the seed again and no URL twice."""
+    docs = fixtures.documents_df(spark, fixtures.fixture_site()).localCheckpoint()
+    cfg = CrawlConfig("www.zeit.de", follow_links=True, politeness_sec=0,
+                      per_host_budget=4)
+    skip = ("first_seen", "last_seen", "first_scraped", "last_scraped", "last_epoch")
+
+    def crawl(cat, max_epochs=None, c=cfg):
+        eng = CrawlEngine(spark, cat, c, docs)
+        if not cat.exists("urls"):
+            eng.seed([SEED])
+        eng.run(max_epochs=max_epochs)
+
+    def rows(cat, table, schema):
+        df = cat.read(table, schema)
+        cols = [c for c in df.columns if c not in skip]
+        return {tuple(r) for r in df.select(*cols).collect()}
+
+    cat = Catalog(spark, tempfile.mkdtemp(prefix="onelayout-depth-"))
+    crawl(cat, max_epochs=2)
+    n_history = cat.read("urls_seen", URLS_SEEN).count()
+    n_epochs = cat.read("crawl_metrics", CRAWL_METRICS).count()
+    older = [F.lit(None).cast("int").alias("depth") if f.name == "last_epoch"
+             else F.col(f.name) for f in URLS.fields]
+    cat.overwrite_partitions(
+        "urls",
+        cat.read("urls", URLS).select(
+            *older, F.pmod("host_bucket", F.lit(cfg.n_commit_buckets)).alias(PART)),
+        PART, None,
+        {"n_commit_buckets": cfg.n_commit_buckets, "n_host_buckets": cfg.n_host_buckets},
+    )
+    cat.record_heads(ENGINE_TABLES)
+    stored = spark.read.parquet(*cat.read("urls", URLS).inputFiles()).columns
+    assert "depth" in stored and "last_epoch" not in stored, stored
+    assert cat.read("urls", URLS).filter(F.col("last_epoch").isNotNull()).count() == 0
+
+    if not visit_again:
+        crawl(cat)
+        clean = Catalog(spark, tempfile.mkdtemp(prefix="onelayout-depth-clean-"))
+        crawl(clean)
+        for table, schema in (("urls_seen", URLS_SEEN), ("urls", URLS)):
+            assert rows(cat, table, schema) == rows(clean, table, schema), table
+        # last_epoch of every URL fetched after the resume matches
+        last = {r["url"]: r["last_epoch"] for r in clean.read("urls", URLS).collect()}
+        resumed = cat.read("urls", URLS).filter(F.col("last_epoch").isNotNull()).collect()
+        assert resumed and all(last[r["url"]] == r["last_epoch"] for r in resumed)
+        return
+    crawl(cat, c=replace(cfg, visit_again=True))
+    seen = cat.read("urls_seen", URLS_SEEN)
+    run = [r["url"] for r in seen.filter(F.col("epoch") >= n_epochs).collect()]
+    assert len(run) == len(set(run)), "a URL fetched twice within the -a run"
+    assert seen.count() == n_history + len(run) and SEED in run
 
 
 def test_resumed_run_reads_no_urls_seen_before_its_first_epoch(spark, monkeypatch):
