@@ -120,17 +120,17 @@ class CrawlConfig:
     # benchmark's crawl workload still passes them. The next change to
     # the benchmark removes them.
     seen_bucket_min_bytes: int = 0
-    # The epoch's joins against due-set-derived frames (the due set,
-    # the fetched pages' urls, the item rows' fetch_seq lookup) get an
-    # explicit F.broadcast hint only while the due set's row count is
-    # at or below this; above it the join is left to the
-    # shuffle planner (AQE still broadcasts when the build side turns
-    # out cheap). The due set is per-host-budgeted but UNBOUNDED in
-    # host count, so an unconditional hint would force multi-GB
-    # broadcasts on a 10^8-host frontier and kill the epoch on
-    # driver/executor broadcast limits (VERDICT r03 #1). The default
-    # covers the measured-good 2.1M-row scaling run with headroom;
-    # 0 disables every hint (exercised by tests + the scaling A/B).
+    # The epoch's joins against due-set-derived frames (the fetch and
+    # its miss anti-join) get an explicit F.broadcast hint only while
+    # the due set's row count is at or below this; above it the join
+    # is left to the shuffle planner (AQE still broadcasts when the
+    # build side turns out cheap). The due set is per-host-budgeted
+    # but UNBOUNDED in host count, so an unconditional hint would
+    # force multi-GB broadcasts on a 10^8-host frontier and kill the
+    # epoch on driver/executor broadcast limits (VERDICT r03 #1). The
+    # default covers the measured-good 2.1M-row scaling run with
+    # headroom; 0 disables every hint (exercised by tests + the
+    # scaling A/B).
     broadcast_max_rows: int = 4_000_000
     # Snapshot retention per catalog table (≙ Iceberg
     # expire_snapshots): after each epoch keep only the newest N

@@ -46,6 +46,7 @@ import logging
 import time
 from collections import Counter
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -169,10 +170,12 @@ class CrawlEngine:
 
     def _fallback_bucket(self, fallback: str) -> int:
         """Commit bucket of a literal domain ``_domain_or`` stores for
-        an item whose page URL has no host. One tiny JVM job, once per
-        engine."""
+        an item whose page URL has no host. Computed once per engine,
+        on the driver: a projection over a local relation runs no Spark
+        job."""
         if self._fallback_buckets is None:
-            self._fallback_buckets = self.spark.range(1).select(*[
+            one = local_df(self.spark, [(0,)], "x int")
+            self._fallback_buckets = one.select(*[
                 self._commit_bucket(F.lit(d)).alias(d) for d in ("UNKOWN", "UNKNOWN")
             ]).first().asDict()
         return self._fallback_buckets[fallback]
@@ -377,9 +380,10 @@ class CrawlEngine:
         # ---- parse (C10): every extraction in one declarative plan.
         # comments feed four sinks (comments, contributors, votes,
         # articles-from-comments): materialize once, reuse (reuse=True).
+        # pages carry fetch_seq, so every item frame does too: no join
+        # back to the due set
         parsed = parse_pages(pages, reuse=True)
         mark("parse")
-        due_seq = due.select("url", "fetch_seq")
 
         # S2: sniffed charset (meta content-type span) wins over the
         # transport hint (Encoding.hs:16-41; stored by S9, URL.hs:18-25).
@@ -390,24 +394,20 @@ class CrawlEngine:
             F.coalesce(sniffed_charset(), "encoding").alias("encoding"),
         ).localCheckpoint()
 
-        def with_seq(df: DataFrame) -> DataFrame:
-            return df.join(hint(due_seq, n_due), ["url"], "inner")
-
         now = F.current_timestamp()
         dispatchers = cfg.dispatchers
-
-        def gate(df: DataFrame, kinds: dict[str, int]) -> DataFrame:
-            """Dispatcher regex gating (C8) + dispatcher_idx stamp."""
-            out = None
-            for kind, idx in kinds.items():
-                d = dispatchers[idx]
-                part = df.filter(F.col("url").rlike(d.url_scheme)).withColumn(
-                    "dispatcher_idx", F.lit(idx)
-                )
-                out = part if out is None else out.unionByName(part)
-            return out
-
         kind_idx = {d.item_kind: i for i, d in enumerate(dispatchers) if d.item_kind}
+
+        def gated(*frames: tuple[str, DataFrame]) -> DataFrame | None:
+            """Dispatcher regex gating (C8) + dispatcher_idx stamp of
+            each frame whose kind a dispatcher extracts, unioned; None
+            when no dispatcher extracts any of them."""
+            parts = [
+                df.filter(F.col("url").rlike(dispatchers[kind_idx[k]].url_scheme))
+                .withColumn("dispatcher_idx", F.lit(kind_idx[k]))
+                for k, df in frames if k in kind_idx
+            ]
+            return reduce(DataFrame.unionByName, parts) if parts else None
 
         # Touched commit buckets. An item row's page URL is due, so its
         # domain is a due host or the _domain_or literal; an edge's
@@ -428,88 +428,53 @@ class CrawlEngine:
         sink_tasks: list[tuple] = []
         # ---- item sinks (S8) — insertion order (fetch_seq,
         # dispatcher_idx, pos) ≙ the reference's sequential executeMany.
-        if "comment" in kind_idx:
-            comments = gate(with_seq(parsed.comments), {"comment": kind_idx["comment"]})
+        order = ["fetch_seq", "dispatcher_idx", "pos"]
+        stamp = [now.alias("first_scraped"), now.alias("last_scraped"),
+                 F.lit(cfg.scraper_name).alias("scraper"), *order]
+        comments = gated(("comment", parsed.comments))
+        if comments is not None:
             batch = comments.select(
                 "id",
                 _domain_or("UNKOWN").alias("domain"),
                 "text", "title", "user", "name", "date_informal", "date",
                 "parent", "thread", "up_votes", "down_votes", "article",
-                "url",
-                now.alias("first_scraped"), now.alias("last_scraped"),
-                F.lit(cfg.scraper_name).alias("scraper"),
-                "fetch_seq", "dispatcher_idx", "pos",
+                "url", *stamp,
             )
-            sink_tasks.append(
-                ("comments", batch, UNIQUE_KEYS["comments"], COMMENTS,
-                 ["fetch_seq", "dispatcher_idx", "pos"], *by_domain("UNKOWN"))
-            )
+            sink_tasks.append(("comments", batch, UNIQUE_KEYS["comments"], COMMENTS,
+                               order, *by_domain("UNKOWN")))
 
-        user_parts = []
-        if "user" in kind_idx:
-            user_parts.append(
-                gate(with_seq(parsed.users), {"user": kind_idx["user"]})
-            )
-        if "voter" in kind_idx:
-            user_parts.append(
-                gate(with_seq(parsed.voters), {"voter": kind_idx["voter"]})
-            )
-        if user_parts:
-            users = user_parts[0]
-            for p in user_parts[1:]:
-                users = users.unionByName(p)
+        users = gated(("user", parsed.users), ("voter", parsed.voters))
+        if users is not None:
             batch = users.select(
-                "user",
-                _domain_or("UNKNOWN").alias("domain"),
-                "name", "url",
-                now.alias("first_scraped"), now.alias("last_scraped"),
-                F.lit(cfg.scraper_name).alias("scraper"),
-                "fetch_seq", "dispatcher_idx", "pos",
+                "user", _domain_or("UNKNOWN").alias("domain"), "name", "url", *stamp
             )
-            sink_tasks.append(
-                ("users", batch, UNIQUE_KEYS["users"], USERS,
-                 ["fetch_seq", "dispatcher_idx", "pos"], *by_domain("UNKNOWN"))
-            )
+            sink_tasks.append(("users", batch, UNIQUE_KEYS["users"], USERS,
+                               order, *by_domain("UNKNOWN")))
 
-        if "vote" in kind_idx:
-            votes = gate(with_seq(parsed.votes), {"vote": kind_idx["vote"]})
+        votes = gated(("vote", parsed.votes))
+        if votes is not None:
             batch = votes.select(
                 _domain_or("UNKOWN").alias("domain"),
-                "user", "comment", "vote", "url",
-                now.alias("first_scraped"), now.alias("last_scraped"),
-                F.lit(cfg.scraper_name).alias("scraper"),
-                "fetch_seq", "dispatcher_idx", "pos",
+                "user", "comment", "vote", "url", *stamp,
             )
-            sink_tasks.append(
-                ("votes", batch, UNIQUE_KEYS["votes"], VOTES,
-                 ["fetch_seq", "dispatcher_idx", "pos"], *by_domain("UNKOWN"))
-            )
+            sink_tasks.append(("votes", batch, UNIQUE_KEYS["votes"], VOTES,
+                               order, *by_domain("UNKOWN")))
 
-        article_parts = []
-        for kind, frame in (
+        arts = gated(
             ("article", parsed.articles),
             ("article_from_comment", parsed.articles_from_comments),
             ("article_searched", parsed.articles_searched),
-        ):
-            if kind in kind_idx:
-                article_parts.append(gate(with_seq(frame), {kind: kind_idx[kind]}))
-        if article_parts:
-            arts = article_parts[0]
-            for p in article_parts[1:]:
-                arts = arts.unionByName(p)
+        )
+        if arts is not None:
             batch = arts.select(
                 "canonical",
                 _domain_or("UNKNOWN").alias("domain"),
-                "title", "description", "author", "date", "url",
-                now.alias("first_scraped"), now.alias("last_scraped"),
-                F.lit(cfg.scraper_name).alias("scraper"),
-                "fetch_seq", "dispatcher_idx", "pos",
+                "title", "description", "author", "date", "url", *stamp,
             )
             # keyed by canonical alone: bucketed by canonical's host,
             # which the epoch does not know, so the MERGE collects it
             sink_tasks.append(
-                ("articles", batch, UNIQUE_KEYS["articles"], ARTICLES,
-                 ["fetch_seq", "dispatcher_idx", "pos"],
+                ("articles", batch, UNIQUE_KEYS["articles"], ARTICLES, order,
                  self._commit_bucket(url_domain(F.col("canonical"))), None)
             )
 

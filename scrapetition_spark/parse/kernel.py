@@ -47,7 +47,8 @@ DATETIME_FMT = "yyyy-MM-dd'T'HH:mm:ssXXX"
 
 def explode_spans(pages: DataFrame, with_groups: bool = False) -> DataFrame:
     """documents(url, spans, status, ...) → long frame
-    (url, kind, text, media_ref, offset, role, payload[, cseq, tseq]).
+    (url[, fetch_seq], kind, text, media_ref, offset, role, payload[,
+    cseq, tseq]); ``fetch_seq`` passes through when the pages have it.
 
     Pages with status >= 400 have no body (App.hs:119-121) and are
     dropped before the explode. Spans are processed strictly in
@@ -91,9 +92,11 @@ def explode_spans(pages: DataFrame, with_groups: bool = False) -> DataFrame:
     else:
         spans = F.col("spans")
 
-    s = pages.select(F.col("doc_id").alias("url"), F.explode(spans).alias("s"))
+    seq = _seq_cols(pages)
+    s = pages.select(F.col("doc_id").alias("url"), *seq, F.explode(spans).alias("s"))
     cols = [
         "url",
+        *seq,
         F.col("s.kind").alias("kind"),
         F.col("s.text").alias("text"),
         F.col("s.media_ref").alias("media_ref"),
@@ -107,6 +110,12 @@ def explode_spans(pages: DataFrame, with_groups: bool = False) -> DataFrame:
         f"substring(text, length(substring_index(text, '{SP.SEP}', 1)) + 2)"
     )
     return s.withColumn("role", role).withColumn("payload", payload)
+
+
+def _seq_cols(pages: DataFrame) -> list[str]:
+    """``["fetch_seq"]`` when the pages carry their fetch order, else
+    ``[]``: every frame derived from the pages passes it through."""
+    return ["fetch_seq"] if "fetch_seq" in pages.columns else []
 
 
 def _grp(role: str, col: str = "payload") -> F.Column:
@@ -137,7 +146,10 @@ def _collector_target(role: F.Column, m: F.Column) -> F.Column:
 
 @dataclass
 class ParseResult:
-    """Per-kind item frames, all carrying (url, pos) document order."""
+    """Per-kind item frames, all carrying (url, pos) document order.
+    When the parsed pages have a ``fetch_seq`` column (the crawl's
+    fetch order), every item frame carries its page's value, so the
+    crawl needs no join back to its due set; ``urls`` never does."""
 
     comments: DataFrame
     users: DataFrame  # contributors derived from comments (P3)
@@ -204,8 +216,10 @@ def _comment_groups_map_side(pages: DataFrame) -> DataFrame:
             cseq.alias("cseq"),
         )
 
+    seq = _seq_cols(pages)
     base = pages.select(
         F.col("doc_id").alias("url"),
+        *seq,
         F.transform("spans", enrich).alias("__esp"),
     )
     n_c = F.size(F.filter("__esp", lambda s: s["role"] == SP.ROLE_COMMENT))
@@ -236,7 +250,9 @@ def _comment_groups_map_side(pages: DataFrame) -> DataFrame:
     # entry, dropped by the id/body requirement below (sequence(1,0)
     # would generate a DESCENDING range — never do that)
     carr = F.transform(F.sequence(F.lit(1), F.greatest(n_c, F.lit(1))), mk_comment)
-    c = base.select("url", F.explode(carr).alias("__c")).select("url", "__c.*")
+    c = base.select("url", *seq, F.explode(carr).alias("__c")).select(
+        "url", *seq, "__c.*"
+    )
     return c
 
 
@@ -255,6 +271,8 @@ def parse_pages(pages: DataFrame, reuse: bool = False) -> ParseResult:
     # is evaluated unless teasers/articles are actually consumed.
     s = explode_spans(pages, with_groups=True)
     sp = explode_spans(pages)
+    # the page key of every item frame: url, and fetch_seq if present
+    page = ["url", *_seq_cols(pages)]
 
     # ---- comments (P2; ZeitDe.hs:125-172) --------------------------------
     c = _comment_groups_map_side(pages)
@@ -289,7 +307,7 @@ def parse_pages(pages: DataFrame, reuse: bool = False) -> ParseResult:
         # scalpel requires body + id for the comment to parse at all
         c.filter(F.col("id").isNotNull() & F.col("body").isNotNull())
         .select(
-            "url",
+            *page,
             "pos",
             F.col("id"),
             F.trim("body").alias("text"),  # T.strip innerHTML (ZeitDe.hs:135)
@@ -316,23 +334,23 @@ def parse_pages(pages: DataFrame, reuse: bool = False) -> ParseResult:
 
     # ---- users = contributors (P3; User.hs:57-61): user id required ----
     users = comments.filter(F.col("user").isNotNull()).select(
-        "url", "pos", F.col("user"), F.col("name")
+        *page, "pos", F.col("user"), F.col("name")
     )
 
     # ---- votes / voters (P7/P8; ZeitDe.hs:245-285): explode data-fans --
     fan = F.explode(F.split("fans", ","))
     fans_base = comments.filter(F.col("fans").isNotNull()).select(
-        "url", "pos", F.col("id").alias("comment"), fan.alias("user")
+        *page, "pos", F.col("id").alias("comment"), fan.alias("user")
     )
     votes = fans_base.select(
-        "url", "pos", "user", "comment", F.lit(1).alias("vote")  # ZeitDe.hs:259
+        *page, "pos", "user", "comment", F.lit(1).alias("vote")  # ZeitDe.hs:259
     )
     voters = fans_base.select(
-        "url", "pos", "user", F.lit(None).cast("string").alias("name")
+        *page, "pos", "user", F.lit(None).cast("string").alias("name")
     )
 
     # ---- articles from page head (P4; ZeitDe.hs:191-214) ---------------
-    a = sp.groupBy("url").agg(
+    a = sp.groupBy(*page).agg(
         _grp(SP.ROLE_CANONICAL, "media_ref").alias("canonical"),
         _grp(SP.ROLE_TITLE).alias("title_raw"),
         _grp(SP.ROLE_DESCRIPTION).alias("description"),
@@ -346,7 +364,7 @@ def parse_pages(pages: DataFrame, reuse: bool = False) -> ParseResult:
             & F.col("title_raw").isNotNull()
             & F.col("date_raw").isNotNull()
         ).select(
-            "url",
+            *page,
             F.lit(0).alias("pos"),
             "canonical",
             # strip . takeWhile (/='|')  (ZeitDe.hs:201)
@@ -360,7 +378,7 @@ def parse_pages(pages: DataFrame, reuse: bool = False) -> ParseResult:
     # ---- search teasers (P5; ZeitDe.hs:217-242) -------------------------
     t = (
         s.filter(F.col("tseq") > 0)
-        .groupBy("url", "tseq")
+        .groupBy(*page, "tseq")
         .agg(
             F.min("offset").alias("pos"),
             _grp(SP.ROLE_TEASER_LINK, "media_ref").alias("canonical"),
@@ -376,7 +394,7 @@ def parse_pages(pages: DataFrame, reuse: bool = False) -> ParseResult:
             & F.col("title_raw").isNotNull()
             & F.col("datetime_raw").isNotNull()
         ).select(
-            "url",
+            *page,
             "pos",
             "canonical",
             F.trim("title_raw").alias("title"),
@@ -394,10 +412,10 @@ def parse_pages(pages: DataFrame, reuse: bool = False) -> ParseResult:
     # nub keeps first occurrence: min(pos) per canonical per page.
     articles_from_comments = (
         comments.filter(F.col("article").isNotNull())
-        .groupBy("url", F.col("article").alias("canonical"))
+        .groupBy(*page, F.col("article").alias("canonical"))
         .agg(F.min("pos").alias("pos"))
         .select(
-            "url",
+            *page,
             "pos",
             "canonical",
             F.lit(None).cast("string").alias("title"),
@@ -460,8 +478,8 @@ def discover_urls(
     the due set to recover it — or None if no dispatcher collects URLs.
     """
     parts: list[DataFrame] = []
-    has_seq = "fetch_seq" in pages.columns
-    cols = ["url", "fetch_seq", "spans"] if has_seq else ["url", "spans"]
+    seq = _seq_cols(pages)
+    cols = ["url", *seq, "spans"]
     base = pages.select(*cols)
     if "status" in pages.columns:
         base = pages.filter(
@@ -508,7 +526,7 @@ def discover_urls(
         to_cand = make_to_cand(rank_of)
 
         pg = base.filter(F.col("url").rlike(scheme)).select(
-            *(["url", "fetch_seq"] if has_seq else ["url"]),
+            "url", *seq,
             F.array_sort(
                 F.transform(F.filter("spans", keep), to_cand)
             ).alias("__cand"),
@@ -525,16 +543,12 @@ def discover_urls(
         resolved = F.transform(
             "__cand", lambda x: url_resolve_native(F.col("url"), x["target"])
         )
-        seq_out = (
-            [F.col("fetch_seq").alias("source_fetch_seq")] if has_seq else []
-        )
         parts.append(
             pg.select(
-                *(["url", "fetch_seq"] if has_seq else ["url"]),
-                F.posexplode(F.array_distinct(resolved)),
+                "url", *seq, F.posexplode(F.array_distinct(resolved)),
             ).select(
                 F.col("url").alias("source"),
-                *seq_out,
+                *[F.col(c).alias("source_fetch_seq") for c in seq],
                 F.lit(idx).alias("dispatcher_idx"),
                 F.col("pos").cast("int").alias("pos"),
                 F.col("col").alias("target"),

@@ -32,9 +32,12 @@ parquet + JSON manifests:
   the buckets the batch touches and groups by (bucket, key) after one
   hash partitioning by bucket, which the partitioned write reuses —
   per-epoch MERGE cost is O(touched buckets), not O(table), in one
-  shuffle. The crawl engine's ``urls`` commit (S6 inserts, S9
-  seen-date upsert, C3 adoption) is the same resolve with its own
-  aggregates.
+  shuffle. That shuffle is sized by AQE: its empty reduce partitions
+  are coalesced away (``get_spark`` turns coalescing on), so a write
+  runs about as many tasks as its data needs, and each bucket, hashed
+  to one reduce partition, is still one file. The crawl engine's
+  ``urls`` commit (S6 inserts, S9 seen-date upsert, C3 adoption) is
+  the same resolve with its own aggregates.
 
 Every call site is written against this interface so swapping in a
 real Iceberg catalog is a one-class change.
@@ -54,11 +57,11 @@ from pyspark.sql.types import StructType
 
 from scrapetition_spark.session import local_df
 
-# Small-file control: each commit coalesces to at most this many files
-# (a partitioned commit: one file per bucket, over twice as many write
-# tasks). Same role as Iceberg's write.target-file-size bin-packing —
-# without it every commit emits shuffle-partition-count tiny files,
-# which bloats the manifest and serializes on filesystem contention
+# Small-file control: each plain (unbucketed) commit coalesces to at
+# most this many files; a bucketed commit writes one file per bucket.
+# Same role as Iceberg's write.target-file-size bin-packing — without
+# it every commit emits shuffle-partition-count tiny files, which
+# bloats the manifest and serializes on filesystem contention
 # (measured: a 64-file parquet write is 2.7× slower than 8-file at 32
 # local threads).
 WRITE_PARTITIONS = 8
@@ -73,14 +76,15 @@ def grouped_resolve(rows: DataFrame, keys: list[str], *aggs: Column) -> DataFram
     group folded by ``aggs`` (existing wins as ``max`` over an
     existing tag, first occurrence as ``min_by(row, order)``). Rows
     carrying the bucket column ``PART`` are hash-partitioned by it
-    once, at the partitioned writer's partition count, and grouped by
-    (bucket, key): that partitioning meets the aggregate's clustering
-    and the write's, so a MERGE and its write run one shuffle, with
-    no join and no broadcast. The write must be handed ``PART``
-    itself: a recomputed bucket is a new attribute and is shuffled
-    again."""
+    once, exactly as ``Catalog._write_partitioned`` asks (by column,
+    no count: ``spark.sql.shuffle.partitions``, coalesced by AQE to
+    what the data fills), and grouped by (bucket, key): that
+    partitioning meets the aggregate's clustering and the write's, so
+    a MERGE and its write run one shuffle, with no join and no
+    broadcast. The write must be handed ``PART`` itself: a recomputed
+    bucket is a new attribute and is shuffled again."""
     if PART in rows.columns:
-        rows = rows.repartition(2 * WRITE_PARTITIONS, F.col(PART))
+        rows = rows.repartition(F.col(PART))
         keys = [PART, *keys]
     return rows.groupBy(*keys).agg(*aggs)
 
@@ -298,7 +302,10 @@ class Catalog:
     ) -> tuple[str, set[str]]:
         """Write ``df`` into one new data dir holding a ``__part=<k>``
         subdir per bucket ``k`` it has rows in; returns the dir and
-        those buckets. A write without rows leaves no dir behind."""
+        those buckets. A write without rows leaves no dir behind. The
+        write shuffles by bucket with no partition count, so AQE
+        coalesces the reduce partitions no bucket hashes to, and the
+        write runs the tasks its buckets need, not a fixed number."""
         part = f"part-{uuid.uuid4().hex[:12]}"
         out = os.path.join(self._tdir(table), "data", part)
         # a frame that already carries PART (a grouped resolve's
@@ -314,7 +321,7 @@ class Catalog:
         # files, so a derived bucket expression never pollutes the
         # table schema
         (
-            df.repartition(2 * WRITE_PARTITIONS, F.col(PART))
+            df.repartition(F.col(PART))
             .write.partitionBy(PART)
             .mode("overwrite")
             .parquet(out)
@@ -398,12 +405,15 @@ class Catalog:
             prev.spec if bucket_spec is None else bucket_spec,
         )
 
-    def compact_buckets(self, table: str, max_files: int = 16) -> int | None:
+    def compact_buckets(
+        self, table: str, schema: StructType, max_files: int = 16
+    ) -> int | None:
         """Fold any bucket whose member-dir list exceeds ``max_files``
         into one dir (small-file control for long append chains; ≙
         Iceberg rewrite_data_files scoped to hot partitions). Reads
-        ONLY the overfull buckets. Returns the new snapshot id, or
-        None if nothing needed compaction."""
+        ONLY the overfull buckets, under ``schema``, so no read plans
+        a footer-inference job. Returns the new snapshot id, or None
+        if nothing needed compaction."""
         snap = self._head_snapshot(table)
         over = {k: v for k, v in snap.parts.items() if len(v) > max_files}
         if not over:
@@ -413,9 +423,8 @@ class Catalog:
             out = os.path.join(
                 self._tdir(table), "data", f"part-{uuid.uuid4().hex[:12]}"
             )
-            self.spark.read.parquet(*paths).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(out)
+            rows = self.spark.read.schema(schema).parquet(*paths)
+            rows.coalesce(1).write.mode("overwrite").parquet(out)
             parts[k] = [out]
         return self._commit(table, snap.files, parts, snap.sizes, snap.spec)
 
@@ -500,7 +509,7 @@ class Catalog:
             # written footers, so the resolve executes exactly once.
             return self.append_skip_empty(table, fresh)
         sid = self.append_partitions(table, fresh, PART, bucket_spec)
-        return self.compact_buckets(table) or sid
+        return self.compact_buckets(table, schema) or sid
 
     def append_bucketed(
         self,
@@ -518,7 +527,7 @@ class Catalog:
         into this one."""
         if self.prunable_buckets(table, bucket_spec):
             sid = self.append_partitions(table, df, bucket_expr, bucket_spec)
-            return self.compact_buckets(table) or sid
+            return self.compact_buckets(table, df.schema) or sid
         merged = self.read(table, df.schema).unionByName(df)
         return self.overwrite_partitions(table, merged, bucket_expr, None, bucket_spec)
 

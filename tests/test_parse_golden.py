@@ -5,6 +5,7 @@ rendering of test/examples/zeit.de.article.html (FIXTURES.md §2)."""
 from __future__ import annotations
 
 import datetime as dt
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +16,7 @@ from scrapetition_spark.sources.fixtures import (
     GOLDEN_ARTICLE,
     GOLDEN_URL,
     documents_df,
+    fixture_site,
     golden_page,
 )
 
@@ -168,3 +170,23 @@ def test_span_sequence_invariant(spark, parsed):
         .collect()
     )
     assert [tuple(r) for r in back] == [tuple(s) for s in spans]
+
+
+def test_item_frames_carry_their_page_fetch_seq(spark):
+    """Pages with a ``fetch_seq`` column: every item frame carries its
+    page's value and otherwise equals the parse of the same pages
+    without one, in which no frame has the column."""
+    pages = documents_df(spark, fixture_site())
+    plain = parse_pages(pages)
+    seq = parse_pages(pages.withColumn("fetch_seq", F.xxhash64("doc_id")))
+    for name in ("comments", "users", "voters", "votes", "articles",
+                 "articles_searched", "articles_from_comments"):
+        without, with_seq = getattr(plain, name), getattr(seq, name)
+        assert "fetch_seq" not in without.columns, name
+        rows = with_seq.select(
+            (F.col("fetch_seq") == F.xxhash64("url")).alias("ok"), *without.columns
+        ).collect()
+        assert rows and all(r["ok"] for r in rows), name
+        assert Counter(tuple(r)[1:] for r in rows) == Counter(
+            tuple(r) for r in without.collect()
+        ), name
